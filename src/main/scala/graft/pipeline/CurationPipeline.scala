@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -42,11 +44,12 @@ object CurationPipeline {
 
   /** Run the curation DAG. Only `maxRetries` and `stageInterceptor` (the
     * fault-injection seam) are read from the config — the stage set is
-    * fixed, unlike the flag-gated export DAG. */
+    * fixed, unlike the flag-gated export DAG. The stages form a chain, so
+    * [[StageRunner]] runs them one at a time, in declaration order. */
   def run(spark: SparkSession, cfg: PipelineConfig, dir: String,
           outDir: String): PipelineResult = {
     val runner = new StageRunner(cfg.maxRetries)
-    var out = Map.empty[String, DataFrame]
+    val out = TrieMap.empty[String, DataFrame]
 
     def finish(name: String, df: DataFrame): DataFrame = {
       val staged = cfg.stageInterceptor(name, df)
@@ -54,56 +57,53 @@ object CurationPipeline {
       // read back with the explicit schema: an empty survivor set writes no
       // data files and schema inference over zero files fails
       val back = spark.read.schema(staged.schema).parquet(s"$outDir/$name")
-      out += name -> back
+      out(name) = back
       back
     }
 
     val tk = split(col("text"), " ")
     // stage 1: quality gate (token count + unique-token ratio)
-    val quality = runner.stage("quality", Nil) {
+    runner.stage("quality")(_ =>
       finish("quality", t(spark, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"),
           size(tk).cast(LongType).as("n_tokens"),
           (size(array_distinct(tk)).cast(DoubleType) / size(tk)).as("uniq_ratio"))
-        .filter(col("n_tokens") >= 5 && col("uniq_ratio") >= 0.3))
-    }
+        .filter(col("n_tokens") >= 5 && col("uniq_ratio") >= 0.3)))
     // stage 2: Gopher-style repetition filter on the staged survivors
-    val repetition = runner.stage("repetition", Seq("quality")) {
-      finish("repetition", quality.get.join(
+    runner.stage("repetition", "quality")(up =>
+      finish("repetition", up("quality").join(
         TextOps.textRepetitionFilter(spark, dir)
           .filter(col("keep") === 1L).select("doc_id"),
-        Seq("doc_id"), "left_semi"))
-    }
+        Seq("doc_id"), "left_semi")))
     // stage 3: benchmark decontamination (full-corpus contamination ids)
-    val decontaminated = runner.stage("decontaminate", Seq("repetition")) {
-      finish("decontaminate", repetition.get.join(
+    runner.stage("decontaminate", "repetition")(up =>
+      finish("decontaminate", up("repetition").join(
         Dedup.dedupDecontaminate(spark, dir).select("doc_id"),
-        Seq("doc_id"), "left_semi"))
-    }
+        Seq("doc_id"), "left_semi")))
     // stage 4: near-dup cluster dedup — clusters computed on the FULL
     // corpus, survivors keep only their cluster's canonical
-    val nearDup = runner.stage("near_dup", Seq("decontaminate")) {
-      finish("near_dup", decontaminated.get
+    runner.stage("near_dup", "decontaminate")(up =>
+      finish("near_dup", up("decontaminate")
         .join(Dedup.dedupClusters(spark, dir).filter(col("is_canonical")), "doc_id")
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("uniq_ratio"),
-          col("cluster_size")))
-    }
+          col("cluster_size"))))
     // stage 5: substring-span cut applied to the survivors (spans detected
     // corpus-wide); output schema == llmCorpusPipeline's
-    runner.stage("substring_cut", Seq("near_dup")) {
+    runner.stage("substring_cut", "near_dup") { up =>
       val cut = Dedup.dedupSubstringCut(spark, dir)
         .select(col("doc_id"), col("text_cut"), col("tokens_removed").as("tokens_cut"))
-      finish("substring_cut", nearDup.get
+      finish("substring_cut", up("near_dup")
         .join(cut, Seq("doc_id"), "left")
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("uniq_ratio"),
           col("cluster_size"),
           coalesce(col("tokens_cut"), lit(0L)).as("tokens_cut"),
           (col("n_tokens") - coalesce(col("tokens_cut"), lit(0L))).as("n_tokens_final"),
           coalesce(col("text_cut"), lit("")).as("text_cut")))
-    }: Unit
+    }
 
-    PipelineResult(out, runner.statuses)
+    val stages = runner.run() // before out.toMap: the stages fill `out`
+    PipelineResult(out.toMap, stages)
   }
 
   /** `llm_corpus_pipeline_staged` — the staged DAG as a query key: run the

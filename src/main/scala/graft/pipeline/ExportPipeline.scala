@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,11 +16,17 @@ import graft.etl.EtlOps
   * `config.py:18-22` decide which stages exist, and
   * `export_pipeline_template.py:144-181` wires stage k's output file into
   * stage k+1 (txs→hashes→receipts, receipts→contract_address→contracts,
-  * transfers→distinct token_address→tokens). Here the same topology is a
-  * DataFrame lineage graph: "staging files" become plans, the fan-out key
-  * extractions become left-semi joins, and the scheduler's DAG falls out of
-  * lineage. One Spark job replaces 131 x 5 shell activities; the partition
-  * loop (config.py:10-14) becomes a partitioned write.
+  * transfers→distinct token_address→tokens). Here each activity is a stage
+  * of [[StageRunner]], scheduled the same way: a stage starts as soon as
+  * every stage in its `dependsOn` has succeeded, so the three branches —
+  * blocks; transactions → {receipts → contracts, logs}; token_transfers →
+  * tokens — run concurrently. The staged file is the upstream's Parquet
+  * lake: a downstream stage keys from what its upstream wrote, never from
+  * the upstream's raw CSV, and the fan-out key extractions become joins
+  * against it. Each stage runs two SQL executions, the DropNullFields
+  * census and the partitioned write, so an export is 14 of them and reads
+  * each raw CSV twice; the partition loop (config.py:10-14) becomes the
+  * partitioned write.
   */
 final case class PipelineConfig(
     exportBlocks: Boolean = true,
@@ -41,7 +50,9 @@ final case class PipelineConfig(
     // Fault-injection seam for retry/cascade tests: applied to each stage's
     // cleaned frame just before its write. Production default is identity;
     // a test hook can throw on the first N invocations of a chosen stage to
-    // exercise the retry loop deterministically.
+    // exercise the retry loop deterministically. Independent stages run on
+    // their own threads, so it can be called concurrently: a stateful hook
+    // must be thread-safe.
     stageInterceptor: (String, DataFrame) => DataFrame = (_, df) => df)
 
 /** Terminal state of one pipeline stage, mirroring AWS Data Pipeline's
@@ -86,39 +97,81 @@ final case class PipelineResult(
   * `1 + maxRetries` times; once a stage exhausts its budget every
   * transitive dependent is CascadeFailed WITHOUT running (its body is never
   * evaluated, so no partial output is written for a stage whose input is
-  * bad). Stages record into an insertion-ordered status map surfaced via
-  * [[PipelineResult.deadLetter]]. */
+  * bad). Statuses come back in declaration order and are surfaced via
+  * [[PipelineResult.deadLetter]].
+  *
+  * Stages are declared with [[stage]] (upstreams first, so the graph is
+  * acyclic) and executed by [[run]], which schedules them as Data Pipeline
+  * schedules activities on `dependsOn`: every stage gets its own thread,
+  * which waits for its upstreams and starts its body as soon as all of them
+  * have succeeded. Independent branches therefore overlap, at most as many
+  * at a time as the DAG is wide, and Spark's scheduler shares the cores
+  * among their jobs. A body receives its upstreams' outputs by name. A
+  * Throwable that is not an Exception is not retried: its stage's
+  * dependents do not run, and [[run]] rethrows it once every stage thread
+  * has ended. */
 private[pipeline] final class StageRunner(maxRetries: Int) {
-  private val status = scala.collection.mutable.LinkedHashMap[String, StageStatus]()
+  private final class Stage(val name: String, val upstreams: Seq[Stage],
+                            val body: Map[String, DataFrame] => DataFrame) {
+    var thread: Thread = _
+    // written by the stage's own thread; read by others only after join()
+    var status = Option.empty[StageStatus]
+    var output = Option.empty[DataFrame]
+    var fatal = Option.empty[Throwable]
+  }
+  private val stages = scala.collection.mutable.ArrayBuffer[Stage]()
 
-  def stage(name: String, upstreams: Seq[String])(body: => DataFrame): Option[DataFrame] =
-    upstreams.find(u => status.get(u).exists {
-      case StageStatus.Succeeded(_) => false
-      case _                        => true
-    }) match {
-      case Some(bad) =>
-        status(name) = StageStatus.CascadeFailed(bad)
-        None
-      case None =>
-        var attempts = 0
-        var result = Option.empty[DataFrame]
-        var lastErr = ""
-        while (result.isEmpty && attempts <= maxRetries) {
-          attempts += 1
-          try result = Some(body)
-          catch {
-            case e: Exception =>
-              lastErr = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-          }
-        }
-        status(name) = result match {
-          case Some(_) => StageStatus.Succeeded(attempts)
-          case None    => StageStatus.Failed(attempts, lastErr)
-        }
-        result
+  def stage(name: String, upstreams: String*)(body: Map[String, DataFrame] => DataFrame): Unit =
+    stages += new Stage(name, upstreams.map(u => stages.find(_.name == u).getOrElse(
+      throw new IllegalArgumentException(s"stage '$name': upstream '$u' is not declared"))), body)
+
+  /** Run every declared stage and return when all have ended. If the
+    * caller is interrupted meanwhile, the interrupt is passed on to every
+    * stage thread, and rethrown once they have all ended. */
+  def run(): Map[String, StageStatus] = {
+    // Constructed on the calling thread, so each stage thread inherits the
+    // caller's Spark local properties (job group, scheduler pool, ...),
+    // which Spark then copies onto every job the stage submits.
+    stages.foreach(s => s.thread = new Thread(() => execute(s), s"pipeline-stage-${s.name}"))
+    stages.foreach(_.thread.start())
+    try stages.foreach(_.thread.join())
+    catch {
+      case e: InterruptedException =>
+        stages.foreach(_.thread.interrupt())
+        stages.foreach(_.thread.join())
+        throw e
     }
+    stages.flatMap(_.fatal).headOption.foreach(throw _)
+    ListMap(stages.toSeq.map(s => s.name -> s.status.get): _*)
+  }
 
-  def statuses: Map[String, StageStatus] = status.toMap
+  private def execute(s: Stage): Unit = try {
+    s.upstreams.foreach(_.thread.join())
+    // an upstream without a status ended on a Throwable that is not an
+    // Exception, or skipped because one of its own did: run() rethrows it
+    if (s.upstreams.forall(_.status.isDefined))
+      s.upstreams.find(!_.status.get.isInstanceOf[StageStatus.Succeeded]) match {
+        case Some(bad) => s.status = Some(StageStatus.CascadeFailed(bad.name))
+        case None      => attempt(s, s.upstreams.map(u => u.name -> u.output.get).toMap)
+      }
+  } catch {
+    case t: Throwable => s.fatal = Some(t)
+  }
+
+  private def attempt(s: Stage, inputs: Map[String, DataFrame]): Unit = {
+    var attempts = 0
+    var lastErr = ""
+    while (s.output.isEmpty && attempts <= maxRetries) {
+      attempts += 1
+      try s.output = Some(s.body(inputs))
+      catch {
+        case e: Exception =>
+          lastErr = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+      }
+    }
+    s.status = Some(if (s.output.isDefined) StageStatus.Succeeded(attempts)
+      else StageStatus.Failed(attempts, lastErr))
+  }
 }
 
 object ExportPipeline {
@@ -163,12 +216,12 @@ object ExportPipeline {
   private def dec38 = DecimalType(38, 0)
 
   /** Run the configured stages: ingest raw CSVs from `rawDir`, apply the
-    * Glue-job transforms (ApplyMapping casts → DropNullFields), wire the
-    * staged fan-out dependencies as semi-joins, write each entity as
-    * zero-padded block-range-partitioned Parquet under `outDir`, and return
+    * Glue-job transforms (ApplyMapping casts → DropNullFields), write each
+    * entity as zero-padded block-range-partitioned Parquet under `outDir`,
+    * key each downstream stage from the lake its upstream wrote, and return
     * the final DataFrames keyed by table name. */
   def run(spark: SparkSession, cfg: PipelineConfig, rawDir: String, outDir: String): PipelineResult = {
-    var out = Map.empty[String, DataFrame]
+    val out = TrieMap.empty[String, DataFrame]
     val runner = new StageRunner(cfg.maxRetries)
     val bucket = (c: String) => (col(c) / cfg.batchSize).cast(LongType) * cfg.batchSize
     val bounds = (c: String) => cfg.partitionBounds match {
@@ -176,78 +229,66 @@ object ExportPipeline {
       case None    => (bucket(c), bucket(c) + (cfg.batchSize - 1))
     }
 
+    // Writes the stage's lake and returns it read back for its dependents.
+    // Both reads name their schema: an empty batch writes no files, and
+    // schema inference over zero parquet files fails. The dependents' read
+    // uses the PRE-DropNullFields schema, so a column that is null in every
+    // row of this batch reads back as null instead of vanishing — an
+    // all-null contract_address batch must not erase a fan-out join column.
     def finish(name: String, df: DataFrame, blockCol: String): DataFrame = {
       val cleaned = cfg.stageInterceptor(name, EtlOps.dropNullFields(df))
       val (startB, endB) = bounds(blockCol)
-      EtlOps.writePartitioned(cleaned, s"$outDir/$name", "parquet", startB, endB)
-      // read back with the explicit schema: an empty batch writes no files,
-      // and schema inference over zero parquet files fails
-      val readBack = EtlOps.readPartitioned(spark, s"$outDir/$name", "parquet", cleaned.schema)
-      out += name -> readBack
-      cleaned
+      val path = s"$outDir/$name"
+      EtlOps.writePartitioned(cleaned, path, "parquet", startB, endB)
+      out(name) = EtlOps.readPartitioned(spark, path, "parquet", cleaned.schema)
+      EtlOps.readPartitioned(spark, path, "parquet", df.schema)
     }
 
-    // Retry/cascade execution lives in [[StageRunner]] (shared with the
-    // curation DAG). Config-disabled stages get no status row, matching the
-    // reference template where disabled activities aren't in the DAG at all.
-    def stage(name: String, upstreams: Seq[String])(body: => DataFrame): Option[DataFrame] =
-      runner.stage(name, upstreams)(body)
-
+    // Config-disabled stages are not declared and get no status row,
+    // matching the reference template where disabled activities aren't in
+    // the DAG at all.
     // stage 1: blocks + transactions (config.py:35-38)
     if (cfg.exportBlocks)
-      stage("blocks", Nil)(
+      runner.stage("blocks")(_ =>
         finish("blocks", EtlOps.applyMapping(csv(spark, rawDir, "blocks", blocksCsv), Seq(
           ("number", "number", lng), ("hash", "hash", str), ("parent_hash", "parent_hash", str),
           ("nonce", "nonce", str), ("miner", "miner", str),
           ("difficulty", "difficulty", dec38), ("total_difficulty", "total_difficulty", dec38),
           ("size", "size", lng), ("gas_limit", "gas_limit", lng), ("gas_used", "gas_used", lng),
           ("timestamp", "timestamp", lng), ("transaction_count", "transaction_count", lng),
-          ("all_null_col", "all_null_col", str))), "number")): Unit
+          ("all_null_col", "all_null_col", str))), "number"))
 
-    // the PRE-DropNullFields frame is what downstream stages key from —
-    // an all-null column in one batch must not erase a fan-out join column
-    val transactions =
-      if (cfg.exportTransactions)
-        stage("transactions", Nil) {
-          val mapped = EtlOps.applyMapping(csv(spark, rawDir, "transactions", transactionsCsv), Seq(
-            ("hash", "hash", str), ("nonce", "nonce", lng), ("block_hash", "block_hash", str),
-            ("block_number", "block_number", lng), ("transaction_index", "transaction_index", lng),
-            ("from_address", "from_address", str), ("to_address", "to_address", str),
-            ("value", "value", dec38), ("gas", "gas", lng), ("gas_price", "gas_price", lng),
-            ("input", "input", str)))
-          finish("transactions", mapped, "block_number")
-          mapped
-        }
-      else None
+    if (cfg.exportTransactions)
+      runner.stage("transactions")(_ =>
+        finish("transactions", EtlOps.applyMapping(csv(spark, rawDir, "transactions", transactionsCsv), Seq(
+          ("hash", "hash", str), ("nonce", "nonce", lng), ("block_hash", "block_hash", str),
+          ("block_number", "block_number", lng), ("transaction_index", "transaction_index", lng),
+          ("from_address", "from_address", str), ("to_address", "to_address", str),
+          ("value", "value", dec38), ("gas", "gas", lng), ("gas_price", "gas_price", lng),
+          ("input", "input", str))), "block_number"))
 
     // stage 2: receipts, fetched only for exported tx hashes (config.py:40-41).
-    // The fan-out key for stage 3 comes from the PRE-DropNullFields frame:
-    // an all-null contract_address batch would otherwise drop the column the
-    // downstream stage joins on. NO broadcast hint: the tx key set has the
-    // same cardinality as the receipts fact — a forced broadcast would ship
-    // every transaction hash to every executor (OOM at chain scale); the
-    // equi-join shuffles both sides on transaction_hash, and AQE still
-    // downgrades to broadcast when a filtered run is actually small.
-    val receipts =
-      if (cfg.exportReceipts && cfg.exportTransactions)
-        stage("receipts", Seq("transactions")) {
-          val raw = csv(spark, rawDir, "receipts", receiptsCsv)
-            .join(transactions.get.select(col("hash").as("transaction_hash"),
-              col("block_number")), Seq("transaction_hash"), "inner")
-          finish("receipts", raw, "block_number")
-          raw
-        }
-      else None
+    // NO broadcast hint: the tx key set has the same cardinality as the
+    // receipts fact — a forced broadcast would ship every transaction hash
+    // to every executor (OOM at chain scale); the equi-join shuffles both
+    // sides on transaction_hash, and AQE still downgrades to broadcast when
+    // a filtered run is actually small.
+    if (cfg.exportReceipts && cfg.exportTransactions)
+      runner.stage("receipts", "transactions")(up =>
+        finish("receipts", csv(spark, rawDir, "receipts", receiptsCsv)
+          .join(up("transactions").select(col("hash").as("transaction_hash"),
+            col("block_number")), Seq("transaction_hash"), "inner"), "block_number"))
 
     // stage 2b: logs for the same exported tx hashes (config.py:43-44 — the
-    // reference exports receipts and logs from one extracted hash file)
+    // reference exports receipts and logs from one extracted hash file).
+    // A plain left-semi join for the same reason as receipts: the hash set
+    // is as large as the transactions table, so broadcasting it is AQE's
+    // call, made on the lake's measured size.
     if (cfg.exportLogs && cfg.exportTransactions)
-      stage("logs", Seq("transactions")) {
-        val keyed = EtlOps.stagedSemiJoin(
-          csv(spark, rawDir, "logs", logsCsv),
-          transactions.get, "transaction_hash", "hash")
-        finish("logs", keyed, "block_number")
-      }: Unit
+      runner.stage("logs", "transactions")(up =>
+        finish("logs", csv(spark, rawDir, "logs", logsCsv)
+          .join(up("transactions").select(col("hash").as("transaction_hash")),
+            Seq("transaction_hash"), "left_semi"), "block_number"))
 
     // stage 3: contracts for receipt contract_addresses (config.py:46-47).
     // The creation block number rides along from the receipt row (min() in
@@ -257,42 +298,39 @@ object ExportPipeline {
     // reference's semi-join filter (inner join on the extracted key set);
     // AQE picks broadcast when the aggregated address→block map is small.
     if (cfg.exportContracts && cfg.exportReceipts && cfg.exportTransactions)
-      stage("contracts", Seq("receipts")) {
-        val firstSeen = receipts.get
+      runner.stage("contracts", "receipts") { up =>
+        val firstSeen = up("receipts")
           .filter(col("contract_address").isNotNull)
           .groupBy(col("contract_address").as("address"))
           .agg(min(col("block_number")).as("block_number"))
-        val keyed = csv(spark, rawDir, "contracts", contractsCsv)
-          .join(firstSeen, Seq("address"), "inner")
-        finish("contracts", keyed, "block_number")
-      }: Unit
+        finish("contracts", csv(spark, rawDir, "contracts", contractsCsv)
+          .join(firstSeen, Seq("address"), "inner"), "block_number")
+      }
 
     // stage 4: token transfers (config.py:51-53)
-    val transfers =
-      if (cfg.exportTokenTransfers)
-        stage("token_transfers", Nil)(
-          finish("token_transfers",
-            EtlOps.applyMapping(csv(spark, rawDir, "token_transfers", tokenTransfersCsv), Seq(
-              ("token_address", "token_address", str), ("from_address", "from_address", str),
-              ("to_address", "to_address", str), ("value", "value", dec38),
-              ("transaction_hash", "transaction_hash", str), ("log_index", "log_index", lng),
-              ("block_number", "block_number", lng))), "block_number"))
-      else None
+    if (cfg.exportTokenTransfers)
+      runner.stage("token_transfers")(_ =>
+        finish("token_transfers",
+          EtlOps.applyMapping(csv(spark, rawDir, "token_transfers", tokenTransfersCsv), Seq(
+            ("token_address", "token_address", str), ("from_address", "from_address", str),
+            ("to_address", "to_address", str), ("value", "value", dec38),
+            ("transaction_hash", "transaction_hash", str), ("log_index", "log_index", lng),
+            ("block_number", "block_number", lng))), "block_number"))
 
     // stage 5: tokens for distinct transfer token_addresses (config.py:56-57).
     // Same pattern as contracts: the token's first-transfer block becomes its
     // partition key, replacing the single-partition lit(0) placeholder.
     if (cfg.exportTokens && cfg.exportTokenTransfers)
-      stage("tokens", Seq("token_transfers")) {
-        val firstSeen = transfers.get
+      runner.stage("tokens", "token_transfers") { up =>
+        val firstSeen = up("token_transfers")
           .groupBy(col("token_address").as("address"))
           .agg(min(col("block_number")).as("block_number"))
-        val keyed = csv(spark, rawDir, "tokens", tokensCsv)
-          .join(firstSeen, Seq("address"), "inner")
-        finish("tokens", keyed, "block_number")
-      }: Unit
+        finish("tokens", csv(spark, rawDir, "tokens", tokensCsv)
+          .join(firstSeen, Seq("address"), "inner"), "block_number")
+      }
 
-    PipelineResult(out, runner.statuses)
+    val stages = runner.run() // before out.toMap: the stages fill `out`
+    PipelineResult(out.toMap, stages)
   }
 
   /** A13's literal output, Spark-natively: the deployable DAG artifact a

@@ -1,9 +1,17 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, ExecutionException, FutureTask, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
 
@@ -226,6 +234,122 @@ class ExportPipelineSpec extends SparkTestBase {
     assert(dl("transactions")._2.exists(_.contains("failed after 3 attempts")))
     assert(dl("receipts")._2.exists(_.contains("cascade: upstream 'transactions'")))
     assert(dl("blocks") == (true, None))
+  }
+
+  test("independent stages overlap: blocks waits on a latch token_transfers releases") {
+    val raw = minimalRaw()
+    val out = Files.createTempDirectory("graft_out_cc").toString
+    val released = new CountDownLatch(1)
+    // if the stages ran one after another, blocks would time out before
+    // token_transfers started and, with no retries, fail
+    val cfg = PipelineConfig(maxRetries = 0, stageInterceptor = (name, df) => {
+      if (name == "token_transfers") released.countDown()
+      if (name == "blocks" && !released.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("token_transfers did not start while blocks ran")
+      df
+    })
+    val res = ExportPipeline.run(spark, cfg, raw, out)
+    assert(res.stages("blocks") == StageStatus.Succeeded(1))
+    assert(res.stages("token_transfers") == StageStatus.Succeeded(1))
+  }
+
+  test("an export scans each raw CSV exactly twice: the DropNullFields census and the write") {
+    val raw = minimalRaw()
+    val out = Files.createTempDirectory("graft_out_scan").toString
+    val scans = new ConcurrentHashMap[String, Integer]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        foreach(qe.executedPlan) {
+          case s: FileSourceScanExec =>
+            s.relation.location.rootPaths.map(_.getName).filter(_.endsWith(".csv"))
+              .foreach(n => scans.merge(n, 1, (a, b) => a + b))
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftBridge.waitListenerBusEmpty(spark)
+    spark.listenerManager.register(listener)
+    try {
+      ExportPipeline.run(spark, PipelineConfig(), raw, out)
+      GraftBridge.waitListenerBusEmpty(spark)
+    } finally spark.listenerManager.unregister(listener)
+    // downstream stages key from their upstream's lake, never its CSV
+    assert(scans.asScala.toMap.map { case (k, v) => k -> v.intValue } ==
+      Seq("blocks", "transactions", "receipts", "logs", "contracts", "token_transfers", "tokens")
+        .map(t => s"$t.csv" -> 2).toMap)
+  }
+
+  test("a non-Exception Throwable in a stage reaches the caller; no stage thread outlives run()") {
+    val raw = minimalRaw()
+    val out = Files.createTempDirectory("graft_out_fatal").toString
+    val stageThreads = new ConcurrentLinkedQueue[Thread]()
+    val fatal = new Error("injected fatal error")
+    val cfg = PipelineConfig(stageInterceptor = (name, df) => {
+      stageThreads.add(Thread.currentThread())
+      if (name == "transactions") throw fatal
+      df
+    })
+    // bounded, so a hang fails the spec instead of stalling the suite
+    val call = new FutureTask[PipelineResult](() => ExportPipeline.run(spark, cfg, raw, out))
+    val caller = new Thread(call)
+    caller.start()
+    val thrown = intercept[ExecutionException](call.get(3, TimeUnit.MINUTES)).getCause
+    assert(thrown eq fatal) // not retried, not wrapped, not a CascadeFailed status
+    // the fatal stage's dependents never ran their bodies
+    for (t <- Seq("receipts", "logs", "contracts"))
+      assert(!new java.io.File(s"$out/$t").exists(), s"dependent $t ran after a fatal upstream")
+    assert(stageThreads.asScala.filter(_ ne caller).forall(!_.isAlive))
+  }
+
+  test("an interrupted caller interrupts its stages and returns only once they have ended") {
+    val raw = minimalRaw()
+    val out = Files.createTempDirectory("graft_out_intr").toString
+    val roots = new CountDownLatch(3) // blocks, transactions, token_transfers
+    val stageThreads = new ConcurrentLinkedQueue[Thread]()
+    val cfg = PipelineConfig(maxRetries = 0, stageInterceptor = (_, df) => {
+      stageThreads.add(Thread.currentThread())
+      roots.countDown()
+      new CountDownLatch(1).await(3, TimeUnit.MINUTES) // until interrupted
+      df
+    })
+    val call = new FutureTask[PipelineResult](() => ExportPipeline.run(spark, cfg, raw, out))
+    val caller = new Thread(call)
+    caller.start()
+    val allWaiting = roots.await(2, TimeUnit.MINUTES)
+    caller.interrupt()
+    assert(allWaiting, "the three root stages did not wait at the same time")
+    val thrown = intercept[ExecutionException](call.get(3, TimeUnit.MINUTES)).getCause
+    assert(thrown.isInstanceOf[InterruptedException])
+    assert(stageThreads.size == 3 && stageThreads.asScala.forall(!_.isAlive))
+  }
+
+  test("every job a stage submits carries the caller's local properties") {
+    val raw = minimalRaw()
+    val out = Files.createTempDirectory("graft_out_props").toString
+    val key = "graft.spec.caller"
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key)))): Unit
+    }
+    val stageThreads = new ConcurrentLinkedQueue[Thread]()
+    val cfg = PipelineConfig(stageInterceptor = (_, df) => { stageThreads.add(Thread.currentThread()); df })
+    GraftBridge.waitListenerBusEmpty(spark)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, "export-under-test")
+    val res = try {
+      val r = ExportPipeline.run(spark, cfg, raw, out)
+      GraftBridge.waitListenerBusEmpty(spark)
+      r
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(res.stages.values.forall(_ == StageStatus.Succeeded(1)), res.stages.toString)
+    assert(seen.size >= 14, s"${seen.size} jobs") // a census and a write per stage
+    assert(seen.asScala.forall(_.contains("export-under-test")), seen.toString)
+    assert(stageThreads.asScala.filter(_ ne Thread.currentThread).forall(!_.isAlive))
   }
 
   test("curation DAG: staged execution is indistinguishable from the composed plan") {
