@@ -1,84 +1,157 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark entry point. Runs every (or a selected subset of)
   * `SparkEntry.queries` key against `SPARK_GRAFT_SF_DIR` and prints ONE
   * compact JSON line as the LAST line of output.
   *
+  * Every measured call is a first call: before each key, every pass clears
+  * the session memo, the staged dirs and stream runs, and Spark's cache, in
+  * a JVM whose codegen and write path were warmed once up front. The
+  * headline `value` is the sum over keys of the median first call across
+  * passes — the cost a first caller pays. Wall and executor-CPU medians are
+  * reported with the run's own steal stamp next to them.
+  *
+  * The regression check is exact, not timed: each key's pass-1 counters —
+  * output rows, shuffle records written, exchange nodes in the executed
+  * plans ([[Counts]]) — must equal the committed `BENCH_COUNTS.json` entry
+  * for this core count and scale ([[countChanges]]). Hypervisor steal moves
+  * time, never these counts, so the check needs no quiet host and no
+  * re-runs. A full-suite run writes its namespace back, so a counter change
+  * shows up as a diff of that file in review.
+  *
   * The driver captures only the last ~2,000 chars of this process's output,
   * so the final line must stay small: it carries the totals, per-query times
   * for the slowest [[BenchReport.LineTopN]] keys, and capped diagnostic
   * lists (see [[BenchReport]], whose spec pins the worst-case line length).
-  * The complete per-query map is written to `BENCH_FULL.json` in the working
-  * directory (the repo root under sbt) for offline reading.
+  * The complete per-query record is written to `BENCH_FULL.json` in the
+  * working directory (the repo root under sbt) for offline reading.
   */
 object Bench {
   private val SlowGuardSec = 60.0
-  private val FloorsFile = "BENCH_FLOORS.json"
-  private val FloorFlagRatio = 1.5
+  /** Measured steal, in percent of one CPU, above which the run is stamped
+    * `contended`: its times then carry host load, its counters do not. */
+  private val ContendedStealPct = 5.0
+  private val CountsFile = "BENCH_COUNTS.json"
 
-  /** Absolute slack added to the floor before flagging. Floors are minima
-    * across host instances; the r11 cross-instance measurement (PLANS.md
-    * "Floor epoch") showed UNTOUCHED sub-0.3 s keys uniformly +0.06..+0.17 s
-    * over floors set on a prior VM instance — at loadavg < 0.9 with ~0.2%
-    * steal, i.e. not load and not code. Below that resolution a ratio test
-    * alone cannot distinguish a real regression from a host epoch, so a key
-    * flags only when it exceeds BOTH floor×ratio AND floor+slack. The cost
-    * is real: a genuine 2x regression on a ~0.1 s key is invisible here —
-    * those keys' plan shapes are pinned by specs instead, which is the
-    * right instrument at that magnitude. */
-  private val FloorAbsSlackSec = 0.2
+  /** A key's structural counters from one first call. */
+  final case class Counts(rows: Long, shuffleRecords: Long, exchanges: Long) {
+    def named: Seq[(String, Long)] =
+      Seq("rows" -> rows, "shuffle_records" -> shuffleRecords, "exchanges" -> exchanges)
+  }
+  final case class CountChange(key: String, counter: String, expected: Long, observed: Long)
 
-  /** Cross-round per-key floors: best historical warm median per
-    * (sf, key), persisted as one flat JSON object in the repo root and
-    * committed per round. The intra-run dispersion detector can only see
-    * passes that DISAGREE — a key uniformly 2x slower on every pass (the
-    * r8 `sim_search_ivf` case: a loaded host slows all passes of a
-    * driver-blocking key equally) sails through it. Comparing each median
-    * against its all-time floor catches exactly that class: any key
-    * > [[FloorFlagRatio]]x its floor is flagged in `vs_floor`, turning
-    * "probably host load" into a mechanical cross-round signal. Floors
-    * only ratchet DOWN (min of history), only from warm full-precision
-    * runs, and are keyed by sf so local sf0.01 iteration can't pollute
-    * the driver's sf0.1 floors.
-    *
-    * r13: floors migrated from WALL time to per-key EXECUTOR CPU time
-    * (`"cpu:sf|key"` entries; legacy `"sf|key"` wall entries are still
-    * ratcheted for history but no longer flag). Three consecutive rounds
-    * spent real effort re-litigating wall-time floor flags that were
-    * hypervisor steal, not code (7 BENCH_IDLE_REPASS files): wall time on
-    * a shared host cannot anchor a regression gate, task CPU time can —
-    * steal pauses the vCPU clock, not the thread's CPU accounting, so a
-    * CPU-median regression is code (or a plan change), mechanically. */
-  private def readFloors(): Map[String, Double] = {
-    val p = java.nio.file.Paths.get(FloorsFile)
-    if (!java.nio.file.Files.exists(p)) Map.empty
+  /** `BENCH_COUNTS.json` namespace of a run: map-side partitioning, and with
+    * it the shuffle records written, depends on the core count. */
+  def countsNamespace(cpus: String, sfDir: String): String =
+    s"c$cpus:${java.nio.file.Paths.get(sfDir).getFileName}"
+
+  /** Every observed counter that differs from its committed value in
+    * namespace `ns`. A key with no committed entry there — a new key, or a
+    * namespace never recorded — compares nothing, and neither does an
+    * unknown observation (`None`: the key failed, or its counters were lost
+    * to a listener-bus timeout), so a partial count can neither pass nor
+    * fail the check. */
+  def countChanges(committed: Map[String, Counts], ns: String,
+                   observed: Seq[(String, Option[Counts])]): Seq[CountChange] =
+    for {
+      (key, Some(obs)) <- observed
+      exp <- committed.get(s"$ns|$key").toSeq
+      ((counter, e), (_, o)) <- exp.named.zip(obs.named)
+      if e != o
+    } yield CountChange(key, counter, e, o)
+
+  /** `committed` with namespace `ns` replaced by a full-suite run's counts.
+    * A key whose counts are unknown keeps its committed entry. */
+  def withNamespace(committed: Map[String, Counts], ns: String,
+                    observed: Seq[(String, Option[Counts])]): Map[String, Counts] =
+    committed.filterNot(_._1.startsWith(s"$ns|")) ++ observed.flatMap { case (key, o) =>
+      o.orElse(committed.get(s"$ns|$key")).map(s"$ns|$key" -> _)
+    }
+
+  private def readCounts(): Map[String, Counts] = {
+    val f = new java.io.File(CountsFile)
+    if (!f.exists) Map.empty
     else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      // our own flat writer's format: "sf|key":1.234 pairs. The value
-      // pattern is permissive ('1.2.3' or a stray '-' from a hand edit /
-      // merge artifact matches), so the parse is a Try: one malformed
-      // token drops that entry (with a warning) instead of throwing at
-      // end-of-run and losing the whole benchmark's final JSON.
-      "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(s)
-        .flatMap { m =>
-          scala.util.Try(m.group(2).toDouble).toOption match {
-            case Some(v) => Some(m.group(1) -> v)
-            case None =>
-              System.err.println(
-                s"WARNING: $FloorsFile entry '${m.group(1)}' has unparseable " +
-                  s"value '${m.group(2)}' — ignoring it")
-              None
-          }
-        }.toMap
+      import scala.jdk.CollectionConverters._
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(f).properties().asScala.map { e =>
+        val a = e.getValue
+        e.getKey -> Counts(a.get(0).asLong, a.get(1).asLong, a.get(2).asLong)
+      }.toMap
     }
   }
 
-  private def writeFloors(floors: Map[String, Double]): Unit = {
-    val body = floors.toSeq.sorted
-      .map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString("{", ",", "}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(FloorsFile),
-      (body + "\n").getBytes("UTF-8")): Unit
+  /** One entry per line, sorted, so a changed counter is a one-line diff. */
+  private def writeCounts(counts: Map[String, Counts]): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(CountsFile),
+      counts.toSeq.sortBy(_._1).map { case (k, c) =>
+        s"""  "$k": [${c.rows}, ${c.shuffleRecords}, ${c.exchanges}]"""
+      }.mkString("{\n", ",\n", "\n}\n").getBytes("UTF-8")): Unit
+
+  /** One measured first call. `counts` is `None` when the call failed or
+    * the listener bus did not drain, so the counters may be partial. */
+  final case class Call(wallSec: Double, cpuSec: Double, shuffleBytes: Long,
+                        failure: Option[Throwable], counts: Option[Counts])
+
+  /** Meters a session: executor CPU and shuffle writes summed from every
+    * task end, exchange nodes counted in every action's executed plan
+    * (subqueries and AQE query stages included). */
+  final class Meter(spark: SparkSession) extends AutoCloseable {
+    private val cpuNanos, shuffleRecords, shuffleBytes, exchanges = new AtomicLong
+    private val tasks = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null) {
+          cpuNanos.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime)
+          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
+        }
+      }
+    }
+    private val plans = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        exchanges.addAndGet(collectWithSubqueries(qe.executedPlan) { case e: Exchange => e }.size): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(tasks)
+    spark.listenerManager.register(plans)
+
+    def close(): Unit = {
+      spark.listenerManager.unregister(plans)
+      spark.sparkContext.removeSparkListener(tasks)
+    }
+
+    /** Task-end and SQL-execution-end events arrive asynchronously; a read
+      * without the drain attributes a tail of one key's events to the next.
+      * False when the bus did not drain within its timeout. */
+    private def drained(): Boolean =
+      try { org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark); true }
+      catch { case _: java.util.concurrent.TimeoutException => false }
+
+    /** Runs `fn(spark, sfDir).count()` as a first call: every memo and
+      * cache an earlier call could have left behind is cleared first. */
+    def firstCall(fn: (SparkSession, String) => DataFrame, sfDir: String): Call = {
+      graft.SessionMemo.clear(spark)
+      graft.ops.Relational.clearStaged()
+      graft.streaming.StreamOps.clearStagedRuns()
+      spark.catalog.clearCache()
+      val before = drained()
+      val (cpu0, rec0, bytes0, exch0) =
+        (cpuNanos.get, shuffleRecords.get, shuffleBytes.get, exchanges.get)
+      val t0 = System.nanoTime()
+      val rows = try Right(fn(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
+      val wallSec = (System.nanoTime() - t0) / 1e9
+      val after = drained()
+      Call(wallSec, (cpuNanos.get - cpu0) / 1e9, shuffleBytes.get - bytes0, rows.left.toOption,
+        rows.toOption.filter(_ => before && after)
+          .map(Counts(_, shuffleRecords.get - rec0, exchanges.get - exch0)))
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -92,6 +165,26 @@ object Bench {
         s"valid keys: ${SparkEntry.queries.keySet.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
+    // SPARK_GRAFT_BENCH_EXCLUDE: keys to SKIP, recorded in the JSON as
+    // `excluded` so the record stays honest about coverage. Exists for the
+    // single-box ceiling at scale-probe corpora: the two Θ(n²)-contract
+    // multimodal keys at 100× exceed this host's disk/heap (PLANS.md probe
+    // #21 — at that scale `multimodal_dup_clusters`' GC stall starved
+    // executor heartbeats and took down the whole suite's SparkContext,
+    // failing 112 innocent keys). An exclude run is not the full suite: like
+    // a key-args run it writes BENCH_SUBSET.json and only compares counters.
+    val excluded = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE").toSeq
+      .flatMap(_.split("[,\\s]+")).filter(_.nonEmpty)
+    val unknownExcl = excluded.filterNot(SparkEntry.queries.keySet)
+    if (unknownExcl.nonEmpty) {
+      System.err.println(s"unknown SPARK_GRAFT_BENCH_EXCLUDE keys: ${unknownExcl.mkString(", ")}")
+      sys.exit(2)
+    }
+    val fullSuite = args.isEmpty && excluded.isEmpty
+    // Read before any key runs: a malformed file fails the run up front,
+    // not after minutes of measurement.
+    val committed = readCounts()
+    val ns = countsNamespace(cpus, sfDir)
     val whDir = java.nio.file.Files.createTempDirectory("graft_wh")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -100,24 +193,6 @@ object Bench {
       .config("spark.sql.warehouse.dir", whDir.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-task executor CPU accumulator (ns): executorCpuTime +
-    // executorDeserializeCpuTime from every completed task. Read per key
-    // after draining the async listener bus (GraftBridge) so a key's total
-    // is complete before the next key starts. This is the steal-invariant
-    // signal the floor gate runs on — see readFloors.
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null)
-          cpuNanos.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime): Unit
-      }
-    })
-    def drainedCpuNanos(): Long = {
-      try org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
-      catch { case _: Throwable => } // backlogged bus → best-effort reading
-      cpuNanos.get()
-    }
     // Warm the JVM (codegen, parquet footers, shuffle machinery) once so
     // per-query numbers measure the queries, not first-touch costs.
     graft.Tables.testTables.foreach { t =>
@@ -146,400 +221,120 @@ object Bench {
         .withColumn("rn", row_number().over(Window.partitionBy("k").orderBy("v")))
         .count(): Unit
     } catch { case _: Throwable => }
-    // SPARK_GRAFT_BENCH_EXCLUDE: keys to SKIP, recorded in the JSON as
-    // `excluded` so the record stays honest about coverage. Exists for the
-    // single-box ceiling at scale-probe corpora: the two Θ(n²)-contract
-    // multimodal keys at 100× exceed this host's disk/heap (adjudicated in
-    // PLANS.md probe #21 — at that scale `multimodal_dup_clusters`' GC
-    // stall starved executor heartbeats and took down the whole suite's
-    // SparkContext, failing 112 innocent keys). An exclude run is not the
-    // full suite, so it writes BENCH_SUBSET.json like any subset run, but
-    // unlike key args it keeps the quiet-host gate (it still measures
-    // everything else).
-    val excluded = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE").toSeq
-      .flatMap(_.split("[,\\s]+")).filter(_.nonEmpty)
-    val unknownExcl = excluded.filterNot(SparkEntry.queries.keySet)
-    if (unknownExcl.nonEmpty) {
-      System.err.println(s"unknown SPARK_GRAFT_BENCH_EXCLUDE keys: ${unknownExcl.mkString(", ")}")
-      sys.exit(2)
-    }
-    val selected =
-      (if (args.isEmpty) SparkEntry.queries
-       else SparkEntry.queries.view.filterKeys(args.toSet).toMap) -- excluded
-    // Median-of-N per key (default 3): single-shot numbers on a shared host
-    // inflate up to ~4x under load (COVERAGE.md), which polluted the r4→r5
-    // round-over-round comparison. Reps run PASS-MAJOR — the whole key list
-    // rep times, not each key rep times back-to-back — so a multi-minute
-    // host-load window pollutes each key in at most ONE pass (back-to-back
-    // reps all landed inside the window, and the median absorbed nothing:
-    // 4 keys read 2-9x high in r6's final run). The median across separated
-    // passes is load-immune up to floor(reps/2) polluted passes, and
-    // /proc/loadavg sampled per pass boundary makes a polluted run
-    // self-identifying in the JSON.
-    //
-    // Warm vs cold: the memoized write-then-read operators and cached dedup
-    // intermediates make passes 2..N warm, so the median reports
-    // steady-state query cost — NOT comparable to the r1-r5 single-shot
-    // totals. The cross-round-comparable number is `cold_total` = the
-    // pass-1 (first-touch) sum, which is exactly what a single-shot run
-    // measured. SPARK_GRAFT_BENCH_COLD=1 additionally clears every memo
-    // cache before each key, making every rep a true first touch (no
-    // cross-key warming either, beyond the shared JVM/codegen warmup
-    // above, which IS wanted).
+    val meter = new Meter(spark)
+    val keys = ((if (args.isEmpty) SparkEntry.queries
+                 else SparkEntry.queries.view.filterKeys(args.toSet).toMap) -- excluded)
+      .toSeq.sortBy(_._1)
+    // Median-of-N per key (default 3). Reps run PASS-MAJOR — the whole key
+    // list per pass, not each key back-to-back — so a multi-minute host-load
+    // window pollutes each key in at most one pass, and /proc/loadavg
+    // sampled at each pass boundary makes a polluted run self-identifying.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val coldMode = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
     def loadavg(): Double =
       try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    // Hypervisor steal ticks (/proc/stat cpu field 9). Steal on this sandbox
-    // is USAGE-DEPENDENT — ~0% sampled at idle, measured 143% of one CPU
-    // during a single-key bench (PLANS.md "Floor epoch") — so a loadavg
-    // snapshot alone cannot tell "slow host epoch" from a regression. The
-    // run's own steal total, emitted as steal_pct_cpu (percent of ONE cpu
-    // stolen over the run's wall time), makes every vs_floor flag carry its
-    // environment: flags at high steal are the host, not the code.
+    // Hypervisor steal ticks (/proc/stat cpu field 9). Steal on this kind of
+    // shared host is usage-dependent — ~0% sampled at idle, over 100% of one
+    // CPU during a run — so only the run's own steal, emitted as
+    // steal_pct_cpu (percent of ONE cpu stolen over the run's wall time),
+    // tells what epoch its times were measured in.
     def stealTicks(): Long =
       try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/stat"))).linesIterator
         .find(_.startsWith("cpu ")).map(_.trim.split("\\s+")(8).toLong).getOrElse(-1L)
       catch { case _: Throwable => -1L }
-    // Quiet-host gate (full-suite runs only): the committed per-round
-    // artifact should BE the idle record, not the contended one plus
-    // archaeology (the r12 verdict: the clean 74.8 s run lived only in a
-    // commit message while BENCH_r12.json carried a 13.8%-steal epoch).
-    // Sample hypervisor steal over short windows before starting; while it
-    // exceeds ~5% of one CPU, sleep and re-sample, up to a bounded wait —
-    // then proceed regardless (the CPU-based floors are steal-invariant,
-    // so a residually-contended run degrades only the wall headline). The
-    // wait happens BEFORE pass 1 so cold_total semantics are untouched.
-    //
-    // r15: the gate requires TWO consecutive quiet samples — the r14
-    // record's single 3-s sample passed and the run then measured 17.8%
-    // steal; one window is too short an instrument for an 80-s run — and
-    // the run SELF-QUALIFIES afterwards: its own measured steal stamps
-    // `contended` in the JSON, and every vs_floor flag is auto-adjudicated
-    // by the r13 protocol's designated instrument (a solo REPS=5 CPU
-    // median after a bounded quiet wait) instead of being left for manual
-    // archaeology (the r14 record shipped 25 unadjudicated flags).
-    val QuietThresholdPct = 5.0
-    def stealSample(sec: Double = 3.0): Double = {
-      val s0 = stealTicks(); val w0 = System.nanoTime()
-      Thread.sleep((sec * 1000).toLong)
-      val s1 = stealTicks()
-      if (s0 < 0 || s1 < 0) 0.0 // no /proc/stat → nothing to gate on
-      else (s1 - s0) / 100.0 / ((System.nanoTime() - w0) / 1e9) * 100.0
-    }
-    def waitForQuiet(maxWaitSec: Double): Double = {
-      val t0 = System.nanoTime()
-      var waited = 0.0
-      var quietStreak = 0
-      var first = true
-      while (quietStreak < 2 && waited < maxWaitSec) {
-        if (!first && quietStreak == 0) Thread.sleep(15000)
-        first = false
-        val pct = stealSample()
-        if (pct <= QuietThresholdPct) quietStreak += 1
-        else {
-          quietStreak = 0
-          System.err.println(f"NOTE: host steal $pct%.1f%% > $QuietThresholdPct%.0f%% — " +
-            f"waiting for a quiet window (${(System.nanoTime() - t0) / 1e9}%.0f s so far)")
-        }
-        waited = (System.nanoTime() - t0) / 1e9
-      }
-      waited
-    }
-    val gateDisabled =
-      sys.env.get("SPARK_GRAFT_BENCH_NO_WAIT").contains("1") || args.nonEmpty
-    val quietWaitedSec: Double =
-      if (gateDisabled) 0.0
-      else waitForQuiet(sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_WAIT", "600").toDouble)
     val stealStart = stealTicks()
     val wallStart = System.nanoTime()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    val keys = selected.toSeq.sortBy(_._1)
-    val perPass = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      keys.map { case (k, _) => k -> Vector.empty[Double] }: _*)
-    val perPassCpu = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      keys.map { case (k, _) => k -> Vector.empty[Double] }: _*)
+    val calls = scala.collection.mutable.LinkedHashMap[String, Vector[Call]](
+      keys.map { case (k, _) => k -> Vector.empty[Call] }: _*)
     val passLoads = scala.collection.mutable.ArrayBuffer[Double]()
-    def runKey(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      if (coldMode) {
-        graft.SessionMemo.clear(spark)
-        graft.ops.Relational.clearStaged()
-        graft.streaming.StreamOps.clearStagedRuns()
-      }
-      val cpu0 = drainedCpuNanos()
-      val t0 = System.nanoTime()
-      // A crashing key must never masquerade as a fast pass: record it in
-      // `failed` (surfaced in both JSON lines + stderr), don't swallow it.
-      try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
+    for (_ <- 1 to reps) {
+      passLoads += loadavg()
+      keys.foreach { case (name, fn) =>
+        val call = meter.firstCall(fn, sfDir)
+        // A crashing key must never masquerade as a fast pass: record it in
+        // `failed` (surfaced in both JSON lines + stderr), don't swallow it.
+        call.failure.foreach { e =>
           if (!failed.contains(name)) failed += name
           System.err.println(s"WARNING: query '$name' FAILED: " +
             s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
+        }
+        calls(name) = calls(name) :+ call
       }
-      perPass(name) = perPass(name) :+ (System.nanoTime() - t0) / 1e9
-      perPassCpu(name) = perPassCpu(name) :+ (drainedCpuNanos() - cpu0) / 1e9
-    }
-    for (rep <- 1 to reps) {
-      passLoads += loadavg()
-      keys.foreach { case (name, fn) => runKey(name, fn) }
     }
     passLoads += loadavg()
-    // Load-pollution predicate over a key's pass times. Pass 1 is
-    // systematically elevated — memo build in warm mode, per-plan codegen
-    // compilation in both modes — expected, not noise, so passes 2..N are
-    // compared against each other (max > 2x min, ignoring sub-second
-    // jitter). With a single warm pass (reps=2) there is nothing to compare
-    // pairwise, so fall back to comparing it against pass 1: a warm pass
-    // slower than 2x the first-touch pass is load, not the query.
-    def dispersed(ts: Vector[Double]): Boolean = {
-      val cmp = ts.drop(1)
-      if (cmp.length >= 2) cmp.max > 0.5 && cmp.max > 2 * cmp.min
-      else cmp.length == 1 && cmp.head > 0.5 && cmp.head > 2 * ts.head
-    }
-    // Targeted re-pass: flagged keys get ONE extra measurement appended
-    // before the median is taken, so a single polluted pass is outvoted by
-    // clean ones while a genuine regression (all passes high) stays high —
-    // a cross-round regression signal that doesn't need a manual solo rerun.
-    val flagged = perPass.toSeq.collect { case (n, ts) if dispersed(ts) => n }.toSet
-    if (flagged.nonEmpty && reps > 1) {
-      System.err.println(s"NOTE: re-passing ${flagged.size} load-noisy keys: " +
-        flagged.toSeq.sorted.mkString(", "))
-      passLoads += loadavg()
-      keys.foreach { case (name, fn) => if (flagged(name)) runKey(name, fn) }
-    }
-    val coldTotal = perPass.valuesIterator.map(_.head).sum
-    // Lower median: for the usual odd pass count this is the true median;
-    // for a re-passed key (even count) it biases toward the clean warm
-    // measurements rather than averaging in the polluted one.
-    val results = perPass.toSeq.map { case (name, ts) =>
-      name -> ts.sorted.apply((ts.length - 1) / 2)
-    }
-    // Per-key executor-CPU medians (same lower-median rule). This is what
-    // the floor gate compares — steal-invariant where wall is not.
-    val cpuResults = perPass.keys.toSeq.map { name =>
-      val ts = perPassCpu(name)
-      name -> ts.sorted.apply((ts.length - 1) / 2)
-    }
-    val cpuByKey = cpuResults.toMap
-    // Self-identify residual pollution: a key whose passes still disagree
-    // >2x after the re-pass gets its raw per-pass times surfaced, so a
-    // cross-round "regression" can be traced to bad passes without
-    // rerunning anything. A polluted pass 1 still shows in cold_total and
-    // is identified by the loadavg samples.
-    val noisy = perPass.toSeq.collect { case (name, ts) if dispersed(ts) => name -> ts }
-    noisy.foreach { case (name, ts) =>
-      System.err.println(f"NOTE: query '$name' pass times ${ts.map(t => f"$t%.2f").mkString("/")} s " +
-        "disagree >2x across passes 2..N — likely a host-load window, see loadavg")
-    }
-    // Self-qualification stamp: the measurement passes' own steal. Taken
-    // BEFORE the adjudication phase so it describes exactly the epoch the
-    // medians were measured in.
-    val mainStealPct: Double = {
+    val stealPct: Double = {
       val end = stealTicks()
       if (stealStart < 0 || end < 0) -1.0
       else (end - stealStart) / 100.0 /
         math.max((System.nanoTime() - wallStart) / 1e9, 0.001) * 100.0
     }
-    val contended = mainStealPct > QuietThresholdPct
-
-    // Cross-round floor comparison (see readFloors). Ratios are computed
-    // against the floors as read (pre-update), then the floors ratchet down
-    // with this run's clean warm medians — a failed key never writes a
-    // floor (its "median" includes crash time) and never reads one (a
-    // crash-time "median" compared against a floor is a spurious flag,
-    // not a regression signal). Cold-mode medians are not comparable to
-    // warm floors so cold runs neither read nor write (vs_floor is {}).
-    // Same for a reps=1 warm run: its "median" is the systematically
-    // elevated pass-1 first-touch time, which would false-flag against
-    // steady-state floors.
-    val sfKey = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val floorComparable = !coldMode && reps > 1
-    val floors = readFloors()
-    // vs_floor is computed on EXECUTOR CPU medians against the in-suite
-    // "cpu:" floor namespace (r13 migration): a CPU-median over floor×ratio
-    // is a code or plan regression mechanically — hypervisor steal inflates
-    // wall, never task CPU. Legacy wall floors keep ratcheting below for
-    // history but no longer flag. First run on a fresh (cpus, sf) seeds the
-    // cpu floors (vs_floor empty), every later run compares.
-    //
-    // r18 (verdict #2): CPU floor namespaces carry the CORE COUNT as well as
-    // the sf — per-key CPU is instrument-dependent twice over: (a) in-suite
-    // medians carry cross-key JIT/GC attribution ~3x a solo run's
-    // (dedup_embedding_cosine 1.506 in-suite vs 0.485 solo, r17 ledger), and
-    // (b) the driver benches the same sf at 32 AND 8 cores, whose per-key
-    // CPU differs systematically (scheduling + partial-agg width). r17's
-    // single "cpu:sf|key" namespace mixed all four instruments, so the
-    // driver's 32-core run flagged 26 keys and burned a 26x5-rep solo
-    // adjudication storm inside the timed region. Floors now only gate
-    // same-instrument runs: cpu:c<cpus>:<sf>|<key> for in-suite medians,
-    // cpusolo:c<cpus>:<sf>|<key> for solo medians (adjudications and
-    // key-args runs). Legacy "cpu:<sf>|key" entries were demoted to
-    // cpusolo:c32 by the r18 migration and are not read.
-    def inSuiteFloorKey(k: String) = s"cpu:c$cpus:$sfKey|$k"
-    def soloFloorKey(k: String) = s"cpusolo:c$cpus:$sfKey|$k"
-    val vsFloorAll =
-      if (!floorComparable) Map.empty[String, Double]
-      else cpuResults.collect { case (k, v) if !failed.contains(k) => (k, v) }
-        .flatMap { case (k, v) =>
-          floors.get(inSuiteFloorKey(k)).map(fl => k -> (if (fl > 0) v / fl else 1.0))
-        }.toMap
-    val overFloorInSuite = vsFloorAll.filter { case (k, r) =>
-      r > FloorFlagRatio && {
-        val fl = floors(inSuiteFloorKey(k))
-        r * fl > fl + FloorAbsSlackSec // median exceeds floor + absolute slack
-      }
-    }
-    overFloorInSuite.toSeq.sortBy(-_._2).foreach { case (k, r) =>
-      System.err.println(f"NOTE: query '$k' in-suite CPU median is $r%.2fx its historical floor " +
-        f"(${floors(inSuiteFloorKey(k))}%.3f cpu-s) — adjudicating with a solo run")
-    }
-    // Auto-adjudication (r15): in-suite CPU medians on ~1 CPU-s keys carry
-    // JIT/GC attribution jitter from neighboring keys, so a flag's
-    // designated adjudicator is a SOLO repass (the r13 protocol — it
-    // retired both r13 flags with one run each). Run it here, in-process,
-    // after a bounded quiet wait, so the committed record carries every
-    // flag's solo CPU number instead of deferring them to manual forensics.
-    val AdjReps = 5
-    val adjudicated: Map[String, Double] =
-      if (overFloorInSuite.isEmpty) Map.empty
-      else {
-        if (!gateDisabled) { waitForQuiet(300.0): Unit }
-        overFloorInSuite.keys.toSeq.sorted.map { k =>
-          val fn = selected(k)
-          val ts = (1 to AdjReps).map { _ =>
-            val cpu0 = drainedCpuNanos()
-            try { fn(spark, sfDir).count(): Unit } catch { case _: Throwable => }
-            (drainedCpuNanos() - cpu0) / 1e9
-          }.toVector
-          val med = ts.sorted.apply((ts.length - 1) / 2)
-          System.err.println(f"NOTE: solo adjudication '$k': CPU median $med%.3f s over $AdjReps reps " +
-            f"(in-suite floor ${floors(inSuiteFloorKey(k))}%.3f)")
-          k -> med
-        }.toMap
-      }
-    // A flag survives only if its SOLO CPU median is still over the gate —
-    // that is a code/plan regression, mechanically, not an epoch artifact.
-    // The solo median gates against the SOLO floor namespace (same core
-    // count); a key with no solo floor yet can't be solo-adjudicated — its
-    // median seeds the solo namespace below and the flag falls back to the
-    // in-suite floor comparison (still a like-for-like instrument pair,
-    // biased toward flagging since solo medians read LOW vs in-suite).
-    val overFloor = overFloorInSuite.keys.toSeq.flatMap { k =>
-      val adj = adjudicated(k)
-      val gate = floors.get(soloFloorKey(k)).orElse(floors.get(inSuiteFloorKey(k)))
-      gate match {
-        case Some(fl) if adj > fl * FloorFlagRatio && adj > fl + FloorAbsSlackSec =>
-          Some(k -> (if (fl > 0) adj / fl else 1.0))
-        case _ => None
-      }
-    }.toMap
-    overFloor.toSeq.sortBy(-_._2).foreach { case (k, r) =>
-      val fl = floors.get(soloFloorKey(k)).orElse(floors.get(inSuiteFloorKey(k))).getOrElse(0.0)
-      System.err.println(f"NOTE: query '$k' SOLO CPU median is $r%.2fx its historical solo floor " +
-        f"($fl%.3f cpu-s) — regression (CPU floors are steal-invariant)")
-    }
+    val contended = stealPct > ContendedStealPct
+    meter.close()
     spark.stop()
     deleteRecursively(warmDir.toFile)
     deleteRecursively(whDir.toFile)
 
+    // Lower median: the true median for an odd pass count.
+    def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.length - 1) / 2)
+    val results = calls.toSeq.map { case (k, cs) => k -> median(cs.map(_.wallSec)) }
+    val cpuByKey = calls.map { case (k, cs) => k -> median(cs.map(_.cpuSec)) }.toMap
+    val observed = calls.toSeq.map { case (k, cs) => k -> cs.head.counts }
+    observed.collect { case (k, None) if !failed.contains(k) => k }.foreach { k =>
+      System.err.println(s"NOTE: query '$k': listener bus did not drain, its counters are unknown")
+    }
+    val changes = countChanges(committed, ns, observed)
+    changes.groupBy(_.key).toSeq.sortBy(_._1).foreach { case (k, cs) =>
+      System.err.println(s"WARNING: query '$k' counters changed (expected -> observed): " +
+        cs.map(c => s"${c.counter} ${c.expected} -> ${c.observed}").mkString(", "))
+    }
+    val countChanged = changes.map(_.key).distinct
+    val nCompared = observed.count { case (k, o) => o.isDefined && committed.contains(s"$ns|$k") }
+    System.err.println(s"NOTE: counters: $nCompared keys compared against $CountsFile " +
+      s"namespace $ns, ${countChanged.size} changed" +
+      (if (fullSuite) s"; namespace $ns written back" else ""))
+    if (fullSuite) {
+      val next = withNamespace(committed, ns, observed)
+      if (next != committed) writeCounts(next)
+    }
+
     def fmt(v: Double): String = f"$v%.3f"
+    def arr(ks: Seq[String]): String = ks.map(k => s""""$k"""").mkString("[", ",", "]")
     val total = results.map(_._2).sum
+    val cpuTotal = cpuByKey.values.sum
     val bySlowest = results.sortBy(-_._2)
-    // `vs_floor` in the JSON carries only the post-adjudication flags: the
-    // driver's tail capture is bounded, and a ratio ≤1.5x is "no signal".
-    // The full ratio map isn't needed — BENCH_FLOORS.json plus `queries_cpu`
-    // in BENCH_FULL.json reconstructs any ratio offline. `adjudicated`
-    // carries every flagged key's solo CPU median (retired or not).
-    val vsFloorJson = overFloor.toSeq.sortBy(-_._2)
-      .map { case (k, r) => s""""$k":${f"$r%.2f"}""" }.mkString("{", ",", "}")
-    val adjudicatedJson = adjudicated.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    if (floorComparable) {
-      val updated0 = results.filterNot { case (k, _) => failed.contains(k) }
-        .foldLeft(floors) { case (acc, (k, v)) =>
-          val key = s"$sfKey|$k"
-          acc.updated(key, acc.get(key).fold(v)(math.min(_, v)))
-        }
-      // r18 namespace split (verdict #2): a run's CPU medians ratchet the
-      // namespace matching their OWN instrument (see the vs_floor comment).
-      // Full-suite runs (no key args; excludes still count — 204 vs 206 keys
-      // is the same JIT/GC neighborhood) ratchet the in-suite "cpu:" floors
-      // the in-suite gate compares against; key-args runs are solo/subset-
-      // grade and ratchet "cpusolo:" only. Adjudication medians are warm
-      // solo measurements — the cleanest CPU numbers the run produces — and
-      // ratchet "cpusolo:". Both namespaces carry the run's core count.
-      val mkCpuKey: String => String =
-        if (args.isEmpty) inSuiteFloorKey else soloFloorKey
-      val updated1 = cpuResults.filterNot { case (k, _) => failed.contains(k) }
-        .foldLeft(updated0) { case (acc, (k, v)) =>
-          val key = mkCpuKey(k)
-          acc.updated(key, acc.get(key).fold(v)(math.min(_, v)))
-        }
-      val updated = adjudicated.toSeq
-        .foldLeft(updated1) { case (acc, (k, v)) =>
-          val key = soloFloorKey(k)
-          acc.updated(key, acc.get(key).fold(v)(math.min(_, v)))
-        }
-      if (updated != floors) writeFloors(updated)
-    }
-    val failedJson = failed.sorted.map(k => s""""$k"""").mkString("[", ",", "]")
-    val fullJson = bySlowest.map { case (k, v) => s""""$k":${fmt(v)}""" }
+    val stealJson = if (stealPct < 0) "-1" else f"$stealPct%.1f"
+    val countsJson = observed.map { case (k, o) =>
+      s""""$k":${o.fold("null")(c => s"[${c.rows},${c.shuffleRecords},${c.exchanges}]")}"""
+    }.mkString("{", ",", "}")
+    val bytesJson = calls.toSeq.map { case (k, cs) => s""""$k":${cs.head.shuffleBytes}""" }
       .mkString("{", ",", "}")
-    val cpuTotal = cpuResults.map(_._2).sum
-    val fullCpuJson = bySlowest.map { case (k, _) => s""""$k":${fmt(cpuByKey(k))}""" }
-      .mkString("{", ",", "}")
-    val loadJson = passLoads.map(fmt).mkString("[", ",", "]")
-    val noisyJson = noisy.map { case (k, ts) =>
-      s""""$k":${ts.map(fmt).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
-    val mode = if (coldMode) "cold" else "warm"
-    // Record which keys got the targeted re-pass (even pass count → the
-    // lower-median rule applied): a cross-round comparison can then tell a
-    // median computed over 3 passes from one computed over 4 (ADVICE r8).
-    val repassedJson = flagged.toSeq.sorted.map(k => s""""$k"""").mkString("[", ",", "]")
-    val stealJson = {
-      val end = stealTicks()
-      if (stealStart < 0 || end < 0) "-1"
-      else {
-        val wallSec = (System.nanoTime() - wallStart) / 1e9
-        f"${(end - stealStart) / 100.0 / math.max(wallSec, 0.001) * 100.0}%.1f"
-      }
-    }
-    // Subset runs (key args given) must not clobber the committed full-suite
-    // record — write BENCH_FULL.json only when the whole suite ran.
-    val benchOut =
-      if (args.isEmpty && excluded.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
-    val excludedJson = excluded.map(k => s""""$k"""").mkString("[", ",", "]")
-    val mainStealJson = if (mainStealPct < 0) "-1" else f"$mainStealPct%.1f"
+    // Subset runs (key args or excludes) must not clobber the committed
+    // full-suite record.
+    val benchOut = if (fullSuite) "BENCH_FULL.json" else "BENCH_SUBSET.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(benchOut),
       (s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},""" +
-        s""""reps":$reps,"stat":"median_across_passes","mode":"$mode",""" +
-        s""""cold_total":${fmt(coldTotal)},"cpu_total":${fmt(cpuTotal)},"quiet_wait_s":${fmt(quietWaitedSec)},""" +
-        s""""loadavg":$loadJson,"steal_pct_cpu":$mainStealJson,"steal_pct_cpu_with_adj":$stealJson,""" +
-        s""""contended":$contended,"adjudicated":$adjudicatedJson,"noisy":$noisyJson,""" +
-        s""""failed":$failedJson,"excluded":$excludedJson,"repassed":$repassedJson,"floor_cmp":$floorComparable,"vs_floor":$vsFloorJson,""" +
-        s""""queries":$fullJson,"queries_cpu":$fullCpuJson,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
+        s""""reps":$reps,"stat":"first_call_median","cpu_total":${fmt(cpuTotal)},""" +
+        s""""loadavg":${passLoads.map(fmt).mkString("[", ",", "]")},""" +
+        s""""steal_pct_cpu":$stealJson,"contended":$contended,""" +
+        s""""failed":${arr(failed.sorted.toSeq)},"excluded":${arr(excluded)},""" +
+        s""""count_changed":${arr(countChanged)},""" +
+        s""""queries":${bySlowest.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")},""" +
+        s""""queries_cpu":${bySlowest.map { case (k, _) => s""""$k":${fmt(cpuByKey(k))}""" }.mkString("{", ",", "}")},""" +
+        s""""counts":$countsJson,"shuffle_bytes":$bytesJson,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
     // Guardrail: a degenerate operator must never hide inside a green round.
     val slow = bySlowest.takeWhile(_._2 > SlowGuardSec)
     slow.foreach { case (k, v) =>
       System.err.println(f"WARNING: query '$k' took $v%.1f s (> $SlowGuardSec%.0f s guardrail) — scale-suspect")
     }
-    // Final line via BenchReport: every variable-length field hard-capped
-    // (top-10 per-query maps, counts instead of full diagnostic lists) so
-    // the driver's 2,000-char tail capture ALWAYS contains the complete,
-    // parseable JSON object — the r09-r17 lines outgrew it and left every
-    // PERF_rNN.json per-query comparison empty (r17 verdict #1). The full
-    // detail (complete per-query maps, loadavg, adjudication medians, raw
-    // noisy pass times) is in BENCH_FULL.json, written above.
+    // Final line via BenchReport: every variable-length field hard-capped so
+    // a 2,000-char tail capture of the output always holds the complete,
+    // parseable JSON object. The full detail is in BENCH_FULL.json above.
     println(BenchReport.finalLine(
-      total = total, nQueries = results.size, reps = reps, mode = mode,
-      coldTotal = coldTotal, cpuTotal = cpuTotal, quietWaitSec = quietWaitedSec,
-      stealPctJson = mainStealJson, contended = contended,
-      nNoisy = noisy.size, nRepassed = flagged.size, nAdjudicated = adjudicated.size,
-      floorCmp = floorComparable,
-      vsFloor = overFloor.toSeq.sortBy(-_._2),
+      total = total, nQueries = results.size, reps = reps, cpuTotal = cpuTotal,
+      stealPctJson = stealJson, contended = contended, countChanged = countChanged,
       failed = failed.toSeq, excluded = excluded, slowOver60s = slow.map(_._1),
       queriesBySlowest = bySlowest, cpuByKey = cpuByKey, sf = sfDir))
   }

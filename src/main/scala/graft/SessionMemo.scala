@@ -37,13 +37,22 @@ object SessionMemo {
     * reentrant. A lost putIfAbsent race is left as-is: Spark's CacheManager
     * keys cached entries by logical-plan equality, so the loser's cache()
     * of an identical plan is a no-op (no redundant copy exists to free) and
-    * an unpersist() here would evict the WINNER's entry too. */
+    * an unpersist() here would evict the WINNER's entry too.
+    *
+    * The cache is loaded before it is returned. A join over a cache still
+    * being built is sized from the plan estimate, over a loaded one by its
+    * real size, and which of the two AQE sees when it re-plans depends on
+    * task timing — so planning over an unloaded cache makes the plan
+    * (broadcast or shuffle), and with it the exchange and shuffle-record
+    * counts Bench checks, vary from run to run. AQE builds every cached
+    * partition either way, so loading first adds no build work. */
   def cache(spark: SparkSession, tag: String)(build: => DataFrame): DataFrame = {
     val m = per(frames, spark)
     val existing = m.get(tag)
     if (existing != null) existing
     else {
       val built = build.cache()
+      built.count(): Unit
       val prev = m.putIfAbsent(tag, built)
       if (prev != null) prev else built
     }
@@ -83,9 +92,9 @@ object SessionMemo {
   }
 
   /** Drop this session's memoized frames (unpersisting their cached blocks)
-    * and directory registrations. Bench's cold mode calls this between keys
-    * so every measurement pays the operator's true first-touch cost instead
-    * of a warm cache hit. */
+    * and directory registrations. Bench calls this before every measured
+    * call so each one pays the operator's true first-touch cost instead of
+    * a warm cache hit. */
   def clear(spark: SparkSession): Unit = {
     val m = frames.remove(spark)
     if (m != null)

@@ -24,8 +24,8 @@ object Relational {
     * the dataset are both a leak and benchmark noise. */
   private val stagingDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Forget staged dirs so the next call re-writes them (Bench cold mode;
-    * dirs themselves are reaped by scratchDir's exit hook). */
+  /** Forget staged dirs so the next call re-writes them (before every Bench
+    * call; dirs themselves are reaped by scratchDir's exit hook). */
   def clearStaged(): Unit = stagingDirs.clear()
 
   private[ops] def staged(sfDir: String, tag: String)(write: String => Unit): String =

@@ -65,9 +65,9 @@ object StreamOps {
   private val stagedRuns = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Forget completed runs so the next call re-executes the full streaming
-    * pipeline (fresh staging + checkpoint dirs). Bench's cold mode uses
-    * this; the committed dirs themselves are reaped by scratchDir's exit
-    * hook. */
+    * pipeline (fresh staging + checkpoint dirs). Bench calls this before
+    * every measured call; the committed dirs themselves are reaped by
+    * scratchDir's exit hook. */
   def clearStagedRuns(): Unit = stagedRuns.clear()
 
   /** `stream_file_pipeline` — the full Structured Streaming loop as one

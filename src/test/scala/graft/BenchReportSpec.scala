@@ -17,11 +17,8 @@ class BenchReportSpec extends AnyFunSuite {
     val keys = (0 until nKeys).map(i => f"${longest}_$i%03d")
     val slowFirst = keys.map(k => k -> 9999.999)
     BenchReport.finalLine(
-      total = 999999.999, nQueries = nKeys, reps = 11, mode = "warm",
-      coldTotal = 999999.999, cpuTotal = 999999.999, quietWaitSec = 600.0,
-      stealPctJson = "455.9", contended = true,
-      nNoisy = nKeys, nRepassed = nKeys, nAdjudicated = nKeys, floorCmp = true,
-      vsFloor = keys.map(k => k -> 99.99),
+      total = 999999.999, nQueries = nKeys, reps = 11, cpuTotal = 999999.999,
+      stealPctJson = "455.9", contended = true, countChanged = keys,
       failed = keys, excluded = keys, slowOver60s = keys,
       queriesBySlowest = slowFirst,
       cpuByKey = slowFirst.toMap,
@@ -49,8 +46,8 @@ class BenchReportSpec extends AnyFunSuite {
     // capped lists carry their true sizes alongside
     assert(node.get("n_failed").asInt() == 206)
     assert(node.get("failed").size() == BenchReport.FailedCap)
-    assert(node.get("n_over_floor").asInt() == 206)
-    assert(node.get("vs_floor").size() == BenchReport.VsFloorCap)
+    assert(node.get("n_count_changed").asInt() == 206)
+    assert(node.get("count_changed").size() == BenchReport.CountChangedCap)
     assert(node.get("n_excluded").asInt() == 206)
     assert(node.get("contended").asBoolean())
   }
@@ -59,11 +56,9 @@ class BenchReportSpec extends AnyFunSuite {
     val keys = SparkEntry.queries.keys.toSeq.sorted
     val slowFirst = keys.map(k => k -> 3.456).sortBy(-_._2)
     val line = BenchReport.finalLine(
-      total = 79.561, nQueries = keys.size, reps = 3, mode = "warm",
-      coldTotal = 165.901, cpuTotal = 117.533, quietWaitSec = 0.0,
-      stealPctJson = "0.5", contended = false,
-      nNoisy = 0, nRepassed = 0, nAdjudicated = 0, floorCmp = true,
-      vsFloor = Seq.empty, failed = Seq.empty, excluded = Seq.empty,
+      total = 79.561, nQueries = keys.size, reps = 3, cpuTotal = 117.533,
+      stealPctJson = "0.5", contended = false, countChanged = Seq.empty,
+      failed = Seq.empty, excluded = Seq.empty,
       slowOver60s = Seq.empty, queriesBySlowest = slowFirst,
       cpuByKey = slowFirst.toMap, sf = "/root/testdata/sf0.1")
     info(s"healthy line length: ${line.length} chars")
