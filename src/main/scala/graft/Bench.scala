@@ -11,9 +11,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * `SparkEntry.queries` key against `SPARK_GRAFT_SF_DIR` and prints ONE
   * compact JSON line as the LAST line of output.
   *
-  * Every measured call is a first call: before each key, every pass clears
-  * the session memo, the staged dirs and stream runs, and Spark's cache, in
-  * a JVM whose codegen and write path were warmed once up front. The
+  * Every measured call is a first call: operators keep no state across
+  * calls, and before each key every pass clears Spark's cache, in a JVM
+  * whose codegen and write path were warmed once up front. The
   * headline `value` is the sum over keys of the median first call across
   * passes — the cost a first caller pays. Wall and executor-CPU medians are
   * reported with the run's own steal stamp next to them.
@@ -134,12 +134,9 @@ object Bench {
       try { org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark); true }
       catch { case _: java.util.concurrent.TimeoutException => false }
 
-    /** Runs `fn(spark, sfDir).count()` as a first call: every memo and
-      * cache an earlier call could have left behind is cleared first. */
+    /** Runs `fn(spark, sfDir).count()` as a first call: any Spark cache an
+      * earlier call could have left behind is cleared first. */
     def firstCall(fn: (SparkSession, String) => DataFrame, sfDir: String): Call = {
-      graft.SessionMemo.clear(spark)
-      graft.ops.Relational.clearStaged()
-      graft.streaming.StreamOps.clearStagedRuns()
       spark.catalog.clearCache()
       val before = drained()
       val (cpu0, rec0, bytes0, exch0) =

@@ -47,11 +47,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** A /tmp staging directory removed when the JVM exits. The write-then-read
-    * operators memoize one staging dir per (JVM, sfDir, tag) — correct within
-    * a run, but without the hook every Verify/Bench/test JVM leaks its dirs
-    * into /tmp (observed: ~1,000 dirs across a working session). Nothing
-    * reads the staged data after the JVM ends: Verify persists results to
-    * its own outDir and the next JVM re-stages. */
+    * operators stage a fresh dir on every call; without the hook every
+    * Verify/Bench/test JVM leaks its dirs into /tmp (observed: ~1,000 dirs
+    * across a working session). Nothing reads the staged data after the JVM
+    * ends: Verify persists results to its own outDir. */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   // ONE hook for all scratch dirs — a hook per dir grows the JVM's shutdown
   // hook set without bound in a long-lived process.
@@ -77,17 +76,14 @@ object Tables {
     * head(), and on a ragged corpus picks the widest row so shorter vectors
     * fail loudly downstream (null-poisoned zip_with → verify failure) rather
     * than silently truncating the basis to whatever row head() returned. */
-  def embeddingDim(spark: SparkSession, sfDir: String): Int =
-    // memoized: four embedding operators probe the dim at plan-construction
-    // time, and without the memo each invocation re-runs the bounded
-    // aggregate (the repeat-job class the decontaminate probe fixed in r10)
-    SessionMemo.scalar(spark, s"$sfDir#embedding_dim") {
-      import org.apache.spark.sql.functions.{col, max, size}
-      val row = t(spark, sfDir, "embeddings").agg(max(size(col("embedding")))).head()
-      require(!row.isNullAt(0),
-        s"embeddings table at $sfDir is empty — cannot derive vector dimensionality")
-      row.getInt(0)
-    }
+  def embeddingDim(spark: SparkSession, sfDir: String): Int = {
+    // a bounded aggregate, probed at plan construction
+    import org.apache.spark.sql.functions.{col, max, size}
+    val row = t(spark, sfDir, "embeddings").agg(max(size(col("embedding")))).head()
+    require(!row.isNullAt(0),
+      s"embeddings table at $sfDir is empty — cannot derive vector dimensionality")
+    row.getInt(0)
+  }
 
   // ---------------------------------------------------------------------------
   // Reference Ethereum schemas (FIXTURES.md §A). decimal(38,0) for uint256

@@ -49,8 +49,7 @@ object EtlOps {
     // removed-three-times global-window rule — use the same distributed
     // prefix sum (running count of ONES) every unbounded ranking uses.
     graft.ops.PrefixSum.exclusiveRunningSum(spark,
-        all.withColumn("one", lit(1L)), Seq("start_block"), "one",
-        "batch_id", "refplan#sorted")
+        all.withColumn("one", lit(1L)), Seq("start_block"), "one", "batch_id")
       .select(col("batch_id"), col("start_block"), col("end_block"))
       .orderBy("start_block")
   }
@@ -374,21 +373,20 @@ object EtlOps {
 
   /** Persisted aggregate state for [[etlIncrementalAgg]]: the per-priority
     * (n, total) summary of the HISTORICAL order slice (o_orderkey % 10 ≠ 0),
-    * written to parquet once per (session, dir) — the materialized-view
+    * written to a fresh parquet dir on every call — the materialized-view
     * state a 100 TB pipeline carries between runs, mirroring how
     * dedup_incremental persists its signature index. Decimal sums: exact,
     * order-independent, and (unlike averages) mergeable. */
-  private def aggStateDir(spark: SparkSession, dir: String): String =
-    graft.SessionMemo.dir(spark, s"$dir#agg_state") {
-      val p = graft.Tables.scratchDir("agg_state")
-      t(spark, dir, "orders")
-        .filter(col("o_orderkey") % 10 =!= 0)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).as("total"))
-        .write.mode("overwrite").parquet(s"$p/state")
-      p
-    }
+  private def aggStateDir(spark: SparkSession, dir: String): String = {
+    val p = graft.Tables.scratchDir("agg_state")
+    t(spark, dir, "orders")
+      .filter(col("o_orderkey") % 10 =!= 0)
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"),
+        sum(col("o_totalprice").cast(DecimalType(18, 2))).as("total"))
+      .write.mode("overwrite").parquet(s"$p/state")
+    p
+  }
 
   /** `etl_incremental_agg` — incremental MATERIALIZED-VIEW maintenance for
     * a grouped aggregate: merge yesterday's persisted per-group (count,

@@ -232,30 +232,29 @@ object Snapshots {
   /** Year-of-order-date as the manifest stats key. */
   private def yearKey = year(col("o_orderdate")).cast(LongType)
 
-  /** Build the demo table once per (session, sf dir): three commits over
+  /** Build a fresh demo table on every call: three commits over
     * the orders table —
     *   v1: filesets y1995 + y1996 (two range-disjoint file groups),
     *   v2: append fileset y1997-98 (old files referenced, not rewritten),
     *   v3: copy-on-write delete — y1996 rewritten without '1-URGENT'
     *       rows; y1995/y1997-98 files carried over untouched.
     */
-  private[graft] def demoTable(spark: SparkSession, dir: String): String =
-    graft.SessionMemo.dir(spark, s"$dir#snapshots") {
-      val root = graft.Tables.scratchDir("snapshots")
-      val orders = t(spark, dir, "orders")
-      def slice(yLo: Int, yHi: Int) =
-        orders.filter(yearKey.between(yLo, yHi))
-      val a = writeFileset(slice(1995, 1995), root, "y1995", yearKey)
-      val b = writeFileset(slice(1996, 1996), root, "y1996", yearKey)
-      commit(root, 1, a ++ b)
-      val c = writeFileset(slice(1997, 1998), root, "y1997_98", yearKey)
-      commit(root, 2, a ++ b ++ c)
-      val b2 = writeFileset(
-        slice(1996, 1996).filter(col("o_orderpriority") =!= "1-URGENT"),
-        root, "y1996_cow", yearKey)
-      commit(root, 3, a ++ b2 ++ c)
-      root
-    }
+  private[graft] def demoTable(spark: SparkSession, dir: String): String = {
+    val root = graft.Tables.scratchDir("snapshots")
+    val orders = t(spark, dir, "orders")
+    def slice(yLo: Int, yHi: Int) =
+      orders.filter(yearKey.between(yLo, yHi))
+    val a = writeFileset(slice(1995, 1995), root, "y1995", yearKey)
+    val b = writeFileset(slice(1996, 1996), root, "y1996", yearKey)
+    commit(root, 1, a ++ b)
+    val c = writeFileset(slice(1997, 1998), root, "y1997_98", yearKey)
+    commit(root, 2, a ++ b ++ c)
+    val b2 = writeFileset(
+      slice(1996, 1996).filter(col("o_orderpriority") =!= "1-URGENT"),
+      root, "y1996_cow", yearKey)
+    commit(root, 3, a ++ b2 ++ c)
+    root
+  }
 
   /** Two committers RACING from the same observed base — both filesets are
     * pre-written (data-file writes never conflict; only the manifest
@@ -265,32 +264,31 @@ object Snapshots {
     * of the winner, and lands v3. WHICH fileset wins is scheduling-
     * dependent; the final table content and version count are not — which
     * is what makes the result oracle-checkable. */
-  private[graft] def occDemoTable(spark: SparkSession, dir: String): String =
-    graft.SessionMemo.dir(spark, s"$dir#snapshots_occ") {
-      val root = graft.Tables.scratchDir("snapshots_occ")
-      val orders = t(spark, dir, "orders")
-      def slice(y: Int) = orders.filter(yearKey === y)
-      commit(root, 1, writeFileset(slice(1995), root, "base_1995", yearKey))
-      val contenders = Seq(
-        writeFileset(slice(1996), root, "append_1996", yearKey),
-        writeFileset(slice(1997), root, "append_1997", yearKey))
-      val gate = new java.util.concurrent.CountDownLatch(contenders.size)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(contenders.size)
-      try {
-        val pending = contenders.map { fs =>
-          pool.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long = {
-              gate.countDown(); gate.await() // maximize publish overlap
-              commitRetry(root, current => current ++ fs)
-            }
-          })
-        }
-        val versions = pending.map(_.get()).sorted
-        require(versions == Seq(2L, 3L),
-          s"racing appends must land consecutive versions, got $versions")
-      } finally { pool.shutdown(): Unit }
-      root
-    }
+  private[graft] def occDemoTable(spark: SparkSession, dir: String): String = {
+    val root = graft.Tables.scratchDir("snapshots_occ")
+    val orders = t(spark, dir, "orders")
+    def slice(y: Int) = orders.filter(yearKey === y)
+    commit(root, 1, writeFileset(slice(1995), root, "base_1995", yearKey))
+    val contenders = Seq(
+      writeFileset(slice(1996), root, "append_1996", yearKey),
+      writeFileset(slice(1997), root, "append_1997", yearKey))
+    val gate = new java.util.concurrent.CountDownLatch(contenders.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(contenders.size)
+    try {
+      val pending = contenders.map { fs =>
+        pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = {
+            gate.countDown(); gate.await() // maximize publish overlap
+            commitRetry(root, current => current ++ fs)
+          }
+        })
+      }
+      val versions = pending.map(_.get()).sorted
+      require(versions == Seq(2L, 3L),
+        s"racing appends must land consecutive versions, got $versions")
+    } finally { pool.shutdown(): Unit }
+    root
+  }
 
   /** `etl_occ_append` — the multi-writer commit gate: after the race in
     * [[occDemoTable]], the latest snapshot must hold base + BOTH appends

@@ -99,17 +99,15 @@ object Bpe {
   }
 
   /** The (pretoken, freq) vocabulary table — the corpus' only full scan in
-    * this family, memoized so train/encode/pair-count share one cached
-    * copy. Map-side partial aggregation keeps the exchange at |vocab| rows.
+    * this family, aggregated once per training or pair-count call.
+    * Map-side partial aggregation keeps the exchange at |vocab| rows.
     * Declarative regexp_extract_all (codegen'd) so the DuckDB oracle can
     * run the same extraction verbatim. */
   private[graft] def pretokenFreq(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cache(spark, s"$dir#bpe_pretokfreq") {
-      t(spark, dir, "documents")
-        .select(explode(regexp_extract_all(col("text"), lit(PretokenPattern), lit(0))).as("tok"))
-        .groupBy("tok")
-        .agg(count(lit(1)).as("freq"))
-    }
+    t(spark, dir, "documents")
+      .select(explode(regexp_extract_all(col("text"), lit(PretokenPattern), lit(0))).as("tok"))
+      .groupBy("tok")
+      .agg(count(lit(1)).as("freq"))
 
   /** `text_bpe_pair_counts` — the BPE training statistic at iteration 0:
     * adjacent BYTE-pair frequencies over the pre-token vocabulary, weighted
@@ -175,41 +173,40 @@ object Bpe {
     * loop's statistic, and BpeSpec mirrors this whole procedure
     * sequentially on the driver and asserts equality.
     */
-  def trainedMerges(spark: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] =
-    graft.SessionMemo.scalar(spark, s"$dir#bpe_merges") {
-      import spark.implicits._
-      // base symbols: one per UTF-8 byte, through the byte→unicode table
-      var syms: Dataset[(Array[String], Long)] = pretokenFreq(spark, dir)
-        .as[(String, Long)]
-        .map { case (tok, f) => (toByteSymbols(tok), f) }
-        .cache()
-      val merges = Vector.newBuilder[(Long, String, String, String, Long)]
-      var rank = 1L
-      while (rank <= Merges) {
-        val top = syms
-          .flatMap { case (s, f) => pairsOf(s).map { case (a, b) => (a, b, f) } }
-          .toDF("left", "right", "f")
-          .groupBy("left", "right").agg(sum("f").as("n"))
-          .orderBy(col("n").desc, col("left"), col("right"))
-          .limit(1)
-          .as[(String, String, Long)]
-          .collect()
-        top.headOption match {
-          case Some((a, b, n)) =>
-            merges += ((rank, a, b, a + b, n))
-            val next = syms
-              .map { case (s, f) => (applyMerge(s, a, b), f) }
-              .cache()
-            next.count(): Unit // materialize before dropping the parent cache
-            syms.unpersist()
-            syms = next
-          case None => rank = Merges // degenerate corpus: nothing left to merge
-        }
-        rank += 1
+  def trainedMerges(spark: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] = {
+    import spark.implicits._
+    // base symbols: one per UTF-8 byte, through the byte→unicode table
+    var syms: Dataset[(Array[String], Long)] = pretokenFreq(spark, dir)
+      .as[(String, Long)]
+      .map { case (tok, f) => (toByteSymbols(tok), f) }
+      .cache()
+    val merges = Vector.newBuilder[(Long, String, String, String, Long)]
+    var rank = 1L
+    while (rank <= Merges) {
+      val top = syms
+        .flatMap { case (s, f) => pairsOf(s).map { case (a, b) => (a, b, f) } }
+        .toDF("left", "right", "f")
+        .groupBy("left", "right").agg(sum("f").as("n"))
+        .orderBy(col("n").desc, col("left"), col("right"))
+        .limit(1)
+        .as[(String, String, Long)]
+        .collect()
+      top.headOption match {
+        case Some((a, b, n)) =>
+          merges += ((rank, a, b, a + b, n))
+          val next = syms
+            .map { case (s, f) => (applyMerge(s, a, b), f) }
+            .cache()
+          next.count(): Unit // materialize before dropping the parent cache
+          syms.unpersist()
+          syms = next
+        case None => rank = Merges // degenerate corpus: nothing left to merge
       }
-      syms.unpersist()
-      merges.result()
+      rank += 1
     }
+    syms.unpersist()
+    merges.result()
+  }
 
   /** `text_bpe_train` — the trained merge table as a DataFrame. */
   def textBpeTrain(spark: SparkSession, dir: String): DataFrame = {
@@ -291,7 +288,7 @@ object Bpe {
     * training bins by SUBWORD count (`packBestFit`). This is the frame a
     * trainer consumes: per surviving document its language, subword budget,
     * and bin assignment. Composition adds one map-only encode pass and the
-    * packing hash shuffle on top of the (memoized) curation stages — no new
+    * packing hash shuffle on top of the (checkpointed) curation stages — no new
     * corpus-wide shuffles. Stateful packing → rows-only; BpeSpec recomposes
     * the three components and asserts row-for-row equality. */
   /** Training sequence length for [[llmCorpusTokenized]]'s bins — the
@@ -310,12 +307,11 @@ object Bpe {
     // once PER REFERENCE per action (measured 18.1 s vs 3.8 s component sum
     // at 10×, PLANS.md probe #13). Materializing the curation output before
     // tokenization is also exactly what the staged operational form does
-    // (CurationPipeline checkpoints); here the in-session cache is the
+    // (CurationPipeline checkpoints); here the local checkpoint is the
     // equivalent seam.
-    val survivors = graft.SessionMemo.cache(spark, s"$dir#tokenized_survivors") {
-      Dedup.llmCorpusPipeline(spark, dir)
-        .select(col("doc_id"), col("lang"), col("text_cut"))
-    }
+    val survivors = Dedup.llmCorpusPipeline(spark, dir)
+      .select(col("doc_id"), col("lang"), col("text_cut"))
+      .localCheckpoint()
     val enc = encodeCounts(
       survivors.select(col("doc_id"), col("text_cut")).as[(Long, String)], rules)
       .select(col("doc_id"), col("n_subwords"))

@@ -23,9 +23,10 @@ import graft.Tables.t
   *    codegen'd) in Spark, and the declarative split + cached token arrays +
   *    per-element lambdas formulation costs 10-20× the primitive JVM loop
   *    (28-44 s of CPU at 10× for the same result).
-  *  - Signature frames are cached: both sides of a band self-join otherwise
-  *    recompute the whole pass. At 100 TB the same pipeline checkpoints
-  *    that intermediate to Parquet instead.
+  *  - Signature frames are locally checkpointed: both sides of a band
+  *    self-join and the verify joins otherwise recompute the whole pass.
+  *    The checkpoint lives as long as the frame the operator returns; at
+  *    100 TB the same pipeline checkpoints that intermediate to Parquet.
   *  - Verification joins use [[cpuStageRepartition]] between the two
   *    id→payload joins: AQE coalesces the tiny candidate shuffle to one
   *    partition, and Catalyst sinks the CPU-heavy verify predicate
@@ -38,18 +39,6 @@ import graft.Tables.t
   */
 object Dedup {
 
-  /** Memoized cached intermediates, one per (session, sfDir, tag): the
-    * signature/shingle frames below are `.cache()`d because both sides of a
-    * band self-join (and the verify joins) reuse them, but a fresh cached
-    * copy per *call* accumulates redundant executor memory for the life of
-    * the JVM when Verify/Bench/tests invoke the same operator repeatedly
-    * (dedup_ngram_jaccard and dedup_containment even share the same shingle
-    * sets). Same contract as Relational.staged: one materialization per
-    * (session, input), repeat calls reuse it. Session scoping + eviction
-    * live in [[graft.SessionMemo]]. */
-  private def memoCache(spark: SparkSession, tag: String)(build: => DataFrame): DataFrame =
-    graft.SessionMemo.cache(spark, s"dedup#$tag")(build)
-
   /** Tokenizer for every typed hot loop in this family: limit -1 keeps
     * trailing empty tokens, matching Spark SQL `split()` (limit -1) and the
     * DuckDB oracles' `string_split` exactly. Java's default
@@ -61,10 +50,6 @@ object Dedup {
     * codePointCount on the Spark side. */
   private def toks(text: String): Array[String] =
     if (text == null) Array.empty[String] else text.split(" ", -1)
-
-  /** SPARK_GRAFT_CC_LOG=1 → per-round stderr timing of the closure loops
-    * (scale-probe instrumentation; off in normal runs). */
-  private val ccLog = sys.env.get("SPARK_GRAFT_CC_LOG").contains("1")
 
   /** Explicit-width hash repartition for a stage about to run CPU-heavy
     * per-row work on a small row count. A user-specified partition count
@@ -228,10 +213,9 @@ object Dedup {
     * one md5 + ids per passage occurrence, never the text. */
   def dedupParagraph(spark: SparkSession, dir: String): DataFrame = {
     val chunkLen = 20
-    val toksDf = memoCache(spark, s"$dir#paragraph_toks") {
-      t(spark, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tk"))
-    } // barrier: keeps split() out of the chunk lambdas (see shinglesOf)
+    val toksDf = t(spark, dir, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .localCheckpoint() // barrier: keeps split() out of the chunk lambdas (see shinglesOf)
     val nChunks = ceil(size(col("tk")) / lit(chunkLen.toDouble)).cast(IntegerType)
     val chunks = toksDf
       .select(col("doc_id"),
@@ -289,9 +273,8 @@ object Dedup {
     val M = 2147483647L // 2^31 - 1 (Mersenne prime)
     val mixA = Array.tabulate(nHashes)(p => ((p + 1) * 2654435761L) % M)
     val mixB = Array.tabulate(nHashes)(p => p * 40503L + 1L)
-    val docs = memoCache(spark, s"$dir#editdist_docs") {
-      t(spark, dir, "documents").select(col("doc_id"), col("text"))
-    } // reused by the signature pass + both sides of the verify join
+    // a plain scan: the signature pass and both verify sides re-read it
+    val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
 
     // p-th min-hash: min over distinct word-3-gram shingles of
     // (a_p·h + b_p) mod (2³¹−1), where h = (first 15 hex digits of
@@ -305,7 +288,7 @@ object Dedup {
     // min over the distinct set, so no dedup pass is needed. Emit one
     // fixed-width row per (band, length-bucket ∈ {own, next}).
     import spark.implicits._
-    val banded = memoCache(spark, s"$dir#editdist_banded") { docs.as[(Long, String)].mapPartitions { rows =>
+    val banded = docs.as[(Long, String)].mapPartitions { rows =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val sb = new java.lang.StringBuilder(64)
       rows.flatMap { case (docId, text) =>
@@ -338,7 +321,10 @@ object Dedup {
         }
       }
     }.toDF("doc_id", "band", "lbk", "h1", "h2")
-    } // both sides of the self-join: uncached, the whole digest pass runs twice
+      // both sides of the self-join read it: at small scale the join
+      // broadcasts one side, so no exchange is shared and, unchecked, the
+      // digest pass would run twice
+      .localCheckpoint()
 
     val candidates = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.lbk") === col("y.lbk") &&
@@ -387,8 +373,7 @@ object Dedup {
     * verification is a set intersection on those arrays (equal to string
     * Jaccard up to 64-bit collisions, ~1e-14 per pair). */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sigDocs = minhashSignatureIndex(spark, t(spark, dir, "documents"),
-      Some(s"$dir#minhash_sigs"))
+    val sigDocs = minhashSignatureIndex(spark, t(spark, dir, "documents"))
 
     val bands = bandsOf(sigDocs)
 
@@ -421,8 +406,7 @@ object Dedup {
     * (LlmOpsSpec pins output equality with the classic path on testdata).
     */
   def dedupMinhashOph(spark: SparkSession, dir: String): DataFrame = {
-    val sigDocs = ophSignatureIndex(spark, t(spark, dir, "documents"),
-      Some(s"$dir#oph_sigs"))
+    val sigDocs = ophSignatureIndex(spark, t(spark, dir, "documents"))
 
     val bands = bandsOf(sigDocs)
 
@@ -439,8 +423,7 @@ object Dedup {
     * ((doc_id, shs, sigs)) so the banding join and the exact verification
     * are shared verbatim. One mix per shingle; 64 bins; rotation
     * densification for empty bins. */
-  def ophSignatureIndex(spark: SparkSession, documents: DataFrame,
-                        memoTag: Option[String] = None): DataFrame = {
+  def ophSignatureIndex(spark: SparkSession, documents: DataFrame): DataFrame = {
     val nBins = 64
     val bandRows = 4
     val nBands = nBins / bandRows
@@ -451,7 +434,7 @@ object Dedup {
     val hopC = 0xBF58476D1CE4E5B9L // per-hop offset for densified copies
 
     import spark.implicits._
-    def build: DataFrame = documents
+    documents
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].mapPartitions { rows =>
         val sb = new java.lang.StringBuilder(64)
@@ -484,10 +467,7 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "shs", "sigs")
-    memoTag match {
-      case Some(tag) => memoCache(spark, tag)(build)
-      case None => build.cache()
-    }
+      .localCheckpoint() // the band pass + both verification sides read it
   }
 
   /** Explode a signature frame into one (doc_id, band, sig) row per band —
@@ -562,8 +542,7 @@ object Dedup {
       sig
     }
 
-  def minhashSignatureIndex(spark: SparkSession, documents: DataFrame,
-                            memoTag: Option[String] = None): DataFrame = {
+  def minhashSignatureIndex(spark: SparkSession, documents: DataFrame): DataFrame = {
     val nHashes = 64
     val bandRows = 4
     val nBands = nHashes / bandRows
@@ -594,14 +573,10 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "shs", "sigs")
-    // band pass + both verification sides reuse the frame → cache; memoize
-    // per (session, corpus) when dir-bound so repeat calls share one copy
-    memoTag match {
-      case Some(tag) => memoCache(spark, tag)(build)
-      // a streaming documents frame cannot cache (its single consumer,
-      // the band-claim stream, reads it once per micro-batch anyway)
-      case None => if (documents.isStreaming) build else build.cache()
-    }
+    // band pass + both verification sides read the frame → checkpoint; a
+    // streaming documents frame cannot (its single consumer, the band-claim
+    // stream, reads it once per micro-batch anyway)
+    if (documents.isStreaming) build else build.localCheckpoint()
   }
 
   /** `dedup_ngram_jaccard` — near-dup pairs via an inverted index on hashed
@@ -635,7 +610,7 @@ object Dedup {
   // oracle — the oracles brute-force string-set overlap, and hash-set
   // overlap equals string overlap up to 64-bit collisions (~1e-14/pair).
   // Shared by dedupNgramJaccard and dedupContainment.
-  private[graft] def hashedShingleSets(spark: SparkSession, dir: String): DataFrame = memoCache(spark, s"$dir#shingle5") {
+  private[graft] def hashedShingleSets(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -668,8 +643,8 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "shs")
-  } // memoCache: reused by the posting pass + both verification sides, and
-    // shared across dedupNgramJaccard / dedupContainment invocations
+      .localCheckpoint() // the posting pass + both verification sides read it
+  }
 
   // Inverted index without an aggregation operator: most shingles are
   // unique to one document, so a collect_list groupBy materializes ~|corpus
@@ -809,8 +784,8 @@ object Dedup {
     * `shs` must be (doc_id: Long, shs: sorted distinct Array[Long]).
     *
     * `minIdBound` restricts pair GENERATION to pairs whose smaller doc_id
-    * is < the bound, and `indexTag` memoizes the (corpus-wide) prefix
-    * index so a staged caller pays the index build once. Exactness under
+    * is < the bound, and `prefixIndex` passes in a prebuilt (corpus-wide)
+    * [[setsimPrefixIndex]] so a staged caller pays the index build once. Exactness under
     * the bound: a pair (a, b) with min(a, b) < K survives, so for every
     * document with doc_id < K the restricted output contains its COMPLETE
     * J ≥ t pair set — [[graft.llm.Similarity.simHardNegatives]] exploits
@@ -837,14 +812,10 @@ object Dedup {
 
   private[graft] def setsimPrefixPairs(
       spark: SparkSession, shs: DataFrame, Num: Int, Den: Int,
-      minIdBound: Long = Long.MaxValue, indexTag: Option[String] = None): DataFrame = {
+      minIdBound: Long = Long.MaxValue, prefixIndex: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
 
-    val prefix = indexTag match {
-      case Some(tag) => memoCache(spark, s"$tag#prefix_${Num}_$Den")(
-        setsimPrefixIndex(shs, Num, Den))
-      case None      => setsimPrefixIndex(shs, Num, Den)
-    }
+    val prefix = prefixIndex.getOrElse(setsimPrefixIndex(shs, Num, Den))
 
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val pairs = prefix
@@ -907,17 +878,16 @@ object Dedup {
     // (1.45 G vs 319 M measured), while below the switch both are trivial
     // and the 4-row fan-out is cheaper. Both schemes are pigeonhole-EXACT
     // for Hamming ≤ 3 (spec-pinned equal), so the switch changes cost,
-    // never the answer. The count is on the memoized fingerprint frame —
-    // it warms the cache both join sides reuse.
+    // never the answer. The count reads the checkpointed fingerprints.
     simhashPairs(sim, manku = sim.count() > SimhashMankuSwitchDocs)
   }
 
-  /** The memoized FNV-1a fingerprint pass behind [[dedupSimhash]] —
-    * exposed so [[DensityProbe]] measures candidate volume on the real
-    * fingerprints. */
+  /** The FNV-1a fingerprint pass behind [[dedupSimhash]], checkpointed
+    * (the count and both join sides read it) — exposed so [[DensityProbe]]
+    * measures candidate volume on the real fingerprints. */
   private[graft] def simhashFingerprints(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    memoCache(spark, s"$dir#simhash_fp") { healScanStarvation(
+    healScanStarvation(
       t(spark, dir, "documents").select(col("doc_id"), col("text")), col("doc_id"))
       .as[(Long, String)].mapPartitions { rows =>
       rows.map { case (docId, text) =>
@@ -941,7 +911,7 @@ object Dedup {
         (docId, fp)
       }
     }.toDF("doc_id", "simhash")
-    } // both sides of the block self-join: uncached, the vote pass runs twice
+      .localCheckpoint()
   }
 
   /** Above this many documents, [[dedupSimhash]] switches its candidate
@@ -1116,31 +1086,27 @@ object Dedup {
   /** The "new batch" split used by every incremental operator here. */
   private def isNewDoc = col("doc_id") % 10 === 0
 
-  /** Build (once per JVM+corpus) and return the persisted corpus index
-    * directory: `sigs/` = the MinHash signature index, `digests/` = one
+  /** Build and return the persisted corpus index directory (a fresh one
+    * per call): `sigs/` = the MinHash signature index, `digests/` = one
     * sha256 content digest per non-null-text doc (the exact-duplicate
     * evidence for docs too short to shingle, and the cheap first-pass key).
     * Together they are the state an ingestion pipeline carries between
     * runs — everything the incremental paths touch on the corpus side. */
-  private def corpusIndexDir(spark: SparkSession, dir: String): String =
-    graft.SessionMemo.dir(spark, s"$dir#corpus_index") {
-      val p = graft.Tables.scratchDir("corpus_index")
-      val corpus = t(spark, dir, "documents").filter(!isNewDoc)
-      val idx = minhashSignatureIndex(spark, corpus)
-      idx.write.mode("overwrite").parquet(s"$p/sigs")
-      idx.unpersist()
-      corpus.filter(col("text").isNotNull)
-        .select(col("doc_id"), sha2(col("text"), 256).as("dg"))
-        .write.mode("overwrite").parquet(s"$p/digests")
-      p
-    }
+  private def corpusIndexDir(spark: SparkSession, dir: String): String = {
+    val p = graft.Tables.scratchDir("corpus_index")
+    val corpus = t(spark, dir, "documents").filter(!isNewDoc)
+    minhashSignatureIndex(spark, corpus).write.mode("overwrite").parquet(s"$p/sigs")
+    corpus.filter(col("text").isNotNull)
+      .select(col("doc_id"), sha2(col("text"), 256).as("dg"))
+      .write.mode("overwrite").parquet(s"$p/digests")
+    p
+  }
 
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
     val isNew = isNewDoc
     val corpusIdx = spark.read.parquet(s"${corpusIndexDir(spark, dir)}/sigs")
-    val newSigs = minhashSignatureIndex(spark, docs.filter(isNew),
-      Some(s"$dir#inc_new_sigs"))
+    val newSigs = minhashSignatureIndex(spark, docs.filter(isNew))
     val newBands = bandsOf(newSigs)
     val probe = newBands.as("x").join(bandsOf(corpusIdx).as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
@@ -1162,7 +1128,7 @@ object Dedup {
     * Gopher repeated-passage rule, run incrementally at ingest)? The naive
     * plan shuffles the ENTIRE historical passage index against every
     * incoming batch; this one summarizes the corpus side into a Bloom
-    * filter over `xxhash64(passage)`, built once per (session, corpus)
+    * filter over `xxhash64(passage)`, built on every call
     * with `df.stat.bloomFilter` (a mergeable tree-aggregate — the driver
     * holds O(bits), never rows) and shipped into the new batch's scan as a
     * `might_contain` predicate (the same `BloomFilterMightContain`
@@ -1200,11 +1166,11 @@ object Dedup {
         .select(col("doc_id"), col("pos").as("chunk_idx"), col("col").as("passage"))
     }
     val docs = t(spark, dir, "documents")
-    val hist = memoCache(spark, s"$dir#bloom_hist_passages") {
-      passages(docs.filter(!isNewDoc))
-        .select(col("doc_id").as("corpus_doc"), col("passage"))
-    }
-    val bloomBytes = graft.SessionMemo.scalar(spark, s"$dir#inc_bloom") {
+    // checkpointed: the count, the filter build and the exact join read it
+    val hist = passages(docs.filter(!isNewDoc))
+      .select(col("doc_id").as("corpus_doc"), col("passage"))
+      .localCheckpoint()
+    val bloomBytes = {
       val n = hist.count().max(1L)
       val bf = hist.select(xxhash64(col("passage")).as("h")).stat
         .bloomFilter("h", n, 0.03)
@@ -1250,12 +1216,9 @@ object Dedup {
       .filter(col("doc_id") =!= col("m"))
       .select(col("doc_id").as("doc_a"), col("m").as("doc_b"))
     val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
-    // the assignment is corpus state a pipeline persists between runs —
-    // resolve the (eager) closure once per (JVM, corpus) and reuse
-    val cc = memoCache(spark, s"$dir#clusters_cc") {
-      connectedComponents(spark, docs.select("doc_id"),
-        exactEdges.unionByName(nearEdges))
-    }
+    // eager closure; its labels come back locally checkpointed
+    val cc = connectedComponents(spark, docs.select("doc_id"),
+      exactEdges.unionByName(nearEdges))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1290,7 +1253,6 @@ object Dedup {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {
-      val tRound = System.nanoTime()
       val prop = sym.join(labels, sym("doc_b") === labels("doc_id"))
         .select(sym("doc_a").as("doc_id"), col("label"))
       val next = labels.unionByName(prop)
@@ -1300,8 +1262,6 @@ object Dedup {
         .filter(col("n.label") =!= col("p.label")).count()
       labels = next
       rounds += 1
-      if (ccLog) System.err.println(
-        f"[cc-labelprop] round $rounds: ${(System.nanoTime() - tRound) / 1e9}%.2f s, changed=$changed")
     }
     sym.unpersist()
     require(changed == 0, s"connectedComponents did not converge in $rounds rounds")
@@ -1326,10 +1286,10 @@ object Dedup {
   def dedupClustersIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
     val p = corpusIndexDir(spark, dir)
-    // "yesterday's" assignment: corpus-only clusters, resolved once per
-    // (JVM, corpus) from the persisted index halves and then reused — the
-    // state a real pipeline reads back from its last run's output
-    val corpusClusters = memoCache(spark, s"$dir#corpus_clusters") {
+    // "yesterday's" assignment: corpus-only clusters, resolved from the
+    // persisted index halves — the state a real pipeline reads back from
+    // its last run's output
+    val corpusClusters = {
       val sigs = spark.read.parquet(s"$p/sigs")
       val dgs = spark.read.parquet(s"$p/digests")
       val wD = org.apache.spark.sql.expressions.Window.partitionBy("dg")
@@ -1360,10 +1320,8 @@ object Dedup {
       .select(least(col("n.doc_id"), col("a.doc_id")).as("doc_a"),
         greatest(col("n.doc_id"), col("a.doc_id")).as("doc_b"))
       .distinct()
-    val cc = memoCache(spark, s"$dir#clusters_cc_inc") {
-      connectedComponents(spark, docs.select("doc_id"),
-        stars.unionByName(incPairs).unionByName(exactNew))
-    }
+    val cc = connectedComponents(spark, docs.select("doc_id"),
+      stars.unionByName(incPairs).unionByName(exactNew))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1390,10 +1348,8 @@ object Dedup {
       .filter(col("doc_id") =!= col("m"))
       .select(col("doc_id").as("doc_a"), col("m").as("doc_b"))
     val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
-    val cc = memoCache(spark, s"$dir#clusters_cc_star") {
-      connectedComponentsLogStar(spark, docs.select("doc_id"),
-        exactEdges.unionByName(nearEdges))
-    }
+    val cc = connectedComponentsLogStar(spark, docs.select("doc_id"),
+      exactEdges.unionByName(nearEdges))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1451,8 +1407,6 @@ object Dedup {
       changed = next.exceptAll(cur).count() + cur.exceptAll(next).count()
       cur = next
       rounds += 1
-      if (ccLog) System.err.println(
-        f"[cc-star] round $rounds: ${(System.nanoTime() - tRound) / 1e9}%.2f s, changed=$changed")
     }
     require(changed == 0, s"connectedComponentsLogStar did not converge in $rounds rounds")
     // fixpoint is a star forest: cluster = min(self, min neighbor)
@@ -1484,7 +1438,7 @@ object Dedup {
     *    keeping them would defeat the decontamination).
     *
     * Plan shape: every stage reuses its already-verified operator and the
-    * session-memoized token/shingle/gram frames underneath them, so
+    * checkpointed token/shingle/gram frames underneath them, so
     * composing the stages adds doc_id equi-joins (semi for the id-set
     * filters, one left for the cut accounting) but NO new corpus-wide
     * shuffles — the documents table is tokenized once per distinct
@@ -1532,8 +1486,8 @@ object Dedup {
     * docs; its row shows the token mass the span cuts removed from the
     * final survivors.
     *
-    * Plan shape: every per-stage verdict comes from the SAME memoized
-    * frames the pipeline itself uses (repetition keep-set, decontaminate
+    * Plan shape: every per-stage verdict comes from the SAME operators
+    * the pipeline itself runs (repetition keep-set, decontaminate
     * survivor set, cluster canonicals, cut accounting), joined once on
     * doc_id; the funnel then collapses to ONE wide aggregate row of
     * conditional sums (the [[graft.etl.EtlOps.etlQualityAudit]]
@@ -1615,8 +1569,8 @@ object Dedup {
     * 5M ids ≈ 40 MB). Over the limit the anti-join degrades to a shuffle
     * equi-join on doc_id — same correctness, one more exchange — instead of
     * a driver/executor OOM from force-broadcasting an unbounded set. The
-    * count needs the id set twice (decide + join), so it is persisted via
-    * the session memo. If the "benchmark" side ever grows beyond broadcast
+    * count needs the id set twice (decide + join), so it is locally
+    * checkpointed. If the "benchmark" side ever grows beyond broadcast
     * size the same fallback applies to the first semi-join: dropping that
     * hint yields a shuffle equi-join on the shingle hash. Both sides join
     * on the shingles' xxhash64 (never a joined string): a false
@@ -1625,28 +1579,21 @@ object Dedup {
     * the join keys drop from ~40-byte strings to 8 bytes. */
   def dedupDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val isBench = col("doc_id") % 97 === 0
-    val toksDf = memoCache(spark, s"$dir#decontam_toks") {
-      t(spark, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          split(col("text"), " ").as("tk"))
-    } // barrier: keeps split() out of the shingle lambda (see shinglesOf)
+    val toksDf = t(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+        split(col("text"), " ").as("tk"))
+      .localCheckpoint() // barrier: keeps split() out of the shingle lambda (see shinglesOf)
     val grams = shingleHashesOf(col("tk"), 5)
     val benchGrams = toksDf.filter(isBench)
       .select(explode(grams).as("g")).distinct()
-    val contaminated = memoCache(spark, s"$dir#decontam_ids") {
-      toksDf.filter(!isBench)
-        .select(col("doc_id"), explode(grams).as("g"))
-        .join(broadcast(benchGrams), Seq("g"), "left_semi")
-        .select("doc_id").distinct()
-    }
+    val contaminated = toksDf.filter(!isBench)
+      .select(col("doc_id"), explode(grams).as("g"))
+      .join(broadcast(benchGrams), Seq("g"), "left_semi")
+      .select("doc_id").distinct()
+      .localCheckpoint()
     val idLimit = spark.conf.getOption("graft.decontaminate.broadcastIdLimit")
       .map(_.toLong).getOrElse(5000000L)
-    // the size probe is an eager job at plan-construction time; memoize the
-    // COUNT alongside the memoized frame so repeat invocations (standalone +
-    // inside llm_corpus_pipeline) don't re-run it
-    val nContaminated = graft.SessionMemo.scalar(spark, s"$dir#decontam_n") {
-      contaminated.count()
-    }
+    val nContaminated = contaminated.count()
     val contaminatedSide =
       if (nContaminated <= idLimit) broadcast(contaminated) else contaminated
     toksDf.filter(!isBench)
@@ -1680,28 +1627,28 @@ object Dedup {
   def dedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     val L = 10
     import spark.implicits._
-    val grams = memoCache(spark, s"$dir#substring_grams") {
-      t(spark, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { rows =>
-          rows.flatMap { case (id, text) =>
-            val tk = toks(text)
-            val n = tk.length - (L - 1)
-            (0 until n).iterator.map { i =>
-              var h = 0xcbf29ce484222325L // FNV-1a over the L tokens, space-joined
-              var j = i
-              while (j < i + L) {
-                val s = tk(j)
-                var c = 0
-                while (c < s.length) { h = (h ^ s.charAt(c)) * 1099511628211L; c += 1 }
-                if (j < i + L - 1) h = (h ^ ' ') * 1099511628211L
-                j += 1
-              }
-              (id, (i + 1).toLong, h)
+    // checkpointed: feeds both the dup-window aggregate and the semi-join probe
+    val grams = t(spark, dir, "documents")
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions { rows =>
+        rows.flatMap { case (id, text) =>
+          val tk = toks(text)
+          val n = tk.length - (L - 1)
+          (0 until n).iterator.map { i =>
+            var h = 0xcbf29ce484222325L // FNV-1a over the L tokens, space-joined
+            var j = i
+            while (j < i + L) {
+              val s = tk(j)
+              var c = 0
+              while (c < s.length) { h = (h ^ s.charAt(c)) * 1099511628211L; c += 1 }
+              if (j < i + L - 1) h = (h ^ ' ') * 1099511628211L
+              j += 1
             }
+            (id, (i + 1).toLong, h)
           }
-        }.toDF("doc_id", "pos", "h")
-    } // cached: feeds both the dup-window aggregate and the semi-join probe
+        }
+      }.toDF("doc_id", "pos", "h")
+      .localCheckpoint()
     val dupWindows = grams.groupBy("h")
       .agg((min("doc_id") =!= max("doc_id")).as("crossdoc"))
       .filter(col("crossdoc")).select("h")
@@ -1786,8 +1733,7 @@ object Dedup {
     // silently zero the sign bits (null-poisoned zip_with) and collapse
     // every vector into one bucket
     val dim = graft.Tables.embeddingDim(spark, dir)
-    embeddingCosinePairs(spark, augmentedEmbeddings(spark, dir), dim, 0.95,
-      Some(s"$dir#embcos"))
+    embeddingCosinePairs(spark, augmentedEmbeddings(spark, dir), dim, 0.95)
   }
 
   /** The embeddings table augmented with the deterministic planted
@@ -1833,11 +1779,7 @@ object Dedup {
     * check; the spec mirrors the full rule exactly on collected data. */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     val threshold = 0.95
-    val emb = augmentedEmbeddings(spark, dir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-    val cents = Similarity.trainedCentroids(spark, dir)
-    val assigned = memoCache(spark, s"$dir#semdedup_assign")(
-      Similarity.assignCells(emb, cents))
+    val assigned = semanticAssignment(spark, dir)
 
     // ids-only candidate pairs: same cell, j strictly earlier than i in
     // (d2c desc, vec_id asc) order — the vector payload joins back in only
@@ -1867,11 +1809,20 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** [[dedupSemantic]]'s (vec_id, v, cell, d2c) frame: the augmented
+    * corpus assigned to its IVF cells, checkpointed because the candidate
+    * self-join, the vector re-joins and the final projection all read it.
+    * The spec mirrors the SemDeDup rule from it. */
+  private[graft] def semanticAssignment(spark: SparkSession, dir: String): DataFrame = {
+    val emb = augmentedEmbeddings(spark, dir)
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
+    Similarity.assignCells(emb, Similarity.trainedCentroids(spark, dir)).localCheckpoint()
+  }
+
   /** Core of `dedup_embedding_cosine`, reusable on any (vec_id, embedding)
-    * frame (the query key binds it to the testdata embeddings table, with a
-    * memo tag so repeat invocations share the cached signature frames). */
+    * frame (the query key binds it to the testdata embeddings table). */
   def embeddingCosinePairs(spark: SparkSession, emb: DataFrame, dim: Int,
-                           threshold: Double, memoTag: Option[String] = None): DataFrame = {
+                           threshold: Double): DataFrame = {
     // Band WIDTH scales with log2(n) (floor 16, cap 24): a random
     // (near-orthogonal) pair collides in a band w.p. 2^-bits, so FIXED bits
     // make the random-collision candidate mass Θ(n²·2^-bits) — the same
@@ -1886,10 +1837,11 @@ object Dedup {
     // ≈ 2e-7; past ~16M vectors one raises nPlanes to keep ≥ 10 bands
     // rather than widening further.
     val nPlanes = 256
-    val nVec: Long = memoTag match {
-      case Some(t0) => graft.SessionMemo.scalar(spark, s"$t0#nvec")(emb.count())
-      case None => emb.count()
-    }
+    // checkpointed: the count, the signature pass and both verify sides read it
+    val vecs = emb
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
+      .localCheckpoint()
+    val nVec = vecs.count()
     val bandBits = math.min(24, math.max(16,
       math.ceil(math.log(math.max(nVec, 2).toDouble) / math.log(2)).toInt))
     val nBands = nPlanes / bandBits
@@ -1898,16 +1850,8 @@ object Dedup {
       Array.fill(dim)(rnd.nextDouble() * 2 - 1)
     }
 
-    def cached(tag: String)(build: => DataFrame): DataFrame = memoTag match {
-      case Some(t0) => memoCache(spark, s"$t0#$tag")(build)
-      case None => build.cache()
-    }
-    val vecs = cached("vecs") { emb
-      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-    } // reused by signature pass + both verify sides
-
     import spark.implicits._
-    val bands = cached("bands") { vecs.as[(Long, Seq[Double])].mapPartitions { rows =>
+    val bands = vecs.as[(Long, Seq[Double])].mapPartitions { rows =>
       rows.flatMap { case (vecId, v) =>
         val arr = v.toArray
         val bits = new Array[Int](nPlanes)
@@ -1928,7 +1872,8 @@ object Dedup {
         }
       }
     }.toDF("vec_id", "band", "key")
-    } // both sides of the self-join: uncached, the hyperplane pass runs twice
+    // both sides of the self-join shuffle the identical plan: one
+    // hyperplane pass, read back as a ReusedExchange
 
     val candidates = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables.t
-import graft.SessionMemo
 
 /** Global second-moment statistics over the embedding corpus: the exact
   * int8-quantized Gram matrix and the PCA projection derived from it — the
@@ -38,46 +37,45 @@ object EmbedStats {
   val PcaK = 4
 
   /** Exact corpus moments over the quantized vectors: count, per-dim sums,
-    * and the packed upper-triangle Gram Σ qᵢ·qⱼ (i ≤ j). Memoized per
-    * (session, dir): both public keys and the spec share one corpus pass. */
-  private[graft] def moments(spark: SparkSession, dir: String): (Long, Array[Long], Array[Long]) =
-    SessionMemo.scalar(spark, s"$dir#embed_moments") {
-      val dim = graft.Tables.embeddingDim(spark, dir)
-      val tri = dim * (dim + 1) / 2
-      import spark.implicits._
-      // the shared int8 quantization rule, as array<bigint> rows
-      val q = t(spark, dir, "embeddings")
-        .select(transform(col("embedding"), _.cast(DoubleType)).as("ve"))
-        .withColumn("ma", array_max(transform(col("ve"), x => abs(x))))
-        .select(when(col("ma") === 0d, transform(col("ve"), _ => lit(0L)))
-          .otherwise(transform(col("ve"),
-            x => round(x * lit(127d) / col("ma")).cast(LongType))).as("qv"))
-        .as[Array[Long]]
-      // Imperative per-partition fold: the inner i≤j loop over a mutable
-      // 16 KiB accumulator has no declarative equivalent that doesn't
-      // explode n·d²/2 pair rows into a shuffle (500→2M rows at sf0.01,
-      // ruinous at 100 TB). treeAggregate gives each task its own
-      // deserialized zero copy, so in-place mutation is safe.
-      q.rdd.treeAggregate((0L, new Array[Long](dim), new Array[Long](tri)))(
-        seqOp = { case ((n, s, g), v) =>
-          var i = 0
-          var idx = 0
-          while (i < dim) {
-            s(i) += v(i)
-            var j = i
-            while (j < dim) { g(idx) += v(i) * v(j); idx += 1; j += 1 }
-            i += 1
-          }
-          (n + 1, s, g)
-        },
-        combOp = { case ((n1, s1, g1), (n2, s2, g2)) =>
-          var i = 0
-          while (i < dim) { s1(i) += s2(i); i += 1 }
-          var k = 0
-          while (k < tri) { g1(k) += g2(k); k += 1 }
-          (n1 + n2, s1, g1)
-        })
-    }
+    * and the packed upper-triangle Gram Σ qᵢ·qⱼ (i ≤ j). One corpus pass;
+    * [[embedPcaProject]] hands its moments to [[pcaComponents]]. */
+  private[graft] def moments(spark: SparkSession, dir: String): (Long, Array[Long], Array[Long]) = {
+    val dim = graft.Tables.embeddingDim(spark, dir)
+    val tri = dim * (dim + 1) / 2
+    import spark.implicits._
+    // the shared int8 quantization rule, as array<bigint> rows
+    val q = t(spark, dir, "embeddings")
+      .select(transform(col("embedding"), _.cast(DoubleType)).as("ve"))
+      .withColumn("ma", array_max(transform(col("ve"), x => abs(x))))
+      .select(when(col("ma") === 0d, transform(col("ve"), _ => lit(0L)))
+        .otherwise(transform(col("ve"),
+          x => round(x * lit(127d) / col("ma")).cast(LongType))).as("qv"))
+      .as[Array[Long]]
+    // Imperative per-partition fold: the inner i≤j loop over a mutable
+    // 16 KiB accumulator has no declarative equivalent that doesn't
+    // explode n·d²/2 pair rows into a shuffle (500→2M rows at sf0.01,
+    // ruinous at 100 TB). treeAggregate gives each task its own
+    // deserialized zero copy, so in-place mutation is safe.
+    q.rdd.treeAggregate((0L, new Array[Long](dim), new Array[Long](tri)))(
+      seqOp = { case ((n, s, g), v) =>
+        var i = 0
+        var idx = 0
+        while (i < dim) {
+          s(i) += v(i)
+          var j = i
+          while (j < dim) { g(idx) += v(i) * v(j); idx += 1; j += 1 }
+          i += 1
+        }
+        (n + 1, s, g)
+      },
+      combOp = { case ((n1, s1, g1), (n2, s2, g2)) =>
+        var i = 0
+        while (i < dim) { s1(i) += s2(i); i += 1 }
+        var k = 0
+        while (k < tri) { g1(k) += g2(k); k += 1 }
+        (n1 + n2, s1, g1)
+      })
+  }
 
   /** `embed_gram` — the exact upper-triangle Gram matrix of the
     * int8-quantized corpus: one row per cell (i ≤ j, 1-based),
@@ -85,8 +83,8 @@ object EmbedStats {
     * the driver from the bounded [[moments]] aggregate (16 KiB — the
     * PrefixSum class of collect, not a data-proportional one). */
   def embedGram(spark: SparkSession, dir: String): DataFrame = {
-    val dim = graft.Tables.embeddingDim(spark, dir)
-    val (_, _, g) = moments(spark, dir)
+    val (_, s, g) = moments(spark, dir)
+    val dim = s.length
     import spark.implicits._
     val rows = for {
       i <- 0 until dim
@@ -139,8 +137,8 @@ object EmbedStats {
     * descending explained variance, projection ≡ driver recompute, rerun
     * identity). */
   def embedPcaProject(spark: SparkSession, dir: String): DataFrame = {
-    val (comps, _) = pcaComponents(spark, dir)
-    val (n, s, _) = moments(spark, dir)
+    val m @ (n, s, _) = moments(spark, dir)
+    val (comps, _) = pcaComponents(m)
     val mu = s.map(_ / n.toDouble)
     val muM = mu.map(m => math.round(m * 1e6))
     val compsM = comps.map(_.map(c => math.round(c * 1e6)))
@@ -175,30 +173,30 @@ object EmbedStats {
   }
 
   /** Top-[[PcaK]] eigenpairs (components, eigenvalues) of the quantized
-    * covariance — memoized; spec consumes it for the structural checks. */
+    * covariance of the given [[moments]]; spec consumes it for the
+    * structural checks. */
   private[graft] def pcaComponents(
-      spark: SparkSession, dir: String): (Seq[Array[Double]], Seq[Double]) =
-    SessionMemo.scalar(spark, s"$dir#embed_pca") {
-      val dim = graft.Tables.embeddingDim(spark, dir)
-      val (n, s, g) = moments(spark, dir)
-      val nd = n.toDouble
-      val mu = s.map(_ / nd)
-      val c = Array.ofDim[Double](dim, dim)
-      for (i <- 0 until dim; j <- i until dim) {
-        val cij = g(packIdx(i, j, dim)) / nd - mu(i) * mu(j)
-        c(i)(j) = cij
-        c(j)(i) = cij
-      }
-      val (evals, evecs) = jacobiEigen(c)
-      val order = evals.indices.sortBy(k => (-evals(k), k)).take(PcaK)
-      val comps = order.map { k =>
-        val v = evecs.map(_(k))
-        // sign fix: make the largest-|component| coordinate positive
-        val pivot = v.indices.maxBy(i => (math.abs(v(i)), -i))
-        if (v(pivot) < 0) v.map(x => -x) else v
-      }
-      (comps.map(_.toArray), order.map(evals))
+      m: (Long, Array[Long], Array[Long])): (Seq[Array[Double]], Seq[Double]) = {
+    val (n, s, g) = m
+    val dim = s.length
+    val nd = n.toDouble
+    val mu = s.map(_ / nd)
+    val c = Array.ofDim[Double](dim, dim)
+    for (i <- 0 until dim; j <- i until dim) {
+      val cij = g(packIdx(i, j, dim)) / nd - mu(i) * mu(j)
+      c(i)(j) = cij
+      c(j)(i) = cij
     }
+    val (evals, evecs) = jacobiEigen(c)
+    val order = evals.indices.sortBy(k => (-evals(k), k)).take(PcaK)
+    val comps = order.map { k =>
+      val v = evecs.map(_(k))
+      // sign fix: make the largest-|component| coordinate positive
+      val pivot = v.indices.maxBy(i => (math.abs(v(i)), -i))
+      if (v(pivot) < 0) v.map(x => -x) else v
+    }
+    (comps.map(_.toArray), order.map(evals))
+  }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix: rotate out
     * each off-diagonal cell per sweep until the off-diagonal Frobenius

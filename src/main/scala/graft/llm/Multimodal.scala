@@ -301,50 +301,50 @@ object Multimodal {
     * The hash is kept as 8 row-bands of 8 bits (`h0..h7`, one per grid
     * row) rather than a single int64: the bands are exactly the LSH keys
     * the near-dup join buckets on, and per-band bytes sidestep signed
-    * shift-overflow edge cases in both engines. */
+    * shift-overflow edge cases in both engines. Checkpointed: the near-dup
+    * band self-join and both verify sides read it. */
   private def aHashBands(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.SessionMemo.cache(spark, s"multimodal:ahash:$dir") {
-      syntheticMedia(spark, dir)
-        .select(col("doc_id").cast(LongType), col("media"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { rows =>
-          javax.imageio.ImageIO.setUseCache(false) // per-partition codec setup
-          rows.map { case (id, bytes) =>
-            val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            val (w, h) = (img.getWidth, img.getHeight)
-            val bsum = Array.ofDim[Long](8, 8)
-            val bcnt = Array.ofDim[Long](8, 8)
-            var tsum = 0L
-            var y = 0
-            while (y < h) {
-              val by = y * 8 / h
-              var x = 0
-              while (x < w) {
-                val v = (img.getRGB(x, y) & 0xff).toLong // gray: B==G==R
-                val bx = x * 8 / w
-                bsum(by)(bx) += v; bcnt(by)(bx) += 1; tsum += v
-                x += 1
-              }
-              y += 1
+    syntheticMedia(spark, dir)
+      .select(col("doc_id").cast(LongType), col("media"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { rows =>
+        javax.imageio.ImageIO.setUseCache(false) // per-partition codec setup
+        rows.map { case (id, bytes) =>
+          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+          val (w, h) = (img.getWidth, img.getHeight)
+          val bsum = Array.ofDim[Long](8, 8)
+          val bcnt = Array.ofDim[Long](8, 8)
+          var tsum = 0L
+          var y = 0
+          while (y < h) {
+            val by = y * 8 / h
+            var x = 0
+            while (x < w) {
+              val v = (img.getRGB(x, y) & 0xff).toLong // gray: B==G==R
+              val bx = x * 8 / w
+              bsum(by)(bx) += v; bcnt(by)(bx) += 1; tsum += v
+              x += 1
             }
-            val tcnt = w.toLong * h
-            val bands = (0 until 8).map { by =>
-              var band = 0L
-              var bx = 0
-              while (bx < 8) {
-                // dims >= 8 so every block is non-empty; strict > keeps
-                // ties (exactly-average blocks) at 0 on both sides
-                if (bsum(by)(bx) * tcnt > tsum * bcnt(by)(bx)) band |= (1L << bx)
-                bx += 1
-              }
-              band
-            }
-            (id, bands(0), bands(1), bands(2), bands(3), bands(4), bands(5), bands(6), bands(7))
+            y += 1
           }
+          val tcnt = w.toLong * h
+          val bands = (0 until 8).map { by =>
+            var band = 0L
+            var bx = 0
+            while (bx < 8) {
+              // dims >= 8 so every block is non-empty; strict > keeps
+              // ties (exactly-average blocks) at 0 on both sides
+              if (bsum(by)(bx) * tcnt > tsum * bcnt(by)(bx)) band |= (1L << bx)
+              bx += 1
+            }
+            band
+          }
+          (id, bands(0), bands(1), bands(2), bands(3), bands(4), bands(5), bands(6), bands(7))
         }
-        .toDF("doc_id", "h0", "h1", "h2", "h3", "h4", "h5", "h6", "h7")
-    }
+      }
+      .toDF("doc_id", "h0", "h1", "h2", "h3", "h4", "h5", "h6", "h7")
+      .localCheckpoint()
   }
 
   /** `multimodal_phash` — the per-document perceptual hash itself (decode →
@@ -413,10 +413,8 @@ object Multimodal {
     * diameter. */
   def multimodalDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val cc = graft.SessionMemo.cache(spark, s"multimodal:dupcc:$dir") {
-      Dedup.connectedComponentsLogStar(spark, docs.select("doc_id"),
-        nearDupPairs(spark, dir).select("doc_a", "doc_b"))
-    }
+    val cc = Dedup.connectedComponentsLogStar(spark, docs.select("doc_id"),
+      nearDupPairs(spark, dir).select("doc_a", "doc_b"))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),

@@ -227,7 +227,7 @@ object Retrieval {
       .select(col("vec_id").as("query_id"), col("v").as("q"))
 
     // The coarse stage scans a MATERIALIZED narrow column — the truncated
-    // prefixes persisted once per (session, dir) as their own parquet (the
+    // prefixes persisted by each call as their own parquet (the
     // dedup_incremental persisted-index pattern). With an in-memory slice
     // the prefix saved only FLOPs (the scan still read full vectors; the
     // fused kernel alone measured parity with fused brute force at 100×);
@@ -237,16 +237,10 @@ object Retrieval {
     // kernel: one codegen'd loop, no slice() array copies (the slice +
     // three-fold formulation measured 11.1 s vs 2.97 s brute at 100×),
     // bit-identical to the slice oracle (same fold orders).
-    val prefixPath = graft.SessionMemo.dir(spark, s"$dir#vec_prefix") {
-      val p = graft.Tables.scratchDir("vec_prefix")
-      vecs.select(col("vec_id"), slice(col("v"), 1, CoarseDims).as("vp"))
-        .write.mode("overwrite").parquet(s"$p/prefix")
-      p
-    }
-    // the narrow column is exactly what a serving tier keeps HOT: memoize
-    // the scan (half the bytes of the full vectors at the same row count)
-    val prefixes = graft.SessionMemo.cache(spark, s"$dir#vec_prefix_hot")(
-      spark.read.parquet(s"$prefixPath/prefix"))
+    val prefixPath = graft.Tables.scratchDir("vec_prefix")
+    vecs.select(col("vec_id"), slice(col("v"), 1, CoarseDims).as("vp"))
+      .write.mode("overwrite").parquet(s"$prefixPath/prefix")
+    val prefixes = spark.read.parquet(s"$prefixPath/prefix")
 
     val wc = Window.partitionBy("query_id").orderBy(col("coarse").desc, col("vec_id"))
     val shortlist = prefixes.join(broadcast(queries), col("vec_id") =!= col("query_id"))

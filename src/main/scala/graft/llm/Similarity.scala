@@ -27,14 +27,13 @@ object Similarity {
     * executor-CPU seconds (≈1,100×) before this change (PLANS.md probe
     * #20). With nlist = √n, occupancy is √n and knn candidates are
     * n·nprobe·√n — the n^1.5 an IVF index is supposed to give. One bounded
-    * count() per (session, corpus), memoized; every consumer of
-    * [[trainedCentroids]] (ivf / ivfpq / coarse-refine / knn-graph /
-    * SemDeDup) picks the rule up automatically. */
-  private[graft] def ivfK(spark: SparkSession, dir: String): Int =
-    graft.SessionMemo.scalar(spark, s"$dir#ivf_nlist") {
-      val n = ivfVecs(spark, dir).count()
-      math.max(IvfK, math.round(math.sqrt(n.toDouble)).toInt)
-    }
+    * count() per training; every consumer of [[trainedCentroids]] (ivf /
+    * ivfpq / coarse-refine / knn-graph / SemDeDup) picks the rule up
+    * automatically. */
+  private[graft] def ivfK(spark: SparkSession, dir: String): Int = {
+    val n = ivfVecs(spark, dir).count()
+    math.max(IvfK, math.round(math.sqrt(n.toDouble)).toInt)
+  }
 
   /** Sequential-fold dot product in double precision — the codegen'd
     * kernel ([[graft.functions.DotProduct]]): same fold order as the
@@ -103,35 +102,27 @@ object Similarity {
     * `sim_search_topk` itself deliberately (and allowlistedly) plans; the
     * PlanLinter allowlist stays exactly the five scan-score contracts.
     * Cosines are bit-identical: the kernel's three folds run in the same
-    * index order whichever side is literal. Memoized so the three
-    * contract keys share one pass per (session, dir) — which also means
-    * the pass's CPU is charged to whichever contract key BUILDS first
-    * (the 10-vector collect runs at construction time). In full bench
-    * runs the alphabetical key order makes that deterministic
-    * (sim_search_ivf); a solo run of any one contract key pays it
-    * itself. The cpu: floors for all three keys were re-seeded by the
-    * two committed post-conversion records (r15), so this charge is in
-    * their baselines (r16 advice). */
-  private[graft] def exactTop5(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cache(spark, s"$dir#exact_top5") {
-      val spark0 = spark
-      import spark0.implicits._
-      val vecs = t(spark, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-      val queries: Array[(Long, Seq[Double])] = vecs.filter(col("vec_id") < 10)
-        .as[(Long, Seq[Double])].collect().sortBy(_._1)
-      val scored = vecs
-        .select(col("vec_id"), explode(array(queries.map { case (qid, q) =>
-          struct(lit(qid).as("query_id"), cosine(typedLit(q), col("v")).as("cosine"))
-        }: _*)).as("s"))
-        .filter(col("s.query_id") =!= col("vec_id"))
-        .select(col("s.query_id").as("query_id"), col("vec_id"), col("s.cosine").as("cosine"))
-      val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast(LongType))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
-    }
+    * index order whichever side is literal. Each contract key builds its
+    * own (the 10-vector collect runs at construction time). */
+  private[graft] def exactTop5(spark: SparkSession, dir: String): DataFrame = {
+    val spark0 = spark
+    import spark0.implicits._
+    val vecs = t(spark, dir, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
+    val queries: Array[(Long, Seq[Double])] = vecs.filter(col("vec_id") < 10)
+      .as[(Long, Seq[Double])].collect().sortBy(_._1)
+    val scored = vecs
+      .select(col("vec_id"), explode(array(queries.map { case (qid, q) =>
+        struct(lit(qid).as("query_id"), cosine(typedLit(q), col("v")).as("cosine"))
+      }: _*)).as("s"))
+      .filter(col("s.query_id") =!= col("vec_id"))
+      .select(col("s.query_id").as("query_id"), col("vec_id"), col("s.cosine").as("cosine"))
+    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
+    scored
+      .withColumn("rank", row_number().over(w).cast(LongType))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
+  }
 
   /** Contract form of an ANN key (r15, the `agg_approx_quantile` /
     * `agg_hll_partitioned` recipe): the ANN RESULT itself is
@@ -199,26 +190,25 @@ object Similarity {
   /** Exact top-3 reference neighbors for the [[KnnPanelSize]]-node audit
     * panel — the [[exactTop5]] recipe (literal panel vectors, one codegen'd
     * scan-score projection, no join) at rank ≤ 3 over vec_id < 32. */
-  private[graft] def exactKnnPanel(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cache(spark, s"$dir#exact_knn_panel") {
-      val spark0 = spark
-      import spark0.implicits._
-      val vecs = t(spark, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-      val panel: Array[(Long, Seq[Double])] = vecs.filter(col("vec_id") < KnnPanelSize)
-        .as[(Long, Seq[Double])].collect().sortBy(_._1)
-      val scored = vecs
-        .select(col("vec_id"), explode(array(panel.map { case (qid, q) =>
-          struct(lit(qid).as("panel_id"), cosine(typedLit(q), col("v")).as("cosine"))
-        }: _*)).as("s"))
-        .filter(col("s.panel_id") =!= col("vec_id"))
-        .select(col("s.panel_id").as("panel_id"), col("vec_id"), col("s.cosine").as("cosine"))
-      val w = Window.partitionBy("panel_id").orderBy(col("cosine").desc, col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast(LongType))
-        .filter(col("rank") <= 3)
-        .select(col("panel_id"), col("rank"), col("vec_id").as("neighbor_id"))
-    }
+  private[graft] def exactKnnPanel(spark: SparkSession, dir: String): DataFrame = {
+    val spark0 = spark
+    import spark0.implicits._
+    val vecs = t(spark, dir, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
+    val panel: Array[(Long, Seq[Double])] = vecs.filter(col("vec_id") < KnnPanelSize)
+      .as[(Long, Seq[Double])].collect().sortBy(_._1)
+    val scored = vecs
+      .select(col("vec_id"), explode(array(panel.map { case (qid, q) =>
+        struct(lit(qid).as("panel_id"), cosine(typedLit(q), col("v")).as("cosine"))
+      }: _*)).as("s"))
+      .filter(col("s.panel_id") =!= col("vec_id"))
+      .select(col("s.panel_id").as("panel_id"), col("vec_id"), col("s.cosine").as("cosine"))
+    val w = Window.partitionBy("panel_id").orderBy(col("cosine").desc, col("vec_id"))
+    scored
+      .withColumn("rank", row_number().over(w).cast(LongType))
+      .filter(col("rank") <= 3)
+      .select(col("panel_id"), col("rank"), col("vec_id").as("neighbor_id"))
+  }
 
   /** `sim_knn_graph` in contract form (r16 verdict ask #4 — the
     * [[annRecallContract]] / `text_compression_ratio` graduation recipe):
@@ -292,22 +282,16 @@ object Similarity {
 
   /** Candidate set of [[simSearchIvf]] (post cell-probing, pre scoring) —
     * exposed so scale probes measure candidate-volume growth on the REAL
-    * code path instead of re-deriving the bucketing. Training + assignment
-    * are session-memoized, so the first call per (session, dir) trains the
-    * quantizer and later calls reuse it (cold mode clears the memo). */
+    * code path instead of re-deriving the bucketing. Every call trains its
+    * own quantizer. */
   private[graft] def ivfCandidates(spark: SparkSession, dir: String): DataFrame =
     simSearchIvfImpl(spark, dir, returnCandidates = true)
 
-  /** The memoized (vec_id, v) frame every IVF-family operator shares: a bare
-    * .cache() per invocation leaves cached blocks pinned until they happen
-    * to dedupe by plan equality in the CacheManager; the memo makes reuse
-    * explicit, repeat-invocation cost deterministic, and cold-mode
-    * (SessionMemo.clear) able to release them. */
+  /** The (vec_id, v) frame every IVF-family operator reads: a scan and a
+    * cast, with no exchange, so each job re-reads it rather than caching. */
   private[graft] def ivfVecs(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cache(spark, s"$dir#ivf_vecs") {
-      t(spark, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-    }
+    t(spark, dir, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
 
   /** Nearest-cell assignment for any (vec_id, v, …) frame against a (cell,
     * c) centroid frame — appends `cell` and `d2c`, preserving every input
@@ -369,7 +353,7 @@ object Similarity {
   }
 
   /** Lloyd training runs as broadcast-centroids + per-partition partial sums
-    * over the cached vectors — ONE job and zero new Catalyst plans per
+    * over the vectors — ONE job and zero new Catalyst plans per
     * iteration. (A DataFrame loop re-optimizes and re-codegens 3 shuffles
     * every iteration; that compilation dominated this operator's wall time.)
     * The broadcast is k×dim doubles; per-partition partials fan in through
@@ -380,22 +364,17 @@ object Similarity {
     * lowest cell id, matching assignCells' min(struct(d2, cell, ...))
     * ordering.
     *
-    * Training + assignment are memoized per (session, dir): the 3 Lloyd
-    * iterations are 4 synchronous driver-blocking jobs — by far this
-    * operator family's dominant cost and its load-sensitivity (r8 verdict) —
-    * and rebuild identically every invocation, so repeat calls (Bench warm
-    * passes, Verify after a spec, the PQ/SemDeDup clients) reuse the trained
-    * centroids instead of retraining. Cold mode (SessionMemo.clear) restores
-    * true first-touch cost per measurement. */
+    * The 3 Lloyd iterations are 4 synchronous driver-blocking jobs — by far
+    * this operator family's dominant cost — and training is deterministic,
+    * so every call retrains to the same centroids. The result is a local
+    * (k-row) frame. */
   private[graft] def trainedCentroids(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.SessionMemo.cache(spark, s"$dir#ivf_centroids") {
-      lloydCentroids(spark, ivfVecs(spark, dir),
-        graft.Tables.embeddingDim(spark, dir), ivfK(spark, dir))
-        .zipWithIndex.toSeq
-        .map { case (c, i) => (i.toLong, c.toSeq) }
-        .toDF("cell", "c")
-    }
+    lloydCentroids(spark, ivfVecs(spark, dir),
+      graft.Tables.embeddingDim(spark, dir), ivfK(spark, dir))
+      .zipWithIndex.toSeq
+      .map { case (c, i) => (i.toLong, c.toSeq) }
+      .toDF("cell", "c")
   }
 
   /** Deterministic fan-in tree merge of per-partition trainer partials,
@@ -523,8 +502,7 @@ object Similarity {
     val nprobe = 4
     val vecs = ivfVecs(spark, dir)
     val centroids = trainedCentroids(spark, dir)
-    val index = graft.SessionMemo.cache(spark, s"$dir#ivf_index")(
-      assignCells(vecs, centroids).drop("d2c"))
+    val index = assignCells(vecs, centroids).drop("d2c")
 
     // probe: nprobe nearest cells per query via the shared literal-centroid
     // expression (r12 — the crossJoin(broadcast(centroids)) + row_number
@@ -554,7 +532,7 @@ object Similarity {
     * Neighbor Search" (TPAMI 2011) — the structure FAISS's IndexIVFPQ
     * implements:
     *
-    *  1. coarse quantizer = the memoized IVF centroids ([[trainedCentroids]]);
+    *  1. coarse quantizer = the IVF centroids ([[trainedCentroids]]);
     *  2. RESIDUALS r = v − c(cell) are split into M=4 subspaces and each
     *     subspace gets its own ks=16-entry codebook (Lloyd, same
     *     deterministic broadcast+partition-ordered-partial-sum pattern as
@@ -576,25 +554,31 @@ object Similarity {
     * Approximate by design (PQ cells + ADC ranking) → rows-only driver
     * check; the spec pins recall@5 >= 0.8 against the oracle-checked exact
     * [[simSearchTopk]], and determinism across invocations. */
-  def simSearchIvfPq(spark: SparkSession, dir: String): DataFrame = {
+  def simSearchIvfPq(spark: SparkSession, dir: String): DataFrame =
+    ivfPqWithCodes(spark, dir)._1
+
+  /** [[simSearchIvfPq]]'s result and the encoded index it scanned
+    * (vec_id, cell, codes) — the spec checks the codes' structure. */
+  private[graft] def ivfPqWithCodes(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val M = 8
     val ks = 16
     val nprobe = 4
     val refine = 64
-    val dim = graft.Tables.embeddingDim(spark, dir)
-    require(dim % M == 0, s"dim $dim not divisible into $M subspaces")
-    val sub = dim / M
 
     import spark.implicits._
     val vecs = ivfVecs(spark, dir)
     val centroids = trainedCentroids(spark, dir)
-    val index = graft.SessionMemo.cache(spark, s"$dir#ivf_index")(
-      assignCells(vecs, centroids).drop("d2c"))
+    // checkpointed: the codebook init, both training passes and the
+    // encoding read it
+    val index = assignCells(vecs, centroids).drop("d2c").localCheckpoint()
 
     // centroid matrix driver-side: k×dim doubles — the same bounded state
     // the coarse trainer already collects
     val centArr: Array[Array[Double]] = centroids.as[(Long, Seq[Double])]
       .collect().sortBy(_._1).map(_._2.toArray)
+    val dim = centArr.head.length // the training's embedding dimensionality
+    require(dim % M == 0, s"dim $dim not divisible into $M subspaces")
+    val sub = dim / M
 
     def residual(v: Seq[Double], cell: Int): Array[Double] = {
       val c = centArr(cell)
@@ -609,84 +593,43 @@ object Similarity {
     // per-subspace codebooks trained on residuals — Lloyd with the same
     // broadcast + partition-ordered partial merge as the coarse quantizer,
     // all M subspaces in ONE pass per iteration (driver state M×ks×sub)
-    val codebooks: Array[Array[Array[Double]]] =
-      graft.SessionMemo.scalar(spark, s"$dir#ivfpq_codebooks") {
-        val rdd = index.select("vec_id", "v", "cell")
-          .as[(Long, Seq[Double], Long)].rdd
-        // deterministic init: residuals of the ks lowest vec_ids
-        var cbs: Array[Array[Array[Double]]] = {
-          val seed = index.filter(col("vec_id") < ks)
-            .select("vec_id", "v", "cell").as[(Long, Seq[Double], Long)]
-            .collect().sortBy(_._1)
-            .map { case (_, v, cell) => residual(v, cell.toInt) }
-          Array.tabulate(M)(m => seed.map(r =>
-            java.util.Arrays.copyOfRange(r, m * sub, (m + 1) * sub)))
-        }
-        // merge b into a (in place) — the [[treeMergePartials]] op, so the
-        // driver holds ≤ fanout partials instead of O(P) (r16 fix)
-        def mergeP(a: (Array[Array[Array[Double]]], Array[Array[Long]]),
-                   b: (Array[Array[Array[Double]]], Array[Array[Long]])): (Array[Array[Array[Double]]], Array[Array[Long]]) = {
-          var m = 0
-          while (m < M) {
-            var j = 0
-            while (j < ks) {
-              var i = 0
-              while (i < sub) { a._1(m)(j)(i) += b._1(m)(j)(i); i += 1 }
-              a._2(m)(j) += b._2(m)(j)
-              j += 1
-            }
-            m += 1
+    val codebooks: Array[Array[Array[Double]]] = {
+      val rdd = index.select("vec_id", "v", "cell")
+        .as[(Long, Seq[Double], Long)].rdd
+      // deterministic init: residuals of the ks lowest vec_ids
+      var cbs: Array[Array[Array[Double]]] = {
+        val seed = index.filter(col("vec_id") < ks)
+          .select("vec_id", "v", "cell").as[(Long, Seq[Double], Long)]
+          .collect().sortBy(_._1)
+          .map { case (_, v, cell) => residual(v, cell.toInt) }
+        Array.tabulate(M)(m => seed.map(r =>
+          java.util.Arrays.copyOfRange(r, m * sub, (m + 1) * sub)))
+      }
+      // merge b into a (in place) — the [[treeMergePartials]] op, so the
+      // driver holds ≤ fanout partials instead of O(P) (r16 fix)
+      def mergeP(a: (Array[Array[Array[Double]]], Array[Array[Long]]),
+                 b: (Array[Array[Array[Double]]], Array[Array[Long]])): (Array[Array[Array[Double]]], Array[Array[Long]]) = {
+        var m = 0
+        while (m < M) {
+          var j = 0
+          while (j < ks) {
+            var i = 0
+            while (i < sub) { a._1(m)(j)(i) += b._1(m)(j)(i); i += 1 }
+            a._2(m)(j) += b._2(m)(j)
+            j += 1
           }
-          a
+          m += 1
         }
-        (1 to 2).foreach { _ =>
-          val bc = spark.sparkContext.broadcast(cbs)
-          val partialsRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-            val cb = bc.value
-            val sums = Array.fill(M, ks)(new Array[Double](sub))
-            val counts = Array.fill(M)(new Array[Long](ks))
-            it.foreach { case (_, v, cell) =>
-              val r = residual(v, cell.toInt)
-              var m = 0
-              while (m < M) {
-                var best = 0; var bestD = Double.MaxValue
-                var j = 0
-                while (j < ks) {
-                  val d = subDist(r, m, cb(m)(j))
-                  if (d < bestD) { bestD = d; best = j }
-                  j += 1
-                }
-                val s = sums(m)(best)
-                var i = 0
-                while (i < sub) { s(i) += r(m * sub + i); i += 1 }
-                counts(m)(best) += 1
-                m += 1
-              }
-            }
-            Iterator.single((pid, (sums, counts)))
-          }
-          val merged = treeMergePartials(partialsRdd, rdd.getNumPartitions, mergeP)
+        a
+      }
+      (1 to 2).foreach { _ =>
+        val bc = spark.sparkContext.broadcast(cbs)
+        val partialsRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
+          val cb = bc.value
           val sums = Array.fill(M, ks)(new Array[Double](sub))
           val counts = Array.fill(M)(new Array[Long](ks))
-          merged.foreach { case (_, p) => mergeP((sums, counts), p) }
-          cbs = Array.tabulate(M, ks) { (m, j) =>
-            if (counts(m)(j) == 0) cbs(m)(j)
-            else sums(m)(j).map(_ / counts(m)(j))
-          }
-          bc.destroy()
-        }
-        cbs
-      }
-
-    // encode the corpus: M codes per vector — the compressed index
-    val bcCb = spark.sparkContext.broadcast(codebooks)
-    val encoded = graft.SessionMemo.cache(spark, s"$dir#ivfpq_codes") {
-      index.select("vec_id", "v", "cell").as[(Long, Seq[Double], Long)]
-        .mapPartitions { it =>
-          val cb = bcCb.value
-          it.map { case (id, v, cell) =>
+          it.foreach { case (_, v, cell) =>
             val r = residual(v, cell.toInt)
-            val codes = new Array[Int](M)
             var m = 0
             while (m < M) {
               var best = 0; var bestD = Double.MaxValue
@@ -696,13 +639,51 @@ object Similarity {
                 if (d < bestD) { bestD = d; best = j }
                 j += 1
               }
-              codes(m) = best
+              val s = sums(m)(best)
+              var i = 0
+              while (i < sub) { s(i) += r(m * sub + i); i += 1 }
+              counts(m)(best) += 1
               m += 1
             }
-            (id, cell, codes.toSeq)
           }
-        }.toDF("vec_id", "cell", "codes")
+          Iterator.single((pid, (sums, counts)))
+        }
+        val merged = treeMergePartials(partialsRdd, rdd.getNumPartitions, mergeP)
+        val sums = Array.fill(M, ks)(new Array[Double](sub))
+        val counts = Array.fill(M)(new Array[Long](ks))
+        merged.foreach { case (_, p) => mergeP((sums, counts), p) }
+        cbs = Array.tabulate(M, ks) { (m, j) =>
+          if (counts(m)(j) == 0) cbs(m)(j)
+          else sums(m)(j).map(_ / counts(m)(j))
+        }
+        bc.destroy()
+      }
+      cbs
     }
+
+    // encode the corpus: M codes per vector — the compressed index
+    val bcCb = spark.sparkContext.broadcast(codebooks)
+    val encoded = index.select("vec_id", "v", "cell").as[(Long, Seq[Double], Long)]
+      .mapPartitions { it =>
+        val cb = bcCb.value
+        it.map { case (id, v, cell) =>
+          val r = residual(v, cell.toInt)
+          val codes = new Array[Int](M)
+          var m = 0
+          while (m < M) {
+            var best = 0; var bestD = Double.MaxValue
+            var j = 0
+            while (j < ks) {
+              val d = subDist(r, m, cb(m)(j))
+              if (d < bestD) { bestD = d; best = j }
+              j += 1
+            }
+            codes(m) = best
+            m += 1
+          }
+          (id, cell, codes.toSeq)
+        }
+      }.toDF("vec_id", "cell", "codes")
 
     // queries + probes + LUTs: all driver-side bounded state
     // (10 queries × nprobe cells × M×ks doubles)
@@ -746,22 +727,22 @@ object Similarity {
 
     val qdf = queries.toSeq.map { case (id, q) => (id, q.toSeq) }.toDF("query_id", "q")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
-    shortlist
+    (shortlist
       .join(vecs, "vec_id")
       .join(broadcast(qdf), "query_id")
       .withColumn("cosine", cosine(col("q"), col("v")))
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= 5)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
-      .orderBy("query_id", "rank")
+      .orderBy("query_id", "rank"), encoded)
   }
 
   /** `sim_knn_graph` — the all-corpus k-nearest-neighbor graph (k=3) every
     * semantic-clustering / SemDeDup-style curation stage starts from, built
     * on the shared IVF index instead of the O(n²) all-pairs join:
     *
-    *  1. every vector is assigned to its cell (the memoized
-    *     [[trainedCentroids]] + [[assignCells]] index — shared with
+    *  1. every vector is assigned to its cell (the
+    *     [[trainedCentroids]] + [[assignCells]] index — the same build as
     *     `sim_search_ivf`/`sim_search_ivfpq`/`dedup_semantic`);
     *  2. every vector PROBES its nprobe=5 nearest cells (a per-vector
     *     window over the n×k broadcast-centroid distances — k is the only
@@ -793,8 +774,7 @@ object Similarity {
     val k = 3
     val vecs = ivfVecs(spark, dir)
     val centroids = trainedCentroids(spark, dir)
-    val index = graft.SessionMemo.cache(spark, s"$dir#ivf_index")(
-      assignCells(vecs, centroids).drop("d2c"))
+    val index = assignCells(vecs, centroids).drop("d2c")
 
     // top-nprobe cell selection is MAP-ONLY via the shared literal-centroid
     // expression — no centroid join and, unlike a crossJoin+row_number
@@ -990,7 +970,7 @@ object Similarity {
     * rather than the raw id value space, so the stage count is
     * ≤ log8(n/firstBound)+1 even when doc_ids are sparse or hashed
     * (value-space ×8 growth from 256 could walk ~log8(maxId) ≈ 20 stages
-    * of a 2^63 hashed id space, each re-shuffling the memoized prefix
+    * of a 2^63 hashed id space, each re-shuffling the checkpointed prefix
     * index; ADVICE r14). The final rung is the unbounded join. Per-stage
     * candidate volume grows ~×8 in ROWS by construction, so the total
     * stays within a constant factor of the final stage. Driver state: NA
@@ -1003,7 +983,7 @@ object Similarity {
     * value space bounds the stage count at ⌈log8(n/firstBound)⌉ + 1
     * regardless of how sparse or hashed the id domain is — the property
     * the r15 advice asked to pin (each extra stage re-shuffles the
-    * memoized prefix index, so a 2^63 value-space walk would cost ~20
+    * checkpointed prefix index, so a 2^63 value-space walk would cost ~20
     * re-shuffles). Spec: LlmOpsSpec asserts the bound on a hashed-sparse
     * id domain. */
   private[graft] def anchorLadder(shsSel: DataFrame, nDocs: Long,
@@ -1022,10 +1002,11 @@ object Similarity {
     import HardNeg._
     import spark.implicits._
     val shsSel = sigDocs.select(col("doc_id"), col("shs"))
-    val idxTag = Some(s"$dir#hardneg")
+    // checkpointed: every stage of the ladder probes the same prefix index
+    val prefix = Some(Dedup.setsimPrefixIndex(shsSel, 8, 10).localCheckpoint())
 
     def anchorsBelow(bound: Long): Array[(Long, Long)] = {
-      val pairs = Dedup.setsimPrefixPairs(spark, shsSel, 8, 10, bound, idxTag)
+      val pairs = Dedup.setsimPrefixPairs(spark, shsSel, 8, 10, bound, prefix)
       // symmetrize, then keep only anchors whose pair set is provably
       // complete under the bound (the larger side of a kept pair may have
       // id ≥ bound and be missing pairs where IT is the smaller side)
@@ -1039,29 +1020,18 @@ object Similarity {
         .as[(Long, Long)].collect()
     }
 
-    // memoized like every other index frame: the stage loop is a driver
-    // loop of bounded actions, so warm reps should not replay it (tag
-    // carries firstBound so the spec's multi-forcing runs stay distinct)
-    val rows: Seq[(Long, Long)] =
-      graft.SessionMemo.scalar(spark, s"$dir#hardneg_anchors_$firstBound") {
-        // Rank-seeded bound ladder: ids at observed ranks ~firstBound·8^i
-        // (one bounded-state quantile pass), final rung unbounded. Any
-        // bound is exact per the lemma above; rank-targeting only fixes
-        // the stage count at log8(n/firstBound) independent of how sparse
-        // the id space is.
-        val nDocs: Long = graft.SessionMemo.scalar(spark, s"$dir#hardneg_ndocs") {
-          shsSel.count()
-        }
-        val ladder = anchorLadder(shsSel, nDocs, firstBound)
-        var found = Array.empty[(Long, Long)]
-        var i = 0
-        while (found.length < Anchors && i < ladder.length) {
-          found = anchorsBelow(ladder(i))
-          i += 1
-        }
-        found.toSeq
-      }
-    spark.createDataset(rows).toDF("anchor_id", "positive_id")
+    // Rank-seeded bound ladder: ids at observed ranks ~firstBound·8^i (one
+    // bounded-state quantile pass), final rung unbounded. Any bound is
+    // exact per the lemma above; rank-targeting only fixes the stage count
+    // at log8(n/firstBound) independent of how sparse the id space is.
+    val ladder = anchorLadder(shsSel, shsSel.count(), firstBound)
+    var found = Array.empty[(Long, Long)]
+    var i = 0
+    while (found.length < Anchors && i < ladder.length) {
+      found = anchorsBelow(ladder(i))
+      i += 1
+    }
+    spark.createDataset(found.toSeq).toDF("anchor_id", "positive_id")
   }
 
   /** `sim_hard_negatives` — contrastive-pair mining for embedding-model
@@ -1094,8 +1064,7 @@ object Similarity {
     * top-k ahead of the exchange (the sim_search_topk contract). */
   def simHardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import HardNeg._
-    val sigDocs = Dedup.minhashSignatureIndex(spark, t(spark, dir, "documents"),
-      Some(s"$dir#minhash_sigs"))
+    val sigDocs = Dedup.minhashSignatureIndex(spark, t(spark, dir, "documents"))
     val anchors = stagedAnchors(spark, dir, sigDocs)
 
     val vecs = t(spark, dir, "embeddings")

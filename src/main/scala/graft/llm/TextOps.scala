@@ -110,16 +110,14 @@ object TextOps {
     * vocab|, not |tokens|, thanks to map-side partial aggregation. Top-100
     * by (df, bigram) is a deterministic global TakeOrdered. */
   def textNgramStats(spark: SparkSession, dir: String): DataFrame = {
-    // barrier: keeps split() out of the shingle lambdas (see shinglesOf);
-    // memoized so repeat invocations share one cached copy and cold mode
-    // can release it (same discipline as the dedup family's frames)
-    val tokDf = graft.SessionMemo.cache(spark, s"$dir#ngram_toks") {
-      // shingle explosion is CPU-dense per input byte: heal starvation on
-      // dense single-file inputs (probe #21 catch #3; no-op at real scale)
-      Dedup.healScanStarvation(
+    // checkpoint as barrier: keeps split() out of the shingle lambdas (see
+    // shinglesOf). Shingle explosion is CPU-dense per input byte: heal
+    // starvation on dense single-file inputs (probe #21 catch #3; no-op at
+    // real scale)
+    val tokDf = Dedup.healScanStarvation(
         t(spark, dir, "documents").select(col("doc_id"), toks.as("tk")),
         col("doc_id"))
-    }
+      .localCheckpoint()
     tokDf
       .select(explode(Dedup.shinglesOf(col("tk"), 2)).as("bigram"))
       .groupBy("bigram")
@@ -147,7 +145,7 @@ object TextOps {
     * count job (a real pipeline reads it from corpus stats). */
   def textTfidf(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val nDocs = graft.SessionMemo.scalar(spark, s"$dir#n_docs")(docs.count())
+    val nDocs = docs.count()
     val tf = docs.select(col("doc_id"), explode(toks).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
@@ -259,9 +257,8 @@ object TextOps {
     val tok = t(spark, dir, "documents").select(col("doc_id"), explode(toks).as("token"))
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("k"))
     val freq = tf.groupBy("token").agg(sum(col("k")).as("cnt"))
-    // one scalar job (corpus stats in a real pipeline) — memoized so
-    // repeat invocations (quality_buckets shares this model) skip the scan
-    val total = graft.SessionMemo.scalar(spark, s"$dir#n_corpus_tokens")(tok.count())
+    // one scalar job (corpus stats in a real pipeline)
+    val total = tok.count()
     val costMicro = round(-log(col("cnt").cast(DoubleType) / lit(total.toDouble)) * 1e6)
       .cast(LongType)
     tf.join(freq.hint("shuffle_merge"), "token")
@@ -380,7 +377,7 @@ object TextOps {
     * running sum broadcasts back as per-partition offsets, and a second
     * partition-local pass emits offset + local running sum
     * ([[graft.ops.PrefixSum.exclusiveRunningSum]]). Wall-clock is two scans
-    * of the cached sorted frame and the only driver state is
+    * of the checkpointed sorted frame and the only driver state is
     * O(partitions). */
   val PackChunkLen = 512L
   def corpusPackChunks(spark: SparkSession, dir: String): DataFrame = {
@@ -392,7 +389,7 @@ object TextOps {
       .filter(col("text").isNotNull)
       .select(col("doc_id"), size(split(col("text"), " ")).cast(LongType).as("n_tokens"))
     graft.ops.PrefixSum.exclusiveRunningSum(spark, counts,
-        Seq("doc_id"), "n_tokens", "start_token", s"$dir#pack_sorted")
+        Seq("doc_id"), "n_tokens", "start_token")
       .withColumn("end_token", col("start_token") + col("n_tokens") - 1)
       .select(col("doc_id"), col("n_tokens"), col("start_token"), col("end_token"),
         // integer division, not `/`: double division is exact only to 2^53
@@ -424,8 +421,7 @@ object TextOps {
     // prefix sum's already-collected per-partition sums — no separate
     // count() job over the rank frame
     val (ranked, total) = graft.ops.PrefixSum.exclusiveRunningSumWithTotal(
-      spark, scored, Seq("avg_cost_micro", "doc_id"), "one", "rank0",
-      s"$dir#quality_ranked")
+      spark, scored, Seq("avg_cost_micro", "doc_id"), "one", "rank0")
     // total == 0 iff the rank frame is empty, in which case the projection
     // below evaluates on no rows — max(1) keeps the DIV well-defined anyway
     val divisor = math.max(total, 1L)
@@ -459,7 +455,7 @@ object TextOps {
         size(split(col("text"), " ")).cast(LongType).as("n_tokens"),
         md5(col("doc_id").cast(StringType)).as("h"))
     graft.ops.PrefixSum.exclusiveRunningSum(spark, c,
-        Seq("h", "doc_id"), "n_tokens", "cum_before", s"$dir#budget_sorted")
+        Seq("h", "doc_id"), "n_tokens", "cum_before")
       .filter(col("cum_before") + col("n_tokens") <= TokenBudget)
       .select("doc_id", "lang", "n_tokens", "cum_before")
       .orderBy("doc_id")
@@ -564,7 +560,7 @@ object TextOps {
       // engines express identically
       .withColumn("neg_tokens", -col("n_tokens"))
     graft.ops.PrefixSum.exclusiveRunningSum(spark, c,
-        Seq("neg_tokens", "doc_id"), "one", "rank0", s"$dir#shard_ranked")
+        Seq("neg_tokens", "doc_id"), "one", "rank0")
       .withColumn("fold", col("rank0") % (2 * n))
       .select(col("doc_id"), col("n_tokens"), col("rank0"),
         when(col("fold") < n, col("fold"))
@@ -598,7 +594,7 @@ object TextOps {
           col("doc_id").cast(StringType))), 1, 15), 16, 10).cast(LongType))
       .withColumn("one", lit(1L))
     val (ranked, total) = graft.ops.PrefixSum.exclusiveRunningSumWithTotal(
-      spark, docs, Seq("epoch", "ek", "doc_id"), "one", "rank0", s"$dir#shuffle_epoch")
+      spark, docs, Seq("epoch", "ek", "doc_id"), "one", "rank0")
     val perEpoch = total / ShuffleEpochs
     ranked
       .withColumn("position", col("rank0") - col("epoch") * perEpoch)
@@ -636,13 +632,11 @@ object TextOps {
     val docs = t(spark, dir, "documents")
     val weights = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
       .withColumn("w", floor(sqrt(col("n_docs").cast(DoubleType))).cast(LongType))
-    // Σw collapses to ONE driver long (O(|languages|) aggregate, memoized —
-    // the PrefixSum bounded-driver-state philosophy); a scalar-subquery
+    // Σw collapses to ONE driver long (O(|languages|) aggregate — the
+    // PrefixSum bounded-driver-state philosophy); a scalar-subquery
     // cross join against the 1-row total would read fine but plans as the
     // nested-loop shape PlanLinterSpec bans suite-wide
-    val tw = graft.SessionMemo.scalar(spark, s"$dir#temp_tw") {
-      weights.agg(sum("w")).head().getLong(0)
-    }
+    val tw = weights.agg(sum("w")).head().getLong(0)
     val quotas = weights
       .selectExpr("lang", s"CAST(($TempBudget * w) DIV $tw AS BIGINT) AS quota")
     val w = org.apache.spark.sql.expressions.Window
@@ -673,7 +667,7 @@ object TextOps {
     *
     * Scale posture: the two models collapse into ONE vocab-sized aggregate
     * (conditional sums by slice — a second scan per model would be wasted);
-    * corpus totals are memoized bounded scalars; the weight table joins
+    * corpus totals are bounded scalars; the weight table joins
     * back via a PINNED shuffle-merge (a vocabulary broadcast OOMs at web
     * scale — same pin as [[textTfidf]], spec-asserted); the final top-K
     * plans as TakeOrderedAndProject (per-partition heaps, K rows to the
@@ -687,7 +681,7 @@ object TextOps {
     val stats = tok.groupBy("token").agg(
       sum(when(isTargetDoc, 1L).otherwise(0L)).as("ct"),
       sum(when(!isTargetDoc, 1L).otherwise(0L)).as("cc"))
-    val (nt, nc, v) = graft.SessionMemo.scalar(spark, s"$dir#dsir_totals") {
+    val (nt, nc, v) = {
       val r = stats.agg(sum("ct"), sum("cc"), count(lit(1))).head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
@@ -986,7 +980,7 @@ object TextOps {
 
     val cb = bg.groupBy("prev", "cur").agg(count(lit(1)).as("cnt_bg"))
     val cu = tok.groupBy("token").agg(count(lit(1)).as("cnt_tok"))
-    val total = graft.SessionMemo.scalar(spark, s"$dir#n_corpus_tokens")(tok.count())
+    val total = tok.count()
 
     val p = lit(0.75) * (col("cnt_bg").cast(DoubleType) / col("cnt_prev").cast(DoubleType)) +
       lit(0.25) * (col("cnt_cur").cast(DoubleType) / lit(total.toDouble))
@@ -1061,7 +1055,7 @@ object TextOps {
     * the sequential-mirror / monotonicity / partition-invariance spec
     * drives (that evidence is unchanged).
     *
-    * Plan shape at 100 TB: deflate pass map-only, CPU-bound (memoized so
+    * Plan shape at 100 TB: deflate pass map-only, CPU-bound (checkpointed so
     * the share aggregate and the per-doc pass share one computation);
     * the drop share is an O(1) aggregate broadcast back — no
     * corpus-sized window. mapPartitions is justified by state: a
@@ -1095,18 +1089,18 @@ object TextOps {
 
   /** The full per-doc signal behind [[textCompressionRatio]] — ratio in
     * micro-units and the keep decision at [[CompressionKeepMin]].
-    * Memoized: the contract key reads it twice (per-doc pass + share
-    * aggregate); a 100 TB run would checkpoint this frame instead. */
-  private[graft] def textCompressionRatioRaw(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.cache(spark, s"$dir#compression_raw") {
-      import spark.implicits._
-      val docs = t(spark, dir, "documents")
-        .filter(col("text").isNotNull && length(col("text")) > 0)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-      compressionRatio(docs)
-        .withColumn("ratio_micro", expr("n_deflate * 1000000 DIV n_bytes"))
-        .withColumn("keep", col("ratio_micro") >= lit(CompressionKeepMin))
-    }
+    * Locally checkpointed: the contract key reads it twice (per-doc pass +
+    * share aggregate); a 100 TB run would checkpoint it reliably. */
+  private[graft] def textCompressionRatioRaw(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val docs = t(spark, dir, "documents")
+      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+    compressionRatio(docs)
+      .withColumn("ratio_micro", expr("n_deflate * 1000000 DIV n_bytes"))
+      .withColumn("keep", col("ratio_micro") >= lit(CompressionKeepMin))
+      .localCheckpoint()
+  }
 
   /** Keep floor for [[textCompressionRatio]]: ratios below 0.40 (the
     * corpus p5) mark template-grade repetition. */
@@ -1148,7 +1142,7 @@ object TextOps {
     * [[textBigramLogprob]]); both count tables are map-side-combined
     * groupBys; the two vocabulary joins are pinned shuffle-merge (a
     * web-scale vocabulary does not broadcast — the [[textTfidf]] rule);
-    * N and M are memoized scalar aggregates. Output is
+    * N and M are scalar aggregates. Output is
     * collocation-vocabulary-sized, ordered on the pair key — no top-k
     * boundary for a last-ulp `ln` divergence to flip. */
   def textPmiCollocations(spark: SparkSession, dir: String): DataFrame = {
@@ -1160,19 +1154,16 @@ object TextOps {
           slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
           (a, b) => struct(a.as("prev"), b.as("cur")))).as(Seq("p", "pc")))
       .select(col("pc.prev").as("prev"), col("pc.cur").as("cur"))
-    // vocabulary-sized count tables cached once per corpus dir: the scalar
-    // totals then come from the CACHED frames (M = Σ cnt_bg is a
+    // vocabulary-sized count tables, checkpointed: the scalar totals then
+    // come from the CHECKPOINTED frames (M = Σ cnt_bg is a
     // vocab-sized aggregate; N = M + D since every doc has exactly one
     // more token than bigrams, and D is a metadata-cheap count with no
     // explode) — probe #18 measured the two full-corpus .count() passes
     // this replaces as the dominant first-run cost at 10×
-    val cb = graft.SessionMemo.cache(spark, s"$dir#pmi_cb")(
-      bg.groupBy("prev", "cur").agg(count(lit(1)).as("cnt_bg")))
-    val cu = graft.SessionMemo.cache(spark, s"$dir#pmi_cu")(
-      tok.groupBy("token").agg(count(lit(1)).as("cnt_tok")))
-    val mBi = graft.SessionMemo.scalar(spark, s"$dir#n_corpus_bigrams")(
-      cb.agg(coalesce(sum("cnt_bg"), lit(0L))).collect()(0).getLong(0))
-    val nUni = mBi + graft.SessionMemo.scalar(spark, s"$dir#n_docs_text")(docs.count())
+    val cb = bg.groupBy("prev", "cur").agg(count(lit(1)).as("cnt_bg")).localCheckpoint()
+    val cu = tok.groupBy("token").agg(count(lit(1)).as("cnt_tok")).localCheckpoint()
+    val mBi = cb.agg(coalesce(sum("cnt_bg"), lit(0L))).collect()(0).getLong(0)
+    val nUni = mBi + docs.count()
     val ratio =
       (col("cnt_bg").cast(DoubleType) * lit(nUni.toDouble) * lit(nUni.toDouble)) /
         (lit(mBi.toDouble) * col("cnt_prev").cast(DoubleType) * col("cnt_cur").cast(DoubleType))

@@ -37,16 +37,15 @@ object VectorIndex {
     * the dedup_incremental arrival convention; % 10 == 0 is the new
     * batch), k by the FAISS √n rule on the base count. Bounded driver
     * state: k×dim longs. */
-  private[graft] def centsMicro(spark: SparkSession, dir: String): Seq[Array[Long]] =
-    graft.SessionMemo.scalar(spark, s"$dir#vidx_cents") {
-      val base = Similarity.ivfVecs(spark, dir).filter(col("vec_id") % 10 =!= 0)
-      val dim = graft.Tables.embeddingDim(spark, dir)
-      val k = math.max(Similarity.IvfK,
-        math.round(math.sqrt(base.count().toDouble)).toInt)
-      Similarity.lloydCentroids(spark, base, dim, k)
-        .map(_.map(x => math.round(x * 1e6)))
-        .toSeq
-    }
+  private[graft] def centsMicro(spark: SparkSession, dir: String): Seq[Array[Long]] = {
+    val base = Similarity.ivfVecs(spark, dir).filter(col("vec_id") % 10 =!= 0)
+    val dim = graft.Tables.embeddingDim(spark, dir)
+    val k = math.max(Similarity.IvfK,
+      math.round(math.sqrt(base.count().toDouble)).toInt)
+    Similarity.lloydCentroids(spark, base, dim, k)
+      .map(_.map(x => math.round(x * 1e6)))
+      .toSeq
+  }
 
   private def centsFrame(spark: SparkSession, micro: Seq[Array[Long]]): DataFrame = {
     import spark.implicits._
@@ -55,24 +54,24 @@ object VectorIndex {
       .toDF("cell", "c")
   }
 
-  /** Build the index table once per (session, corpus): v1 = the base
+  /** Build the index table over the given [[centsMicro]] centroids, into a
+    * fresh dir per call: v1 = the base
     * corpus assigned and committed; v2 = the delta batch assigned against
     * the SAME frozen centroids and appended via the OCC retrying commit.
     * Data files are written once and never rewritten — the append is pure
     * manifest metadata. */
-  private[graft] def indexTable(spark: SparkSession, dir: String): String =
-    graft.SessionMemo.dir(spark, s"$dir#vidx_table") {
-      val root = graft.Tables.scratchDir("vidx")
-      val cents = centsFrame(spark, centsMicro(spark, dir))
-      val vecs = Similarity.ivfVecs(spark, dir)
-      def assigned(pred: org.apache.spark.sql.Column) =
-        Similarity.assignCells(vecs.filter(pred), cents).select("vec_id", "cell")
-      Snapshots.commit(root, 1,
-        Snapshots.writeFileset(assigned(col("vec_id") % 10 =!= 0), root, "base", col("cell")))
-      val delta = Snapshots.writeFileset(assigned(col("vec_id") % 10 === 0), root, "delta", col("cell"))
-      Snapshots.commitRetry(root, current => current ++ delta): Unit
-      root
-    }
+  private[graft] def indexTable(spark: SparkSession, dir: String, micro: Seq[Array[Long]]): String = {
+    val root = graft.Tables.scratchDir("vidx")
+    val cents = centsFrame(spark, micro)
+    val vecs = Similarity.ivfVecs(spark, dir)
+    def assigned(pred: org.apache.spark.sql.Column) =
+      Similarity.assignCells(vecs.filter(pred), cents).select("vec_id", "cell")
+    Snapshots.commit(root, 1,
+      Snapshots.writeFileset(assigned(col("vec_id") % 10 =!= 0), root, "base", col("cell")))
+    val delta = Snapshots.writeFileset(assigned(col("vec_id") % 10 === 0), root, "delta", col("cell"))
+    Snapshots.commitRetry(root, current => current ++ delta): Unit
+    root
+  }
 
   /** `sim_index_incremental` — per-cell occupancy of the index AFTER the
     * incremental append: (cell, n_base, n_delta, n_total), read through
@@ -84,8 +83,9 @@ object VectorIndex {
     * CAS per batch; per-cell counts are the index's load-balance health
     * metric (a hot cell here is a hot probe later). */
   def simIndexIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val root = indexTable(spark, dir)
-    incrOracle = Some(incrOracleSqlOf(centsMicro(spark, dir)))
+    val micro = centsMicro(spark, dir)
+    val root = indexTable(spark, dir, micro)
+    incrOracle = Some(incrOracleSqlOf(micro))
     Snapshots.readSnapshot(spark, root)
       .groupBy("cell")
       .agg(count(when(col("vec_id") % 10 =!= 0, 1)).as("n_base"),

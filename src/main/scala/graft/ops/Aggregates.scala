@@ -117,48 +117,44 @@ object Aggregates {
     // (p=.75), so k = 4r div 4, frac4 = 4r mod 4 and
     // p_qc = 4·v(k) + frac4·(v(k+1) − v(k)) — every value an exact BIGINT,
     // matching DuckDB's quantile_cont bit-for-bit like the r14 contract.
-    val hist = graft.SessionMemo.cache(spark, s"$dir#aq_hist") {
-      cents.groupBy("l_returnflag", "cents").agg(count(lit(1)).as("c"))
-    } // reused by the prefix-sum anchor pass AND the rank-count pass
-    // O(groups) anchor rows, memoized like the IVF centroids: the anchor
-    // build is deterministic per (session, dir) and rebuilds identically
-    // every invocation; warm repeats reuse the 3 rows, cold mode
-    // (SessionMemo.clear) restores true first-touch cost.
-    val anchorRows: Seq[(String, Long, Long)] =
-      graft.SessionMemo.scalar(spark, s"$dir#aq_anchors") {
-        val (pre, _) = PrefixSum.exclusiveRunningSumWithTotal(
-          spark, hist, Seq("l_returnflag", "cents"), "c", "pre", s"$dir#aq_pre")
-        val totals = pre.groupBy("l_returnflag").agg(sum("c").as("n"))
-          .orderBy("l_returnflag").collect()
-        var acc = 0L
-        val offRows = totals.map { r =>
-          val n = r.getLong(1); val o = acc; acc += n
-          org.apache.spark.sql.Row(r.get(0), n, o)
-        }
-        val offs = spark.createDataFrame(
-          spark.sparkContext.parallelize(offRows.toSeq, 1),
-          StructType(Seq(StructField("l_returnflag", pre.schema("l_returnflag").dataType),
-            StructField("n", LongType), StructField("goff", LongType))))
-        val ranked = pre.join(broadcast(offs), Seq("l_returnflag"))
-          .withColumn("hi", col("pre") + col("c") - col("goff"))
-          .withColumn("lo", col("hi") - col("c") + 1)
-        val q50 = lit(2L) * col("n") + 2L // 4·rank of quantile_cont(0.5)
-        val q75 = lit(3L) * col("n") + 1L // 4·rank of quantile_cont(0.75)
-        // v(k): the histogram row covering rank k (k ≥ 1 always exists;
-        // the k+1 probes can be vacuous only when their frac4 factor is 0)
-        def at(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          sum(when(col("lo") <= k && col("hi") >= k, col("cents")).otherwise(lit(0L)))
-        ranked.groupBy("l_returnflag").agg(
-          at(shiftright(q50, 2)).as("v50a"),
-          at(shiftright(q50, 2) + 1).as("v50b"),
-          at(shiftright(q75, 2)).as("v75a"),
-          at(shiftright(q75, 2) + 1).as("v75b"),
-          max(q50 % 4).as("f50"), max(q75 % 4).as("f75"))
-          .select(col("l_returnflag"),
-            (col("v50a") * 4 + col("f50") * (col("v50b") - col("v50a"))).as("p50_qc"),
-            (col("v75a") * 4 + col("f75") * (col("v75b") - col("v75a"))).as("p75_qc"))
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    // checkpointed: read by the prefix-sum anchor pass AND the rank-count pass
+    val hist = cents.groupBy("l_returnflag", "cents").agg(count(lit(1)).as("c"))
+      .localCheckpoint()
+    // O(groups) anchor rows, collected to the driver like the IVF centroids
+    val anchorRows: Seq[(String, Long, Long)] = {
+      val (pre, _) = PrefixSum.exclusiveRunningSumWithTotal(
+        spark, hist, Seq("l_returnflag", "cents"), "c", "pre")
+      val totals = pre.groupBy("l_returnflag").agg(sum("c").as("n"))
+        .orderBy("l_returnflag").collect()
+      var acc = 0L
+      val offRows = totals.map { r =>
+        val n = r.getLong(1); val o = acc; acc += n
+        org.apache.spark.sql.Row(r.get(0), n, o)
       }
+      val offs = spark.createDataFrame(
+        spark.sparkContext.parallelize(offRows.toSeq, 1),
+        StructType(Seq(StructField("l_returnflag", pre.schema("l_returnflag").dataType),
+          StructField("n", LongType), StructField("goff", LongType))))
+      val ranked = pre.join(broadcast(offs), Seq("l_returnflag"))
+        .withColumn("hi", col("pre") + col("c") - col("goff"))
+        .withColumn("lo", col("hi") - col("c") + 1)
+      val q50 = lit(2L) * col("n") + 2L // 4·rank of quantile_cont(0.5)
+      val q75 = lit(3L) * col("n") + 1L // 4·rank of quantile_cont(0.75)
+      // v(k): the histogram row covering rank k (k ≥ 1 always exists;
+      // the k+1 probes can be vacuous only when their frac4 factor is 0)
+      def at(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+        sum(when(col("lo") <= k && col("hi") >= k, col("cents")).otherwise(lit(0L)))
+      ranked.groupBy("l_returnflag").agg(
+        at(shiftright(q50, 2)).as("v50a"),
+        at(shiftright(q50, 2) + 1).as("v50b"),
+        at(shiftright(q75, 2)).as("v75a"),
+        at(shiftright(q75, 2) + 1).as("v75b"),
+        max(q50 % 4).as("f50"), max(q75 % 4).as("f75"))
+        .select(col("l_returnflag"),
+          (col("v50a") * 4 + col("f50") * (col("v50b") - col("v50a"))).as("p50_qc"),
+          (col("v75a") * 4 + col("f75") * (col("v75b") - col("v75a"))).as("p75_qc"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    }
     val anchors = {
       import spark.implicits._
       anchorRows.toDF("l_returnflag", "p50_qc", "p75_qc")
@@ -274,7 +270,7 @@ object Aggregates {
     * per-group window task (probe #18: the window formulation went
     * superlinear at 100× the moment distinct values grew). */
   private def medianTimes2(spark: SparkSession, df: DataFrame, g: String, v: String,
-                           out: String, memoTag: String): DataFrame = {
+                           out: String): DataFrame = {
     val hist = df.groupBy(g, v).agg(count(lit(1)).as("c"))
     // Global two-phase prefix sum over (g, v) — NOT a per-group cumulative
     // window: `sum(c) OVER (PARTITION BY g ORDER BY v)` funnels each
@@ -284,9 +280,9 @@ object Aggregates {
     // splits big groups across partitions; in-group ranks recover from the
     // global scan by subtracting each group's exclusive start offset.
     val (pre, _) = PrefixSum.exclusiveRunningSumWithTotal(
-      spark, hist, Seq(g, v), "c", "pre", memoTag)
+      spark, hist, Seq(g, v), "c", "pre")
     // group totals + exclusive group offsets: a groups-cardinality frame
-    // computed over PrefixSum's cached layout, scanned on the driver (the
+    // computed over PrefixSum's checkpointed layout, scanned on the driver (the
     // suite's bounded-collect rule: O(groups) state, like IVF centroids) —
     // a window here would re-introduce the SinglePartition exchange.
     val totals = pre.groupBy(g).agg(sum("c").as("n")).orderBy(g).collect()
@@ -337,14 +333,13 @@ object Aggregates {
     val ev = t(spark, dir, "events")
       .filter(col("value").isNotNull)
       .select(col("event_type"), round(col("value") * 1e6).cast(LongType).as("v"))
-    val med = medianTimes2(spark, ev, "event_type", "v", "med2", s"$dir#robust_mad_h1")
+    val med = medianTimes2(spark, ev, "event_type", "v", "med2")
     val dev = ev
       .join(broadcast(med), Seq("event_type"))
       .select(col("event_type"), col("n"), col("med2"),
         abs(col("v") * 2 - col("med2")).as("dev2"))
     val mad = medianTimes2(spark,
-      dev.select(col("event_type"), col("dev2").as("v")), "event_type", "v", "mad4",
-      s"$dir#robust_mad_h2")
+      dev.select(col("event_type"), col("dev2").as("v")), "event_type", "v", "mad4")
       .drop("n")
     dev
       .join(broadcast(mad), Seq("event_type"))
@@ -455,8 +450,7 @@ object Aggregates {
         coalesce((col("value").cast(DecimalType(18, 2)) * 100).cast(LongType), lit(0L))
           .as("cents"))
     val weights = Array.tabulate(16)(k => 1L << (15 - k))
-    WindowConv.firConvolve(spark, e, Seq("us", "event_id"), "cents", weights,
-        "ewma_scaled", s"winewma:$dir")
+    WindowConv.firConvolve(spark, e, Seq("us", "event_id"), "cents", weights, "ewma_scaled")
       .orderBy("us", "event_id")
   }
 

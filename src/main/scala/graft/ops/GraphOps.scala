@@ -43,16 +43,13 @@ object GraphOps {
     val U = 1000000000000L // 1e12 micro-units per doc
     val iters = 5
     val docs = t(spark, dir, "documents").select(col("doc_id"))
-    val n = graft.SessionMemo.scalar(spark, s"$dir#n_docs")(docs.count())
+    val n = docs.count()
     val edges = docs.select(col("doc_id").as("src"), ((col("doc_id") * 7 + 3) % n).as("dst"))
       .unionByName(docs.select(col("doc_id").as("src"), ((col("doc_id") * 13 + 1) % n).as("dst")))
       .filter(col("src") =!= col("dst"))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // reused by all 5 iterations AND across repeat invocations — session-
-    // scoped memo, not a fresh .cache() per call
-    val withDeg = graft.SessionMemo.cache(spark, s"graph#$dir#withdeg") {
-      edges.join(deg, "src")
-    }
+    // checkpointed: reused by all 5 iterations
+    val withDeg = edges.join(deg, "src").localCheckpoint()
 
     var ranks = docs.select(col("doc_id"), lit(U).as("r"))
     (1 to iters).foreach { _ =>
@@ -89,17 +86,16 @@ object GraphOps {
     * near-uniform ≤ 6). */
   def graphTriangleCount(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents").select(col("doc_id"))
-    val n = graft.SessionMemo.scalar(spark, s"$dir#n_docs")(docs.count())
+    val n = docs.count()
     val e0 = docs.select(col("doc_id").as("src"), ((col("doc_id") + 1) % n).as("dst"))
       .unionByName(docs.select(col("doc_id").as("src"), ((col("doc_id") + 2) % n).as("dst")))
       .unionByName(docs.select(col("doc_id").as("src"), ((col("doc_id") * 7 + 3) % n).as("dst")))
       .filter(col("src") =!= col("dst"))
-    // both sides of the wedge join and the closing probe reuse this frame
-    val e = graft.SessionMemo.cache(spark, s"graph#$dir#tri_edges") {
-      e0.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-    }
+    // checkpointed: both sides of the wedge join and the closing probe read it
+    val e = e0.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+      .localCheckpoint()
     val w = e.as("e1").join(e.as("e2"),
         col("e1.b") === col("e2.a") && col("e2.b") > col("e1.a"))
       .select(col("e1.a").as("a"), col("e1.b").as("b"), col("e2.b").as("c"))

@@ -18,11 +18,11 @@ import org.apache.spark.sql.types.LongType
   * per-partition starting offsets → job 2 emits offset + partition-local
   * running sum. Both jobs are embarrassingly parallel.
   *
-  * The cache between the passes is load-bearing for CORRECTNESS, not just
-  * cost: the range partitioner SAMPLES its bounds, so the two passes must
-  * read the same materialized layout — re-executing the exchange could
-  * re-sample a different partitioning and misalign the offsets. Callers
-  * pass a session-memo tag so repeat invocations share one cached copy.
+  * The eager local checkpoint between the passes is load-bearing for
+  * CORRECTNESS, not just cost: the range partitioner SAMPLES its bounds, so
+  * the two passes must read the same materialized layout — re-executing the
+  * exchange could re-sample a different partitioning and misalign the
+  * offsets. The checkpoint lives as long as the returned frame.
   */
 object PrefixSum {
 
@@ -32,21 +32,20 @@ object PrefixSum {
     * orderBy for a globally sorted presentation. */
   def exclusiveRunningSum(spark: SparkSession, df: DataFrame,
                           orderCols: Seq[String], valueCol: String,
-                          outCol: String, memoTag: String): DataFrame =
-    exclusiveRunningSumWithTotal(spark, df, orderCols, valueCol, outCol, memoTag)._1
+                          outCol: String): DataFrame =
+    exclusiveRunningSumWithTotal(spark, df, orderCols, valueCol, outCol)._1
 
   /** [[exclusiveRunningSum]] plus the GLOBAL total of `valueCol` — the last
     * entry of the driver's exclusive scan, i.e. already computed from the
     * collected per-partition sums. Callers that need the total (quality
     * tiering's rank divisor) previously ran a separate `count()` job over
-    * the cached frame for a number the scan had in hand. */
+    * the sorted frame for a number the scan had in hand. */
   def exclusiveRunningSumWithTotal(spark: SparkSession, df: DataFrame,
                                    orderCols: Seq[String], valueCol: String,
-                                   outCol: String, memoTag: String): (DataFrame, Long) = {
-    val sorted = graft.SessionMemo.cache(spark, memoTag) {
-      df.repartitionByRange(orderCols.map(col): _*)
-        .sortWithinPartitions(orderCols.map(col): _*)
-    }
+                                   outCol: String): (DataFrame, Long) = {
+    val sorted = df.repartitionByRange(orderCols.map(col): _*)
+      .sortWithinPartitions(orderCols.map(col): _*)
+      .localCheckpoint()
     val vIdx = sorted.schema.fieldIndex(valueCol)
     require(sorted.schema(vIdx).dataType == LongType,
       s"$valueCol must be LongType, got ${sorted.schema(vIdx).dataType}")

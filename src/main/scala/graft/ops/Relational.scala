@@ -18,22 +18,13 @@ import graft.etl.EtlOps
   */
 object Relational {
 
-  /** Memoized staging dirs for the write-then-read operators: one write per
-    * (JVM, sfDir, tag) instead of a fresh temp copy per invocation — tests
-    * and bench call these builders repeatedly, and unbounded /tmp copies of
-    * the dataset are both a leak and benchmark noise. */
-  private val stagingDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Forget staged dirs so the next call re-writes them (before every Bench
-    * call; dirs themselves are reaped by scratchDir's exit hook). */
-  def clearStaged(): Unit = stagingDirs.clear()
-
-  private[ops] def staged(sfDir: String, tag: String)(write: String => Unit): String =
-    stagingDirs.computeIfAbsent(s"$sfDir#$tag", _ => {
-      val dir = graft.Tables.scratchDir(tag)
-      write(dir)
-      dir
-    })
+  /** A fresh staging dir for the write-then-read operators, written by
+    * `write` on every call; scratchDir's exit hook reaps it. */
+  private[ops] def staged(tag: String)(write: String => Unit): String = {
+    val dir = graft.Tables.scratchDir(tag)
+    write(dir)
+    dir
+  }
 
   // --- scans -----------------------------------------------------------------
 
@@ -49,7 +40,7 @@ object Relational {
     * pinned schema, config.py:37): round-trip nation through CSV with an
     * explicit StructType (no schema inference pass — one read, not two). */
   def scanCsvSchema(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "csv") { p =>
+    val tmp = staged("csv") { p =>
       t(spark, dir, "nation").write.mode("overwrite").option("header", "true").csv(p)
     }
     val schema = StructType(Seq(
@@ -65,7 +56,7 @@ object Relational {
     * drops non-matching directories before any IO — the same mechanism the
     * reference's start_block=/end_block= layout enables for consumers. */
   def scanPartitionPruned(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "part") { p =>
+    val tmp = staged("part") { p =>
       t(spark, dir, "orders").write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(p)
     }
@@ -90,7 +81,7 @@ object Relational {
     * sort-on-write (or Z-order, `sink_zorder`) is what makes min/max
     * footers selective. */
   def scanRowgroupPruned(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "rgsort") { p =>
+    val tmp = staged("rgsort") { p =>
       t(spark, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .repartition(1) // one file, many row groups: isolates stat skipping from file pruning
@@ -347,12 +338,12 @@ object Relational {
     * MICRO-BATCH path: `readStream` follows the simulated chain head
     * (blocksPerTrigger blocks admitted per trigger, offsets = block
     * numbers durable in the checkpoint), lands each microbatch in a
-    * parquet sink, and the aggregation runs over the committed sink. Runs
-    * once per (session, range) — SessionMemo.dir, the StreamOps staged-run
-    * contract; the oracle is the SAME deterministic-content SQL as the
-    * batch `source_blockrange`, i.e. the check asserts stream ≡ batch. */
+    * parquet sink, and the aggregation runs over the committed sink. The
+    * stream runs once per call, into a fresh scratch dir; the oracle is the
+    * SAME deterministic-content SQL as the batch `source_blockrange`, i.e.
+    * the check asserts stream ≡ batch. */
   def sourceBlockRangeStream(spark: SparkSession, dir: String): DataFrame = {
-    val sink = graft.SessionMemo.dir(spark, "blockrange_stream#0-99999") {
+    val sink = {
       val root = graft.Tables.scratchDir("brs_stream")
       val q = spark.readStream.format("graft.sources.BlockRangeSource")
         .option("start", 0L).option("end", 99999L)
@@ -485,16 +476,15 @@ object Relational {
     * exchanges: 4 → 1 (plus the presentation sort). Pairs with
     * `next > k+1` are exactly the gaps.
     *
-    * The cache between the three jobs is load-bearing for CORRECTNESS, not
-    * just cost (the PrefixSum rule): the range partitioner SAMPLES its
+    * The checkpoint between the three jobs is load-bearing for CORRECTNESS,
+    * not just cost (the PrefixSum rule): the range partitioner SAMPLES its
     * bounds, so the boundary-collect job and the pair-scan job must read
     * the same materialized layout. */
   def etlGapDetect(spark: SparkSession, dir: String): DataFrame =
     gapsOf(spark,
       t(spark, dir, "orders")
         .filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey").as("k")),
-      s"$dir#gap_sorted")
+        .select(col("o_orderkey").as("k")))
 
   /** Core of [[etlGapDetect]] over any LongType `k` column: the maximal
     * runs absent from the key set, as (gap_start, gap_end, n_missing).
@@ -503,13 +493,10 @@ object Relational {
     * can drive constructed key sets — duplicates, gaps exactly on
     * partition boundaries, empty partitions — through the identical
     * plumbing. */
-  private[graft] def gapsOf(spark: SparkSession, keys: DataFrame,
-                            memoTag: String): DataFrame = {
+  private[graft] def gapsOf(spark: SparkSession, keys: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val sorted = graft.SessionMemo.cache(spark, memoTag) {
-      keys.repartitionByRange(col("k")).sortWithinPartitions("k")
-    }
+    val sorted = keys.repartitionByRange(col("k")).sortWithinPartitions("k").localCheckpoint()
     val internal = sorted.queryExecution.toRdd
     val nParts = internal.getNumPartitions
     // job 1 — O(P) driver state: each non-empty partition's first key
@@ -657,7 +644,7 @@ object Relational {
     * jobs re-map drifting CSV schemas per batch); Spark merges parquet
     * footers instead of re-reading data. */
   def scanSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "evolve") { p =>
+    val tmp = staged("evolve") { p =>
       t(spark, dir, "nation").select(col("n_nationkey"), col("n_name"), lit("v1").as("src"))
         .write.mode("overwrite").parquet(s"$p/v1")
       t(spark, dir, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey"), lit("v2").as("src"))
@@ -675,7 +662,7 @@ object Relational {
     * round-trip is a pure layout change, same contract as
     * [[etlCompactSmallFiles]]. */
   def scanOrc(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "orc") { p =>
+    val tmp = staged("orc") { p =>
       t(spark, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .write.mode("overwrite").orc(p)
@@ -719,27 +706,22 @@ object Relational {
     * compaction must be a pure layout change, so it oracle-matches the
     * source-table aggregate exactly. File-count/size assertions live in the
     * spec. */
-  def etlCompactSmallFiles(spark: SparkSession, dir: String): DataFrame = {
-    val small = staged(dir, "smallfiles") { sp =>
-      t(spark, dir, "events").select("event_id", "user_id", "event_type", "value")
-        .repartition(64).write.mode("overwrite").parquet(sp)
-    }
-    val compacted = staged(dir, "compacted") { p =>
-      EtlOps.compact(spark, small, p, 4L << 20)
-    }
-    spark.read.parquet(compacted)
+  def etlCompactSmallFiles(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(compactionDirs(spark, dir)._2)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sum_value"))
       .orderBy("event_type")
-  }
 
-  /** The two staged layouts for the spec's file-count assertion. The staging
-    * writes run eagerly inside etlCompactSmallFiles, so after one call both
-    * directories exist. */
+  /** The staging step of [[etlCompactSmallFiles]]: writes the 64-file
+    * ingest layout, compacts it, and returns both dirs (small, compacted)
+    * — the spec's file-count assertion reads them. */
   private[ops] def compactionDirs(spark: SparkSession, dir: String): (String, String) = {
-    etlCompactSmallFiles(spark, dir)
-    (stagingDirs.get(s"$dir#smallfiles"), stagingDirs.get(s"$dir#compacted"))
+    val small = staged("smallfiles") { sp =>
+      t(spark, dir, "events").select("event_id", "user_id", "event_type", "value")
+        .repartition(64).write.mode("overwrite").parquet(sp)
+    }
+    (small, staged("compacted") { p => EtlOps.compact(spark, small, p, 4L << 20) })
   }
 
   /** `etl_scd2` — type-2 slowly-changing dimension from a change log: each
@@ -808,7 +790,7 @@ object Relational {
     * is one scan, and a corrupt line lands in the PERMISSIVE null row rather
     * than failing the job. */
   def scanJsonl(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "jsonl") { p =>
+    val tmp = staged("jsonl") { p =>
       t(spark, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").json(p)
@@ -842,7 +824,7 @@ object Relational {
     * z-value keeps files size-balanced; the readback is the query result, so
     * the oracle checks the interleave math bit-for-bit. */
   def sinkZorder(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "zorder") { p =>
+    val tmp = staged("zorder") { p =>
       val src = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           datediff(col("o_orderdate"), lit("1970-01-01")).cast(LongType).as("d"))
@@ -874,7 +856,7 @@ object Relational {
     sinkPartitioned(spark, dir, "csv")
 
   private def sinkPartitioned(spark: SparkSession, dir: String, format: String): DataFrame = {
-    val tmp = staged(dir, s"sink_$format") { p =>
+    val tmp = staged(s"sink_$format") { p =>
       val src = t(spark, dir, "lineitem").select("l_orderkey", "l_quantity")
       // 5000-key ranges: few, size-balanced partitions (the reference hand-
       // balances 131 for the full chain). 1000-key ranges produced 150 tiny
@@ -902,7 +884,7 @@ object Relational {
     * when payload structs carry wide blobs. RelationalSpec pins the pruned
     * ReadSchema in the plan text. */
   def scanNestedPruned(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = staged(dir, "nested") { p =>
+    val tmp = staged("nested") { p =>
       t(spark, dir, "events")
         .select(col("event_id"),
           struct(col("user_id"), col("event_type")).as("actor"),
@@ -924,23 +906,19 @@ object Relational {
     * table; the reference's Data Pipeline activities have no audit at all —
     * this is the Spark-native upgrade. The observed metrics surface as a
     * one-row DataFrame, oracle-checked against the same aggregates in SQL.
-    * Memoized per (session, dir): one write+observe, repeat calls reuse the
-    * collected row (cold mode clears the memo and re-runs the real thing). */
+    * Every call runs the write and collects the observed row. */
   def etlObserveMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = graft.SessionMemo.scalar(spark, s"$dir#observe_metrics") {
-      val obs = org.apache.spark.sql.Observation(s"audit_$dir")
-      val p = graft.Tables.scratchDir("observe")
-      t(spark, dir, "lineitem")
-        .observe(obs,
-          count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sum_qty"),
-          count(when(col("l_returnflag") === "R", 1)).as("n_returned"),
-          min(unix_micros(col("l_shipdate").cast("timestamp"))).as("min_ship_us"),
-          max(unix_micros(col("l_shipdate").cast("timestamp"))).as("max_ship_us"))
-        .write.mode("overwrite").parquet(p)
-      obs.get
-    }
+    val obs = org.apache.spark.sql.Observation(s"audit_$dir")
+    t(spark, dir, "lineitem")
+      .observe(obs,
+        count(lit(1)).as("n_rows"),
+        sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sum_qty"),
+        count(when(col("l_returnflag") === "R", 1)).as("n_returned"),
+        min(unix_micros(col("l_shipdate").cast("timestamp"))).as("min_ship_us"),
+        max(unix_micros(col("l_shipdate").cast("timestamp"))).as("max_ship_us"))
+      .write.mode("overwrite").parquet(graft.Tables.scratchDir("observe"))
+    val m = obs.get
     // On an empty input sum/min/max observe as null (sum_qty would NPE and
     // the bounds would silently unbox to epoch-1970 zeros — a plausible-
     // looking but fabricated audit row). An audit over nothing is a

@@ -121,10 +121,10 @@ object ScalePatterns {
         sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sum_qty"))
       .orderBy("l_returnflag")
 
-  /** The partitioned-orders fact for DPP, written once per (session, sfDir):
-    * Hive layout `o_month=yyyy-MM/` — the on-disk shape DPP prunes. */
+  /** The partitioned-orders fact for DPP, written on every call: Hive
+    * layout `o_month=yyyy-MM/` — the on-disk shape DPP prunes. */
   private def ensureMonthPartitionedOrders(spark: SparkSession, dir: String): String =
-    Relational.staged(dir, "dpp_orders") { p =>
+    Relational.staged("dpp_orders") { p =>
       t(spark, dir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .repartition(col("o_month"))
@@ -160,12 +160,8 @@ object ScalePatterns {
     val dim = t(spark, dir, "orders")
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("m")).distinct()
       .withColumn("y", substring(col("m"), 1, 4))
-    // memoized: the probe is a bounded aggregate, but running it at plan
-    // construction on EVERY invocation re-scans orders per call (the same
-    // repeat-job leak the decontaminate broadcast probe had, r10 ADVICE)
-    val minYear = graft.SessionMemo.scalar(spark, s"$dir#dpp_min_year") {
-      dim.agg(min(col("y"))).head().getString(0)
-    }
+    // a bounded aggregate, probed at plan construction
+    val minYear = dim.agg(min(col("y"))).head().getString(0)
     fact.join(broadcast(dim.filter(col("y") === minYear)), col("o_month") === col("m"))
   }
 
@@ -188,12 +184,13 @@ object ScalePatterns {
     if (!spark.catalog.tableExists(baseT)) {
       spark.sql(s"CREATE TABLE $baseT USING parquet LOCATION '$dir/orders.parquet'"): Unit
     }
-    // The partitioned table points at a JVM-scoped scratch dir. A PERSISTENT
-    // metastore (spark-shell defaults to Hive/derby in cwd) can carry a
-    // registration from a dead JVM whose scratch dir is gone — SHOW
-    // PARTITIONS then lists 80 phantom partitions over zero files and every
-    // scan is silently empty. Self-heal: if the registered location is not
-    // THIS JVM's staged dir, drop and re-register.
+    // The partitioned table points at this call's scratch dir. An earlier
+    // call's registration (or, in a PERSISTENT metastore such as
+    // spark-shell's Hive/derby in cwd, a dead JVM's) points at another dir
+    // that may be gone — SHOW PARTITIONS then lists 80 phantom partitions
+    // over zero files and every scan is silently empty. Self-heal: if the
+    // registered location is not this call's staged dir, drop and
+    // re-register.
     val p = ensureMonthPartitionedOrders(spark, dir)
     val staleLoc = spark.catalog.tableExists(partT) && {
       val loc = spark.sql(s"DESCRIBE FORMATTED $partT")
@@ -217,10 +214,8 @@ object ScalePatterns {
     * regenerates. */
   def scanCatalog(spark: SparkSession, dir: String): DataFrame = {
     val (baseT, partT) = ensureCatalogOrders(spark, dir)
-    val minMonth = graft.SessionMemo.scalar(spark, s"$dir#catalog_min_month") {
-      spark.table(baseT)
-        .agg(min(date_format(col("o_orderdate"), "yyyy-MM"))).head().getString(0)
-    }
+    val minMonth = spark.table(baseT)
+      .agg(min(date_format(col("o_orderdate"), "yyyy-MM"))).head().getString(0)
     catalogPrunedScan(spark, partT, minMonth)
       .groupBy("o_month")
       .agg(count(lit(1)).as("n"),

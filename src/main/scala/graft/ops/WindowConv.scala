@@ -27,9 +27,9 @@ import org.apache.spark.sql.types.LongType
   * every field through the RowEncoder, which probe #16 measured at ~2× the
   * whole operator's warm cost at 10M rows.
   *
-  * The cache between passes is load-bearing for correctness (the range
-  * partitioner samples its bounds; both jobs must see one materialized
-  * layout) — same contract as [[PrefixSum]].
+  * The checkpoint between passes is load-bearing for correctness (the
+  * range partitioner samples its bounds; both jobs must see one
+  * materialized layout) — same contract as [[PrefixSum]].
   */
 object WindowConv {
 
@@ -40,14 +40,12 @@ object WindowConv {
     * partition-ordered by `orderCols`; apply a final orderBy for a
     * globally sorted presentation. */
   def firConvolve(spark: SparkSession, df: DataFrame, orderCols: Seq[String],
-                  valueCol: String, weights: Array[Long], outCol: String,
-                  memoTag: String): DataFrame = {
+                  valueCol: String, weights: Array[Long], outCol: String): DataFrame = {
     require(weights.nonEmpty, "at least one tap")
     val carryLen = weights.length - 1
-    val sorted = graft.SessionMemo.cache(spark, memoTag) {
-      df.repartitionByRange(orderCols.map(col): _*)
-        .sortWithinPartitions(orderCols.map(col): _*)
-    }
+    val sorted = df.repartitionByRange(orderCols.map(col): _*)
+      .sortWithinPartitions(orderCols.map(col): _*)
+      .localCheckpoint()
     val vIdx = sorted.schema.fieldIndex(valueCol)
     require(sorted.schema(vIdx).dataType == LongType,
       s"$valueCol must be LongType, got ${sorted.schema(vIdx).dataType}")

@@ -32,9 +32,9 @@ import graft.llm.{Dedup, TextOps}
   * computed over the FULL corpus inside their stage (a near-duplicate still
   * votes its cluster's canonical even though an earlier gate dropped it),
   * while the per-document survivor set threads conjunctively through the
-  * staged checkpoints. The corpus-wide frames are session-memoized by the
-  * underlying operators, so the staged form re-reads small checkpoints but
-  * never re-tokenizes the corpus per stage.
+  * staged checkpoints. Each corpus-wide frame is built once, inside its
+  * own stage, so the staged form re-reads small checkpoints but never
+  * re-tokenizes the corpus per stage.
   */
 object CurationPipeline {
 
@@ -110,19 +110,14 @@ object CurationPipeline {
     * pipeline (healthy config) into a scratch dir, fail loudly if any stage
     * did not succeed, and return the final staged table. Its oracle is the
     * SAME SQL as `llm_corpus_pipeline`: the staged execution must be
-    * indistinguishable from the composed single-plan execution. The run is
-    * session-memoized like the other write-then-read sink keys (cold bench
-    * mode clears the memo and pays the full staged write again). */
+    * indistinguishable from the composed single-plan execution. Every call
+    * runs the full staged write, like the other write-then-read sink keys. */
   def query(spark: SparkSession, dir: String): DataFrame = {
-    val back = graft.SessionMemo.cache(spark, s"$dir#curation_staged") {
-      val d = graft.Tables.scratchDir("curation")
-      val res = run(spark, PipelineConfig(), dir, d)
-      val bad = res.stages.collect {
-        case (n, s) if !s.isInstanceOf[StageStatus.Succeeded] => s"$n: $s"
-      }
-      require(bad.isEmpty, s"curation stages failed: ${bad.mkString("; ")}")
-      res.tables("substring_cut")
+    val res = run(spark, PipelineConfig(), dir, graft.Tables.scratchDir("curation"))
+    val bad = res.stages.collect {
+      case (n, s) if !s.isInstanceOf[StageStatus.Succeeded] => s"$n: $s"
     }
-    back.orderBy("doc_id")
+    require(bad.isEmpty, s"curation stages failed: ${bad.mkString("; ")}")
+    res.tables("substring_cut").orderBy("doc_id")
   }
 }

@@ -59,17 +59,6 @@ object StreamOps {
       .orderBy("event_id")
   }
 
-  /** Memoized staging/output dirs (same contract as Relational.staged): the
-    * streaming pipeline runs once per (JVM, sfDir); repeat calls read the
-    * committed sink. */
-  private val stagedRuns = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Forget completed runs so the next call re-executes the full streaming
-    * pipeline (fresh staging + checkpoint dirs). Bench calls this before
-    * every measured call; the committed dirs themselves are reaped by
-    * scratchDir's exit hook. */
-  def clearStagedRuns(): Unit = stagedRuns.clear()
-
   /** `stream_file_pipeline` — the full Structured Streaming loop as one
     * operator: files arrive in a source directory, `readStream` tails it,
     * a watermarked 5-minute tumbling aggregation closes windows, and
@@ -116,7 +105,7 @@ object StreamOps {
 
   def streamFilePipeline(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val outDir = stagedRuns.computeIfAbsent(s"$dir#file_pipeline", _ => {
+    val outDir = {
       val root = graft.Tables.scratchDir("stream")
       val (src, sink, ckpt) = (s"$root/src", s"$root/sink", s"$root/ckpt")
       stageEventsWithSentinel(spark, dir, src)
@@ -138,7 +127,7 @@ object StreamOps {
         .start()
       q.awaitTermination()
       sink
-    })
+    }
     spark.read.parquet(outDir).orderBy("win_start_us")
   }
 
@@ -206,7 +195,7 @@ object StreamOps {
     * shares its oracle. */
   def streamForeachBatch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val outDir = stagedRuns.computeIfAbsent(s"$dir#foreach_batch", _ => {
+    val outDir = {
       val root = graft.Tables.scratchDir("stream_fb")
       val (src, store, audit, ckpt) = (s"$root/src", s"$root/store", s"$root/audit", s"$root/ckpt")
       stageEventsWithSentinel(spark, dir, src)
@@ -229,7 +218,7 @@ object StreamOps {
         .start()
       q.awaitTermination()
       root
-    })
+    }
     readWindowStore(spark, s"$outDir/store")
       .select(col("win_start_us"), col("n"), col("sum_value"))
       .orderBy("win_start_us")
@@ -445,8 +434,7 @@ object StreamOps {
     * executor state store holds ZERO bytes — spec-proven claim-identical
     * to this fold across compaction boundaries and a replayed batch. */
   def streamDedupMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val sigDocs = graft.llm.Dedup.minhashSignatureIndex(
-      spark, t(spark, dir, "documents"), Some(s"$dir#minhash_sigs"))
+    val sigDocs = graft.llm.Dedup.minhashSignatureIndex(spark, t(spark, dir, "documents"))
     val cand = bandClaims(sigDocs).distinct()
     val va = sigDocs.select(col("doc_id"), col("shs").as("sa"))
     val vb = sigDocs.select(col("doc_id").as("cand"), col("shs").as("sb"))
@@ -807,7 +795,7 @@ object StreamOps {
   def streamExactlyOnceSink(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import graft.etl.Snapshots
-    val root = stagedRuns.computeIfAbsent(s"$dir#eos_sink", _ => {
+    val root = {
       val r = graft.Tables.scratchDir("stream_eos")
       val (src, table, ckpt) = (s"$r/src", s"$r/table", s"$r/ckpt")
       t(spark, dir, "events")
@@ -834,7 +822,7 @@ object StreamOps {
       require(!replayed && Snapshots.latestVersion(table) == vBefore,
         "exactly-once sink re-committed a replayed batch")
       r
-    })
+    }
     Snapshots.readSnapshot(spark, s"$root/table")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),

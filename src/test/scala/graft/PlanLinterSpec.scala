@@ -65,9 +65,9 @@ class PlanLinterSpec extends SparkTestBase {
 
   test("no query key physically plans an unintended cartesian or nested-loop join") {
     val failures = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       try {
-        lintOne(name, fn(spark, sf)).foreach(failures += _)
+        lintOne(name, built(name)).foreach(failures += _)
       } catch {
         case e: Throwable =>
           failures += s"$name failed to build: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
@@ -81,8 +81,7 @@ class PlanLinterSpec extends SparkTestBase {
     // stops planning a nested loop (e.g. rewritten as an equi-join), its
     // entry must be removed so the lint regains teeth there.
     val stale = allowNestedLoop.keys.toSeq.sorted.flatMap { name =>
-      val physical =
-        SparkEntry.queries(name)(spark, sf).queryExecution.sparkPlan.toString
+      val physical = built(name).queryExecution.sparkPlan.toString
       if (physical.contains("BroadcastNestedLoopJoin") ||
         physical.contains("CartesianProduct")) None
       else Some(s"$name is allowlisted but no longer plans a nested loop — remove it")
@@ -100,9 +99,9 @@ class PlanLinterSpec extends SparkTestBase {
     // CartesianProduct (an unbroadcast loop).
     val joinNode =
       "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)".r
-    val joinHeavy = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val joinHeavy = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       try {
-        val physical = fn(spark, sf).queryExecution.sparkPlan.toString
+        val physical = built(name).queryExecution.sparkPlan.toString
         if (joinNode.findAllIn(physical).size >= 2 || allowNestedLoop.contains(name))
           Some(name)
         else None
@@ -110,7 +109,7 @@ class PlanLinterSpec extends SparkTestBase {
     }
     assert(joinHeavy.size >= 10, s"derived join-heavy list suspiciously small: $joinHeavy")
     val failures = joinHeavy.flatMap { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
+      val df = built(name)
       df.collect()
       val executed = df.queryExecution.executedPlan.toString
       val degraded =

@@ -33,7 +33,7 @@ class PropertySpec extends SparkTestBase {
       val rows = keys.zip(vals)
       val df = rows.toDF("k", "v").repartition(parts)
       val got = graft.ops.PrefixSum
-        .exclusiveRunningSum(spark, df, Seq("k"), "v", "run", s"prop#psum$i")
+        .exclusiveRunningSum(spark, df, Seq("k"), "v", "run")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy(_._1)
       var acc = 0L
@@ -59,7 +59,7 @@ class PropertySpec extends SparkTestBase {
       val rows = keys.zip(vals)
       val df = rows.toDF("k", "v").repartition(parts)
       val got = graft.ops.WindowConv
-        .firConvolve(spark, df, Seq("k"), "v", w, "y", s"prop#fir$i")
+        .firConvolve(spark, df, Seq("k"), "v", w, "y")
         .collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1)
       val sortedVals = rows.sortBy(_._1).map(_._2)
       val expected = rows.sortBy(_._1).zipWithIndex.map { case ((k, _), t) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf: String = "/root/testdata/sf0.001"
+
+  /** The `SparkEntry.queries` frame of `key` on [[sf]], built once per JVM
+    * and shared by every suite. Operators keep no state across calls, so a
+    * spec that only reads a key's plan or rows takes this fixture instead
+    * of re-running the key's eager work; a spec that checks a fresh call
+    * (determinism, staging) calls the operator itself. */
+  def built(key: String): DataFrame = SparkTestBase.built(key, sf)
 }
 
 object SparkTestBase {
@@ -28,4 +35,9 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val builtFrames = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+
+  def built(key: String, sf: String): DataFrame =
+    builtFrames.computeIfAbsent((key, sf), _ => SparkEntry.queries(key)(session, sf))
 }

@@ -11,6 +11,9 @@ import graft.SparkTestBase
   */
 class BpeSpec extends SparkTestBase {
 
+  /** The corpus-trained merge rules, trained once for the suite. */
+  private lazy val rules = Bpe.trainedMerges(spark, sf).map { case (_, a, b, _, _) => (a, b) }
+
   /** Sequential reference: pre-token-freq map → byte symbolization →
     * greedy merge loop, identical tie-break (count desc, left asc, right
     * asc). */
@@ -91,7 +94,6 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("text_bpe_encode matches a driver-side re-encode and is consistent") {
-    val rules = Bpe.trainedMerges(spark, sf).map { case (_, a, b, _, _) => (a, b) }
     val got = Bpe.textBpeEncode(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toMap2
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -151,12 +153,11 @@ class BpeSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(got.nonEmpty)
     // survivors = the curation pipeline's output, exactly
-    val surv = Dedup.llmCorpusPipeline(spark, sf)
+    val surv = built("llm_corpus_pipeline")
       .select("doc_id", "lang", "text_cut").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     assert(got.map(_._1).sorted.toSeq == surv.map(_._1).sorted.toSeq)
     // subword counts = driver-side re-encode of the post-cut text
-    val rules = Bpe.trainedMerges(spark, sf).map { case (_, a, b, _, _) => (a, b) }
     val wantSub = surv.map { case (id, _, text) =>
       val toks =
         if (text == null || text.isEmpty) Vector.empty[String]

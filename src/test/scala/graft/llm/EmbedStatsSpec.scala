@@ -40,7 +40,7 @@ class EmbedStatsSpec extends SparkTestBase {
 
   test("embed_pca_project: structural contract + projection recompute") {
     val dim = graft.Tables.embeddingDim(spark, sf)
-    val (comps, evals) = EmbedStats.pcaComponents(spark, sf)
+    val (comps, evals) = EmbedStats.pcaComponents(EmbedStats.moments(spark, sf))
     assert(comps.length == EmbedStats.PcaK && evals.length == EmbedStats.PcaK)
 
     // eigenvalues strictly descending (random corpus → no degenerate ties)

@@ -352,7 +352,8 @@ class LlmOpsSpec extends SparkTestBase {
   }
 
   test("sim_search_ivfpq: 5 ranked rows per query, deterministic, genuinely compressed codes") {
-    val out = Similarity.simSearchIvfPq(spark, sf).collect()
+    val (first, enc) = Similarity.ivfPqWithCodes(spark, sf)
+    val out = first.collect()
     val byQuery = out.groupBy(_.getLong(0))
     assert(byQuery.size == 10)
     byQuery.foreach { case (q, rows) =>
@@ -365,8 +366,6 @@ class LlmOpsSpec extends SparkTestBase {
     // 32x-compression claim (8 small ints vs 64 floats) is structural, and
     // the codebooks are genuinely used: more than one code value appears
     // per subspace (a degenerate codebook would collapse ADC to a constant)
-    val enc = graft.SessionMemo.cache(spark, s"$sf#ivfpq_codes")(
-      fail("codes frame must already be memoized by the query above"))
     val codes = enc.collect().map(_.getSeq[Int](enc.schema.fieldIndex("codes")))
     assert(codes.nonEmpty && codes.forall(c => c.length == 8 && c.forall(j => j >= 0 && j < 16)))
     assert((0 until 8).forall(m => codes.map(_(m)).distinct.length > 1))
@@ -453,8 +452,7 @@ class LlmOpsSpec extends SparkTestBase {
   test("stagedAnchors: staged id-prefix search equals the unbounded exact join at every stage-loop forcing") {
     import Similarity.HardNeg._
     import org.apache.spark.sql.expressions.Window
-    val sigDocs = Dedup.minhashSignatureIndex(spark, graft.Tables.t(spark, sf, "documents"),
-      Some(s"$sf#minhash_sigs"))
+    val sigDocs = Dedup.minhashSignatureIndex(spark, graft.Tables.t(spark, sf, "documents"))
     // reference = the r13 full-corpus exact join's anchor set
     val pairs = Dedup.setsimPrefixPairs(spark, sigDocs.select(col("doc_id"), col("shs")), 8, 10)
     val sym = pairs.select(col("doc_a").as("anchor_id"), col("doc_b").as("p"), col("jaccard"))
@@ -1009,7 +1007,7 @@ class LlmOpsSpec extends SparkTestBase {
   }
 
   test("llm_corpus_pipeline composes its stages exactly (survivor set, token accounting, cut text)") {
-    val rows = Dedup.llmCorpusPipeline(spark, sf).collect()
+    val rows = built("llm_corpus_pipeline").collect()
     val gotIds = rows.map(_.getAs[Long]("doc_id")).toSet
     // survivor set = quality ∩ repetition-keep ∩ decontaminated ∩ canonical,
     // each side computed by its own already-spec-verified operator
@@ -1060,7 +1058,7 @@ class LlmOpsSpec extends SparkTestBase {
     assert(f.head._3 == graft.Tables.t(spark, sf, "documents").count())
     // the funnel's terminal numbers equal the composed pipeline's output:
     // same survivor count, same final token mass
-    val pipe = Dedup.llmCorpusPipeline(spark, sf).collect()
+    val pipe = built("llm_corpus_pipeline").collect()
     assert(f.last._4 == pipe.length, "funnel survivors != pipeline rows")
     assert(f.last._7 == pipe.map(_.getAs[Long]("n_tokens_final")).sum,
       "funnel tokens_out != pipeline n_tokens_final mass")
@@ -1189,11 +1187,10 @@ class LlmOpsSpec extends SparkTestBase {
   test("dedup_semantic applies the SemDeDup within-cluster rule exactly; plants are deduped") {
     val out = Dedup.dedupSemantic(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    // mirror the rule exactly from the memoized assignment frame (the same
-    // cells/d2c the operator used): keep i iff no same-cell j earlier in
-    // (d2c desc, vec_id asc) order has cosine(i,j) >= 0.95
-    val assigned = graft.SessionMemo.cache(spark, s"dedup#$sf#semdedup_assign")(
-      fail("assignment frame must be memoized by the query above")).collect()
+    // mirror the rule exactly from the assignment frame (the same
+    // deterministic cells/d2c the operator builds): keep i iff no same-cell
+    // j earlier in (d2c desc, vec_id asc) order has cosine(i,j) >= 0.95
+    val assigned = Dedup.semanticAssignment(spark, sf).collect()
       .map { r =>
         (r.getLong(r.fieldIndex("vec_id")),
           r.getSeq[Double](r.fieldIndex("v")).toArray,

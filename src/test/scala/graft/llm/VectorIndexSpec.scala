@@ -15,7 +15,8 @@ class VectorIndexSpec extends SparkTestBase {
     import graft.etl.Snapshots
     val out = VectorIndex.simIndexIncremental(spark, sf).collect()
     assert(out.nonEmpty)
-    val root = VectorIndex.indexTable(spark, sf)
+    val micro = VectorIndex.centsMicro(spark, sf)
+    val root = VectorIndex.indexTable(spark, sf, micro)
 
     // two committed versions: base, then the OCC append
     assert(Snapshots.latestVersion(root) == 2L)
@@ -30,7 +31,6 @@ class VectorIndexSpec extends SparkTestBase {
 
     // incremental maintenance ≡ full rebuild with the same frozen centroids:
     // v2's (vec_id, cell) set equals assigning the WHOLE corpus in one pass
-    val micro = VectorIndex.centsMicro(spark, sf)
     val cents = {
       import spark.implicits._
       micro.zipWithIndex.map { case (m, i) => (i.toLong, m.map(_ / 1e6).toSeq) }
@@ -101,7 +101,7 @@ class VectorIndexSpec extends SparkTestBase {
     // version count
     val contended = Snapshots.readSnapshot(spark, root)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toSet
-    val production = Snapshots.readSnapshot(spark, VectorIndex.indexTable(spark, sf))
+    val production = Snapshots.readSnapshot(spark, VectorIndex.indexTable(spark, sf, micro))
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toSet
     assert(contended == production, "forced-conflict table diverged from the uncontended index")
   }

@@ -227,7 +227,7 @@ class RelationalSpec extends SparkTestBase {
       // duplicates (every key 3x), a giant hole 30..169, and singletons
       val ks = (Seq(1L, 2L, 3L, 29L, 170L, 171L, 199L) ++ Seq(5L, 5L, 5L))
         .flatMap(k => Seq(k, k, k))
-      val got = Relational.gapsOf(spark, ks.toDF("k"), s"spec#gaps#${ks.hashCode}")
+      val got = Relational.gapsOf(spark, ks.toDF("k"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val sortedKs = ks.distinct.sorted
       val expected = sortedKs.zip(sortedKs.tail).collect {

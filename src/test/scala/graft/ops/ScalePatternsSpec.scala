@@ -171,7 +171,7 @@ class ScalePatternsSpec extends SparkTestBase {
           org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType, nullable = false))))
     val weights = Array.tabulate(16)(k => 1L << (15 - k))
-    val got = WindowConv.firConvolve(spark, df, Seq("seq"), "x", weights, "y", "spec:fir41")
+    val got = WindowConv.firConvolve(spark, df, Seq("seq"), "x", weights, "y")
       .orderBy("seq").collect().map(r => (r.getLong(0), r.getLong(2)))
     val want = (0 until n).map { t =>
       (t.toLong, (0 until math.min(16, t + 1)).map(k => weights(k) * xs(t - k)).sum)

@@ -361,7 +361,7 @@ class ExportPipelineSpec extends SparkTestBase {
     for (n <- CurationPipeline.StageNames)
       assert(new java.io.File(s"$out/$n").exists(), s"missing staging for $n")
     val staged = res.tables("substring_cut").orderBy("doc_id").collect().toSeq
-    val composed = graft.llm.Dedup.llmCorpusPipeline(spark, sf).collect().toSeq
+    val composed = built("llm_corpus_pipeline").collect().toSeq
     assert(staged.nonEmpty, "curation output empty — spec precondition")
     assert(staged == composed)
   }
