@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,23 +84,28 @@ object EtlOps {
 
   // ---------------------------------------------------------------------------
   // A9 — DropNullFields (reference: convert_blocks_to_parquet.py:58): drop
-  // columns that are null in every row. Two-pass: one all-column aggregate
-  // (a single reduce, map-side combined) to find live columns, then a
-  // projection. The aggregate reads only column null-counts — with parquet
-  // statistics this is metadata-cheap at scale.
+  // columns that are null in every row. The census is one all-column
+  // aggregate (a single reduce, map-side combined) over the frame: a full
+  // pass over its input, since a CSV or a join carries no column statistics.
+  // `dropNullFields` runs it as its own job, then projects; the export's
+  // [[writeDroppingNullFields]] observes it on the write's own shuffle.
   // ---------------------------------------------------------------------------
   def dropNullFields(df: DataFrame): DataFrame = {
-    val counts = df.select(
-      (count(lit(1)).as("__total") +: df.columns.map(c => count(col(c)).as(c)).toSeq): _*)
-      .head()
-    // an empty batch has no evidence any column is dead — drop nothing
-    // (otherwise every column vanishes and downstream references break)
-    if (counts.getLong(0) == 0L) return df
-    val dead = df.columns.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i + 1) == 0L => c
-    }
-    if (dead.isEmpty) df else df.drop(dead.toSeq: _*)
+    val counts = df.select(nullCensus(df): _*).head()
+    val dead = deadColumns(df, counts.getAs[Long](_))
+    if (dead.isEmpty) df else df.drop(dead: _*)
   }
+
+  /** The census row: the row count, then each column's non-null count. */
+  private def nullCensus(df: DataFrame): Seq[Column] =
+    count(lit(1)).as("__total") +: df.columns.toSeq.map(c => count(col(c)).as(c))
+
+  /** The columns a [[nullCensus]], read by metric name, shows null in every
+    * row. An empty batch has no evidence any column is dead, so it drops
+    * nothing (otherwise every column vanishes and downstream references
+    * break). */
+  private def deadColumns(df: DataFrame, counts: String => Long): Seq[String] =
+    if (counts("__total") == 0L) Nil else df.columns.toSeq.filter(counts(_) == 0L)
 
   // ---------------------------------------------------------------------------
   // A11 — staged fan-out dependency (reference: config.py:39-49,55-59 — stage k
@@ -271,12 +276,39 @@ object EtlOps {
   def padded(c: Column): Column = lpad(c.cast(StringType), 8, "0")
 
   def writePartitioned(df: DataFrame, path: String, format: String,
-                       startCol: Column, endCol: Column): Unit = {
-    val out = df
-      .withColumn("start_block", padded(startCol))
+                       startCol: Column, endCol: Column): Unit =
+    writeRanges(byBlockRange(df, startCol, endCol), path, format)
+
+  /** A stage's lake in one pass: [[writePartitioned]] with DropNullFields
+    * applied, at the cost of one read of `df` where `dropNullFields` then
+    * `writePartitioned` read it twice. The census is an `Observation` on the
+    * rows entering the partitioning shuffle, whose output an eager
+    * `localCheckpoint()` materialises; the dead columns are then dropped,
+    * `beforeWrite` applied (it sees the `start_block`/`end_block` columns),
+    * and the checkpoint written with no second shuffle. A retry re-runs the
+    * whole step, and a stage re-attempt that counts some rows twice cannot
+    * move a count between zero and non-zero. Returns the written data
+    * schema, without the partition columns. */
+  def writeDroppingNullFields(df: DataFrame, path: String, format: String,
+                              startCol: Column, endCol: Column,
+                              beforeWrite: DataFrame => DataFrame = identity): StructType = {
+    val census = Observation()
+    val metrics = nullCensus(df)
+    val staged = byBlockRange(df.observe(census, metrics.head, metrics.tail: _*), startCol, endCol)
+      .localCheckpoint()
+    val counts = census.get
+    val cleaned = beforeWrite(staged.drop(deadColumns(df, counts(_).asInstanceOf[Long]): _*))
+    writeRanges(cleaned, path, format)
+    cleaned.drop("start_block", "end_block").schema
+  }
+
+  private def byBlockRange(df: DataFrame, startCol: Column, endCol: Column): DataFrame =
+    df.withColumn("start_block", padded(startCol))
       .withColumn("end_block", padded(endCol))
       .repartition(col("start_block"), col("end_block"))
-    val w = out.write.mode("overwrite").partitionBy("start_block", "end_block")
+
+  private def writeRanges(df: DataFrame, path: String, format: String): Unit = {
+    val w = df.write.mode("overwrite").partitionBy("start_block", "end_block")
     format match {
       case "csv"     => w.option("header", "true").csv(path)
       case "parquet" => w.parquet(path)

@@ -23,10 +23,11 @@ import graft.etl.EtlOps
   * tokens — run concurrently. The staged file is the upstream's Parquet
   * lake: a downstream stage keys from what its upstream wrote, never from
   * the upstream's raw CSV, and the fan-out key extractions become joins
-  * against it. Each stage runs two SQL executions, the DropNullFields
-  * census and the partitioned write, so an export is 14 of them and reads
-  * each raw CSV twice; the partition loop (config.py:10-14) becomes the
-  * partitioned write.
+  * against it. Each stage reads its raw CSV once: the DropNullFields census
+  * is observed on the partitioned write's own shuffle, whose rows are
+  * checkpointed and then written ([[EtlOps.writeDroppingNullFields]]), so
+  * an export makes 7 CSV scans. The partition loop (config.py:10-14)
+  * becomes the partitioned write.
   */
 final case class PipelineConfig(
     exportBlocks: Boolean = true,
@@ -44,11 +45,13 @@ final case class PipelineConfig(
     partitionBounds: Option[Column => (Column, Column)] = None,
     // Per-stage retry budget, the reference's maximumRetries=5
     // (export_pipeline_template.py:49): each stage's write is attempted
-    // 1 + maxRetries times before it is declared failed. Retries are safe
-    // because every stage sink is a full-path overwrite.
+    // 1 + maxRetries times before it is declared failed. Within one run a
+    // retry is safe because every stage sink is a full-path overwrite; across
+    // runs that overwrite erases ranges an earlier run wrote (ROADMAP item 6).
     maxRetries: Int = 5,
     // Fault-injection seam for retry/cascade tests: applied to each stage's
-    // cleaned frame just before its write. Production default is identity;
+    // cleaned frame, which carries its padded start_block/end_block
+    // partition columns, just before its write. Production default is identity;
     // a test hook can throw on the first N invocations of a chosen stage to
     // exercise the retry loop deterministically. Independent stages run on
     // their own threads, so it can be called concurrently: a stateful hook
@@ -236,11 +239,11 @@ object ExportPipeline {
     // row of this batch reads back as null instead of vanishing — an
     // all-null contract_address batch must not erase a fan-out join column.
     def finish(name: String, df: DataFrame, blockCol: String): DataFrame = {
-      val cleaned = cfg.stageInterceptor(name, EtlOps.dropNullFields(df))
       val (startB, endB) = bounds(blockCol)
       val path = s"$outDir/$name"
-      EtlOps.writePartitioned(cleaned, path, "parquet", startB, endB)
-      out(name) = EtlOps.readPartitioned(spark, path, "parquet", cleaned.schema)
+      val written = EtlOps.writeDroppingNullFields(df, path, "parquet", startB, endB,
+        cfg.stageInterceptor(name, _))
+      out(name) = EtlOps.readPartitioned(spark, path, "parquet", written)
       EtlOps.readPartitioned(spark, path, "parquet", df.schema)
     }
 

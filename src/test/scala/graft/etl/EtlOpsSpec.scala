@@ -79,6 +79,11 @@ class EtlOpsSpec extends SparkTestBase {
       .toDF("id", "dead", "sometimes")
     val out = EtlOps.dropNullFields(df)
     assert(out.columns.toSeq == Seq("id", "sometimes"))
+    // the one-pass lake write drops the same columns, read back schema-free
+    val tmp = java.nio.file.Files.createTempDirectory("graft_dnf_spec").toString
+    val written = EtlOps.writeDroppingNullFields(df, tmp, "parquet", col("id"), col("id"))
+    assert(written.fieldNames.toSeq == out.columns.toSeq)
+    assert(spark.read.parquet(tmp).columns.toSeq == out.columns.toSeq ++ Seq("start_block", "end_block"))
   }
 
   // --- A11 staged semi-join --------------------------------------------------
