@@ -277,38 +277,60 @@ object EtlOps {
 
   def writePartitioned(df: DataFrame, path: String, format: String,
                        startCol: Column, endCol: Column): Unit =
-    writeRanges(byBlockRange(df, startCol, endCol), path, format)
+    writeRanges(byBlockRange(withBlockRange(df, startCol, endCol)), path, format)
 
   /** A stage's lake in one pass: [[writePartitioned]] with DropNullFields
     * applied, at the cost of one read of `df` where `dropNullFields` then
     * `writePartitioned` read it twice. The census is an `Observation` on the
-    * rows entering the partitioning shuffle, whose output an eager
-    * `localCheckpoint()` materialises; the dead columns are then dropped,
-    * `beforeWrite` applied (it sees the `start_block`/`end_block` columns),
-    * and the checkpoint written with no second shuffle. A retry re-runs the
-    * whole step, and a stage re-attempt that counts some rows twice cannot
-    * move a count between zero and non-zero. Returns the written data
-    * schema, without the partition columns. */
+    * padded rows entering the partitioning shuffle (it counts `df`'s
+    * columns only), whose output an eager `localCheckpoint()` materialises;
+    * the dead columns are then dropped, `beforeWrite` applied (it sees
+    * `start_block`, `end_block` as the first two columns), and the
+    * checkpoint written with no second shuffle. A retry re-runs the whole
+    * step, and a stage re-attempt that counts some rows twice cannot move a
+    * count between zero and non-zero. Returns the written data schema,
+    * without the partition columns.
+    *
+    * The column order and the observe placement keep an export's generated
+    * code inside Spark's compiled-code cache, which holds 100 entries
+    * (a static conf) keyed by class loader and source; in local mode each
+    * whole-stage unit is compiled under both the driver's and the
+    * executor's loader. With the partition columns first, the code that
+    * hashes, sorts and extracts them has the same source for every table,
+    * and observing above the padding keeps the padding in the scan's
+    * codegen stage instead of a stage of its own. An export then needs 70
+    * entries instead of 104, so a repeated export recompiles nothing. */
   def writeDroppingNullFields(df: DataFrame, path: String, format: String,
                               startCol: Column, endCol: Column,
                               beforeWrite: DataFrame => DataFrame = identity): StructType = {
     val census = Observation()
     val metrics = nullCensus(df)
-    val staged = byBlockRange(df.observe(census, metrics.head, metrics.tail: _*), startCol, endCol)
-      .localCheckpoint()
+    val staged = byBlockRange(withBlockRange(df, startCol, endCol)
+      .observe(census, metrics.head, metrics.tail: _*)).localCheckpoint()
     val counts = census.get
     val cleaned = beforeWrite(staged.drop(deadColumns(df, counts(_).asInstanceOf[Long]): _*))
     writeRanges(cleaned, path, format)
     cleaned.drop("start_block", "end_block").schema
   }
 
-  private def byBlockRange(df: DataFrame, startCol: Column, endCol: Column): DataFrame =
-    df.withColumn("start_block", padded(startCol))
-      .withColumn("end_block", padded(endCol))
-      .repartition(col("start_block"), col("end_block"))
+  /** `df` behind its padded partition columns, which come first: see
+    * [[writeDroppingNullFields]] for why the order matters. The written
+    * files hold only `df`'s columns, in `df`'s order. */
+  private def withBlockRange(df: DataFrame, startCol: Column, endCol: Column): DataFrame =
+    df.select(padded(startCol).as("start_block"), padded(endCol).as("end_block"), col("*"))
 
+  private def byBlockRange(df: DataFrame): DataFrame =
+    df.repartition(col("start_block"), col("end_block"))
+
+  /** Hadoop's local file system forks a `chmod` per created file and
+    * directory; [[NioLocalFileSystem]] sets the same modes in-process. The
+    * option reaches only this write's Hadoop conf, and Hadoop's FileSystem
+    * cache, keyed by scheme and user rather than conf, would otherwise hand
+    * back the default instance. */
   private def writeRanges(df: DataFrame, path: String, format: String): Unit = {
     val w = df.write.mode("overwrite").partitionBy("start_block", "end_block")
+      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
     format match {
       case "csv"     => w.option("header", "true").csv(path)
       case "parquet" => w.parquet(path)

@@ -27,7 +27,10 @@ import graft.etl.EtlOps
   * is observed on the partitioned write's own shuffle, whose rows are
   * checkpointed and then written ([[EtlOps.writeDroppingNullFields]]), so
   * an export makes 7 CSV scans. The partition loop (config.py:10-14)
-  * becomes the partitioned write.
+  * becomes the partitioned write. Every stage's frame puts its padded
+  * `start_block`, `end_block` columns first, so the 7 stages share their
+  * partitioning code and a repeated export finds all of its generated code
+  * in Spark's 100-entry compiled-code cache instead of recompiling it.
   */
 final case class PipelineConfig(
     exportBlocks: Boolean = true,
@@ -50,8 +53,10 @@ final case class PipelineConfig(
     // runs that overwrite erases ranges an earlier run wrote (ROADMAP item 6).
     maxRetries: Int = 5,
     // Fault-injection seam for retry/cascade tests: applied to each stage's
-    // cleaned frame, which carries its padded start_block/end_block
-    // partition columns, just before its write. Production default is identity;
+    // cleaned frame just before its write. The frame's first two columns are
+    // its padded start_block, end_block partition columns; the order keeps
+    // the export's generated code within Spark's compiled-code cache (see
+    // EtlOps.writeDroppingNullFields). Production default is identity;
     // a test hook can throw on the first N invocations of a chosen stage to
     // exercise the retry loop deterministically. Independent stages run on
     // their own threads, so it can be called concurrently: a stateful hook

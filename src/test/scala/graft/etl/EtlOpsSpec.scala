@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,6 +88,16 @@ class EtlOpsSpec extends SparkTestBase {
     val written = EtlOps.writeDroppingNullFields(df, tmp, "parquet", col("id"), col("id"))
     assert(written.fieldNames.toSeq == out.columns.toSeq)
     assert(spark.read.parquet(tmp).columns.toSeq == out.columns.toSeq ++ Seq("start_block", "end_block"))
+    // the partition columns lead the staged frame, but each written file
+    // holds only the data columns, in their original order
+    for (part <- partFiles(tmp))
+      assert(spark.read.parquet(part.toString).columns.toSeq == out.columns.toSeq, part)
+  }
+
+  private def partFiles(dir: String): Seq[java.nio.file.Path] = {
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try all.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toList
+    finally all.close()
   }
 
   // --- A11 staged semi-join --------------------------------------------------
@@ -149,6 +163,47 @@ class EtlOpsSpec extends SparkTestBase {
     val rows = back.orderBy("num").collect()
     assert(rows.map(_.getAs[String]("start_block")).toSeq == Seq("00000000", "00001000"))
     assert(rows.map(_.getAs[String]("end_block")).toSeq == Seq("00000999", "00001999"))
+  }
+
+  // --- the partitioned sinks set file modes without forking `chmod` -------
+  test("writePartitioned gives the modes of a plain parquet write and keeps every .crc") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def modes(dir: String): Map[Boolean, Set[String]] = {
+      val all = Files.walk(Paths.get(dir))
+      try all.iterator().asScala.toList.groupBy(Files.isDirectory(_)).map { case (isDir, ps) =>
+        isDir -> ps.map(p => PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+      } finally all.close()
+    }
+    val df = Seq((5L, "x"), (1005L, "y")).toDF("num", "payload")
+    val plain = Files.createTempDirectory("graft_plain_spec").resolve("out").toString
+    df.write.parquet(plain)
+    val ranged = Files.createTempDirectory("graft_modes_spec").resolve("out").toString
+    EtlOps.writePartitioned(df, ranged, "parquet", col("num"), col("num"))
+    assert(modes(ranged) == modes(plain))
+    assert(modes(ranged).keySet == Set(true, false))
+    val parts = partFiles(ranged)
+    assert(parts.size == 2)
+    parts.foreach { p =>
+      assert(Files.exists(p.resolveSibling(s".${p.getFileName}.crc")), s"no .crc for $p")
+    }
+  }
+
+  test("NioLocalFileSystem sets a mode in-process and leaves a sticky bit to Hadoop") {
+    import java.nio.file.Files
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new NioLocalFileSystem.Raw
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
+    val file = Files.createTempFile("graft_mode_spec", ".bin")
+    fs.setPermission(new Path(file.toUri), octal("640"))
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(file)) == "rw-r-----")
+    // NIO cannot set a sticky bit: only Hadoop's own path yields mode 1755
+    val dir = Files.createTempDirectory("graft_sticky_spec")
+    fs.setPermission(new Path(dir.toUri), octal("1755"))
+    val mode = Files.getAttribute(dir, "unix:mode").asInstanceOf[Int]
+    assert(Integer.toOctalString(mode & 0xfff) == "1755")
   }
 
   test("etl_dead_letter routes malformed payloads without dropping or poisoning") {

@@ -62,7 +62,14 @@ class ExportPipelineSpec extends SparkTestBase {
       "0xtok2,TK2,Token Two,18,2000000",
       "0xtok3,TK3,Token Three,18,3000000")) // no transfers: must not export
 
-    val res = ExportPipeline.run(spark, PipelineConfig(), raw, out)
+    // every stage's frame leads with its partition columns, which lets the
+    // stages share their generated code (EtlOps.writeDroppingNullFields)
+    val leading = new ConcurrentHashMap[String, Seq[String]]()
+    val cfg = PipelineConfig(stageInterceptor = (name, df) => {
+      leading.put(name, df.columns.toSeq.take(2)); df
+    })
+    val res = ExportPipeline.run(spark, cfg, raw, out)
+    assert(leading.asScala.toMap == res.stages.keySet.map(_ -> Seq("start_block", "end_block")).toMap)
 
     // blocks: all-null column dropped, decimal(38,0) preserved the big value
     val blocks = res.tables("blocks")
