@@ -75,16 +75,12 @@ object Bench {
       o.orElse(committed.get(s"$ns|$key")).map(s"$ns|$key" -> _)
     }
 
-  private def readCounts(): Map[String, Counts] = {
-    val f = new java.io.File(CountsFile)
-    if (!f.exists) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      new com.fasterxml.jackson.databind.ObjectMapper().readTree(f).properties().asScala.map { e =>
-        val a = e.getValue
-        e.getKey -> Counts(a.get(0).asLong, a.get(1).asLong, a.get(2).asLong)
-      }.toMap
-    }
+  private def readCounts(f: java.io.File): Map[String, Counts] = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(f).properties().asScala.map { e =>
+      val a = e.getValue
+      e.getKey -> Counts(a.get(0).asLong, a.get(1).asLong, a.get(2).asLong)
+    }.toMap
   }
 
   /** One entry per line, sorted, so a changed counter is a one-line diff. */
@@ -153,7 +149,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Unknown query keys in args must fail loudly: a typo'd key would
     // otherwise filter to an empty run that "succeeds" with total 0.
     val unknown = args.filterNot(SparkEntry.queries.keySet)
@@ -178,18 +173,18 @@ object Bench {
       sys.exit(2)
     }
     val fullSuite = args.isEmpty && excluded.isEmpty
-    // Read before any key runs: a malformed file fails the run up front,
-    // not after minutes of measurement.
-    val committed = readCounts()
-    val ns = countsNamespace(cpus, sfDir)
-    val whDir = java.nio.file.Files.createTempDirectory("graft_wh")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", whDir.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Read before any key runs: a missing or malformed file fails the run
+    // up front, not after minutes of measurement. A missing file must not
+    // pass as "0 changed": it means the run started outside the repo root.
+    val countsFile = new java.io.File(CountsFile)
+    if (!countsFile.exists) {
+      System.err.println(s"$CountsFile not found in the working directory " +
+        s"${countsFile.getAbsoluteFile.getParent}; run Bench from the repo root")
+      sys.exit(2)
+    }
+    val committed = readCounts(countsFile)
+    val ns = countsNamespace(Sessions.cpus.toString, sfDir)
+    val spark = Sessions.local()
     // Warm the JVM (codegen, parquet footers, shuffle machinery) once so
     // per-query numbers measure the queries, not first-touch costs.
     graft.Tables.testTables.foreach { t =>
@@ -198,7 +193,7 @@ object Bench {
     // Warm the write path too (output committer, csv/parquet writer codegen):
     // the sink queries otherwise pay several seconds of first-touch setup
     // that has nothing to do with their data volume.
-    val warmDir = java.nio.file.Files.createTempDirectory("graft_warm")
+    val warmDir = Tables.scratchDir("warm")
     try {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions.{col, row_number, broadcast}
@@ -271,8 +266,6 @@ object Bench {
     val contended = stealPct > ContendedStealPct
     meter.close()
     spark.stop()
-    deleteRecursively(warmDir.toFile)
-    deleteRecursively(whDir.toFile)
 
     // Lower median: the true median for an odd pass count.
     def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.length - 1) / 2)
@@ -334,10 +327,5 @@ object Bench {
       stealPctJson = stealJson, contended = contended, countChanged = countChanged,
       failed = failed.toSeq, excluded = excluded, slowOver60s = slow.map(_._1),
       queriesBySlowest = bySlowest, cpuByKey = cpuByKey, sf = sfDir))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

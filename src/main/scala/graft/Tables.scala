@@ -51,7 +51,7 @@ object Tables {
     * Verify/Bench/test JVM leaks its dirs into /tmp (observed: ~1,000 dirs
     * across a working session). Nothing reads the staged data after the JVM
     * ends: Verify persists results to its own outDir. */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private[graft] val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   // ONE hook for all scratch dirs — a hook per dir grows the JVM's shutdown
   // hook set without bound in a long-lived process.
   private lazy val scratchHookOnce: Unit =

@@ -791,10 +791,8 @@ object Dedup {
     * J ≥ t pair set — [[graft.llm.Similarity.simHardNegatives]] exploits
     * this to find the NA smallest anchor ids without paying for the whole
     * corpus pair set. */
-  /** The PPJoin prefix index behind [[setsimPrefixPairs]] — extracted so
-    * scale probes measure posting-run mass on the REAL code path (the
-    * lshCandidates/ivfCandidates rule). One row per indexed prefix token:
-    * (h, doc_id, n = |shs|). */
+  /** The PPJoin prefix index behind [[setsimPrefixPairs]]. One row per
+    * indexed prefix token: (h, doc_id, n = |shs|). */
   private[graft] def setsimPrefixIndex(shs: DataFrame, Num: Int, Den: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dfTab = shs.select(explode(col("shs")).as("h"))
@@ -883,8 +881,7 @@ object Dedup {
   }
 
   /** The FNV-1a fingerprint pass behind [[dedupSimhash]], checkpointed
-    * (the count and both join sides read it) — exposed so [[DensityProbe]]
-    * measures candidate volume on the real fingerprints. */
+    * (the count and both join sides read it). */
   private[graft] def simhashFingerprints(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     healScanStarvation(
@@ -918,10 +915,11 @@ object Dedup {
     * generation from 4×16-bit blocks to Manku C(6,3) banding (Manku,
     * Jain & Das Sarma, WWW 2007 §3: probe combinations of blocks so the
     * key is wide enough that spurious collisions vanish). 2¹⁴, set by
-    * MEASUREMENT (r16 DensityProbe on the real FNV fingerprints — the
-    * collision mass is dominated by CORRELATED 16-bit blocks on this
-    * vocab-driven corpus, not the n²·2⁻¹⁶ uniform term, so the narrow
-    * scheme degrades a decade earlier than the uniform model predicts):
+    * MEASUREMENT (r16 density probe in PLANS.md, on the real FNV
+    * fingerprints — the collision mass is dominated by CORRELATED 16-bit
+    * blocks on this vocab-driven corpus, not the n²·2⁻¹⁶ uniform term, so
+    * the narrow scheme degrades a decade earlier than the uniform model
+    * predicts):
     * Σ C(bucket,2) candidate mass narrow vs wide reads 2.79 M vs 2.59 M
     * at n = 5 k (a wash), 84.1 M vs 31.7 M at n = 50 k (2.7×), 1.45 G vs
     * 319 M at n = 500 k (4.6×). Below 2¹⁴ both schemes are trivial and
@@ -945,12 +943,11 @@ object Dedup {
     * Scale shape: band rows are 4n vs 20n; spurious-candidate mass under
     * the uniform model is n²·4·2⁻¹⁶ vs n²·20·2⁻³², and MEASURED on the
     * real vocab-correlated fingerprints the gap opens a decade earlier
-    * (1.45 G vs 319 M bucket-pair mass at n = 500 k, DensityProbe r16) —
-    * which is why the wide key wins every decade past the switch. */
+    * (1.45 G vs 319 M bucket-pair mass at n = 500 k, r16 density probe in
+    * PLANS.md) — which is why the wide key wins every decade past the
+    * switch. */
   /** The banded candidate frame of [[simhashPairs]] — (doc_id, simhash,
-    * blk, key) rows, one per band probe. Factored out so [[DensityProbe]]
-    * measures candidate volume (Σ buckets C(size,2)) on the real band
-    * keys of either scheme. */
+    * blk, key) rows, one per band probe, in either scheme. */
   private[graft] def simhashBanded(sim: DataFrame, manku: Boolean): DataFrame = {
     val bandStructs: Seq[Column] =
       if (!manku) {

@@ -277,15 +277,32 @@ object Similarity {
     * per-layout: changing the partition count/order of the input reorders
     * the double sums and may perturb centroids. Approximate by design →
     * rows-only driver check. */
-  def simSearchIvf(spark: SparkSession, dir: String): DataFrame =
-    simSearchIvfImpl(spark, dir, returnCandidates = false)
+  def simSearchIvf(spark: SparkSession, dir: String): DataFrame = {
+    val nprobe = 4
+    val vecs = ivfVecs(spark, dir)
+    val centroids = trainedCentroids(spark, dir)
+    val index = assignCells(vecs, centroids).drop("d2c")
 
-  /** Candidate set of [[simSearchIvf]] (post cell-probing, pre scoring) —
-    * exposed so scale probes measure candidate-volume growth on the REAL
-    * code path instead of re-deriving the bucketing. Every call trains its
-    * own quantizer. */
-  private[graft] def ivfCandidates(spark: SparkSession, dir: String): DataFrame =
-    simSearchIvfImpl(spark, dir, returnCandidates = true)
+    // probe: nprobe nearest cells per query via the shared literal-centroid
+    // expression (r12 — the crossJoin(broadcast(centroids)) + row_number
+    // formulation planned a BroadcastNestedLoopJoin and a query-side
+    // window; this is map-only)
+    val queries = vecs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("v").as("q"))
+    val probes = queries.select(col("query_id"), col("q"),
+      explode(probeCellsExpr(centroids, col("q"), nprobe)).as("cell"))
+
+    val candidates = index.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+
+    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
+    candidates
+      .withColumn("cosine", cosine(col("q"), col("v")))
+      .withColumn("rank", row_number().over(w).cast(LongType))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
+      .orderBy("query_id", "rank")
+  }
 
   /** The (vec_id, v) frame every IVF-family operator reads: a scan and a
     * cast, with no exchange, so each job re-reads it rather than caching. */
@@ -330,7 +347,7 @@ object Similarity {
     * centroid's LITERAL vector. `array_sort` over it orders by
     * (distance, cell) — the family's deterministic tie-break — so
     * element 1 is the home cell ([[assignCells]]) and a slice of the
-    * first nprobe is a probe list ([[simKnnGraph]], [[simSearchIvfImpl]]),
+    * first nprobe is a probe list ([[simKnnGraph]], [[simSearchIvf]]),
     * all map-only. */
   private def scoredCellArray(cents: DataFrame, v: Column): Column = {
     val sqdist = (a: Column, b: Column) => graft.functions.VectorOps.vecSqDist(a, b)
@@ -495,35 +512,6 @@ object Similarity {
       c += 1
     }
     best
-  }
-
-  private def simSearchIvfImpl(spark: SparkSession, dir: String,
-                               returnCandidates: Boolean): DataFrame = {
-    val nprobe = 4
-    val vecs = ivfVecs(spark, dir)
-    val centroids = trainedCentroids(spark, dir)
-    val index = assignCells(vecs, centroids).drop("d2c")
-
-    // probe: nprobe nearest cells per query via the shared literal-centroid
-    // expression (r12 — the crossJoin(broadcast(centroids)) + row_number
-    // formulation planned a BroadcastNestedLoopJoin and a query-side
-    // window; this is map-only)
-    val queries = vecs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
-    val probes = queries.select(col("query_id"), col("q"),
-      explode(probeCellsExpr(centroids, col("q"), nprobe)).as("cell"))
-
-    val candidates = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-    if (returnCandidates) return candidates
-
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
-    candidates
-      .withColumn("cosine", cosine(col("q"), col("v")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
-      .orderBy("query_id", "rank")
   }
 
   /** `sim_search_ivfpq` — IVF + product quantization with asymmetric
@@ -900,8 +888,7 @@ object Similarity {
   }
 
   /** Candidate set of [[simSearchLshBucketed]] (post multi-probe bucket
-    * join + distinct, pre scoring) — the probe-measurable boundary for
-    * candidate-volume growth, same code path as the query key. */
+    * join + distinct, pre scoring). */
   private[graft] def lshCandidates(spark: SparkSession, dir: String): DataFrame = {
     // derive from data: a dim mismatch null-poisons zip_with and silently
     // degenerates the LSH to one bucket (full cross join)

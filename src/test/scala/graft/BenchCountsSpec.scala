@@ -44,6 +44,25 @@ class BenchCountsSpec extends SparkTestBase {
       committed - s"$ns|b")
   }
 
+  test("a run outside the repo root exits 2 and names its working directory") {
+    // BENCH_COUNTS.json is read from the working directory: a run started
+    // anywhere else must fail before any key runs, not compare 0 keys.
+    val cwd = new java.io.File(Tables.scratchDir("bench_cwd"))
+    val errFile = new java.io.File(Tables.scratchDir("bench_err"), "stderr")
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val p = new ProcessBuilder(javaBin, "-Xmx256m", "-cp", System.getProperty("java.class.path"),
+      "graft.Bench", "etl_gap_detect")
+      .directory(cwd).redirectOutput(ProcessBuilder.Redirect.DISCARD).redirectError(errFile)
+      .start()
+    val exited = p.waitFor(60, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) p.destroyForcibly().waitFor(): Unit
+    val err = new String(java.nio.file.Files.readAllBytes(errFile.toPath), "UTF-8")
+    assert(exited, s"Bench did not exit up front: $err")
+    assert(p.exitValue() == 2, err)
+    assert(err.contains("BENCH_COUNTS.json not found") && err.contains(cwd.getName), err)
+    assert(cwd.list().isEmpty, "a run without its counts file wrote output")
+  }
+
   test("first-call counters repeat exactly from one call to the next") {
     val meter = new Bench.Meter(spark)
     try {

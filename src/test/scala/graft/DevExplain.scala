@@ -1,24 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 // scratch plan-dump main (test scope, not shipped): writes the
 // explain("formatted") output of declared queries to <outDir>/<key>.txt so
 // before/after plan evidence can be committed under plans/r17/. Usage:
 //   graft.DevExplain <outDir> <sfDir> <key> [key...]
-// Session confs mirror Bench's (shuffle.partitions = cpus, UTC) so the plans
-// match what the bench actually runs.
+// The session is Bench's (Sessions.local), so the plans match what the
+// bench runs at the same SPARK_GRAFT_CPUS.
 object DevExplain {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val dir = args(1)
     val keys = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { k =>
       val df = SparkEntry.queries(k)(spark, dir)

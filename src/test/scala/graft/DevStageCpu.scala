@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 // scratch profiling main (test scope, not shipped): runs one declared query
 // with a stage-completion listener and prints per-stage executor CPU / run
@@ -12,12 +11,7 @@ object DevStageCpu {
     val dir = args(0)
     val key = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val stages = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Int)]()
     var shuffleWrite = 0L
     var shuffleRecords = 0L

@@ -19,22 +19,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[4, 2]: 4 threads, maxFailures=2 — one task retry, so specs can
-      // exercise executor-side fault recovery (the flaky-fetch BlockRange
-      // spec); plain local[4] fails the job on the first task failure.
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4, 2]: 4 threads, maxFailures=2 — one task retry, so specs can
+  // exercise executor-side fault recovery (the flaky-fetch BlockRange
+  // spec); plain local[4] fails the job on the first task failure.
+  lazy val session: SparkSession = Sessions.local(threads = 4, maxFailures = 2)
 
   private val builtFrames = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
 

@@ -18,6 +18,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS -Xmx"$HEAP" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
   graft.Verify "$SF" "$OUT" "$@"
