@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Loaders + schemas for the two table families:
-  *
-  *  - the driver testdata (TPC-H-ish star schema + events/documents/embeddings,
-  *    see /root/repo/FIXTURES.md §B) — schema carried by the parquet footers;
-  *  - the reference's Ethereum entity tables (FIXTURES.md §A, attested in the
-  *    reference's Glue ApplyMapping calls, e.g.
-  *    ethereumetl/aws_glue_scripts/convert_blocks_to_parquet.py:26-46) —
-  *    explicit StructTypes because the reference ingests headered CSV with a
-  *    pinned schema (no inference at query time).
+/** Loaders for the testdata tables (TPC-H-ish star schema plus
+  * events/documents/embeddings, FIXTURES.md §B), whose schema the parquet
+  * footers carry, and the JVM's scratch directories. The Ethereum export's
+  * table schemas are declared with its stages, in
+  * [[graft.pipeline.ExportPipeline]].
   */
 object Tables {
 
@@ -55,18 +51,21 @@ object Tables {
   // ONE hook for all scratch dirs — a hook per dir grows the JVM's shutdown
   // hook set without bound in a long-lived process.
   private lazy val scratchHookOnce: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      scratchDirs.forEach(p => rm(p.toFile))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach(p => deleteRecursively(p.toFile))))
   def scratchDir(tag: String): String = {
     scratchHookOnce
     val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag")
     scratchDirs.add(dir)
     dir.toString
+  }
+
+  /** Delete `f` and, if it is a directory, everything under it. A directory
+    * whose listing fails (it vanished meanwhile, or is unreadable) is left
+    * in place instead of throwing. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
+    f.delete(): Unit
   }
 
   /** Dimensionality of the embeddings table's vector column. The ANN / dedup
@@ -84,61 +83,4 @@ object Tables {
       s"embeddings table at $sfDir is empty — cannot derive vector dimensionality")
     row.getInt(0)
   }
-
-  // ---------------------------------------------------------------------------
-  // Reference Ethereum schemas (FIXTURES.md §A). decimal(38,0) for uint256
-  // columns mirrors convert_blocks_to_parquet.py:38-39 — a load-bearing
-  // semantic: wei values overflow int64.
-  // ---------------------------------------------------------------------------
-
-  private def dec38 = DecimalType(38, 0)
-
-  val blocksSchema: StructType = StructType(Seq(
-    StructField("number", LongType),
-    StructField("hash", StringType),
-    StructField("parent_hash", StringType),
-    StructField("nonce", StringType),
-    StructField("sha3_uncles", StringType),
-    StructField("logs_bloom", StringType),
-    StructField("transactions_root", StringType),
-    StructField("state_root", StringType),
-    StructField("miner", StringType),
-    StructField("difficulty", dec38),
-    StructField("total_difficulty", dec38),
-    StructField("size", LongType),
-    StructField("extra_data", StringType),
-    StructField("gas_limit", LongType),
-    StructField("gas_used", LongType),
-    StructField("timestamp", LongType),
-    StructField("transaction_count", LongType)))
-
-  val transactionsSchema: StructType = StructType(Seq(
-    StructField("hash", StringType),
-    StructField("nonce", LongType),
-    StructField("block_hash", StringType),
-    StructField("block_number", LongType),
-    StructField("transaction_index", LongType),
-    StructField("from_address", StringType),
-    StructField("to_address", StringType),
-    StructField("value", dec38),
-    StructField("gas", LongType),
-    StructField("gas_price", LongType),
-    StructField("input", StringType)))
-
-  val tokenTransfersSchema: StructType = StructType(Seq(
-    StructField("token_address", StringType),
-    StructField("from_address", StringType),
-    StructField("to_address", StringType),
-    StructField("value", dec38),
-    StructField("transaction_hash", StringType),
-    StructField("log_index", LongType),
-    StructField("block_number", LongType)))
-
-  /** Raw CSV-side schema: uint256 columns arrive as strings (the reference
-    * exports CSV then casts string → decimal(38,0) in Glue). */
-  val transactionsCsvSchema: StructType = StructType(
-    transactionsSchema.fields.map {
-      case StructField(n @ "value", _, _, _) => StructField(n, StringType)
-      case f => f
-    })
 }

@@ -69,21 +69,6 @@ object Dedup {
     * seconds of work, comfortably above per-task overhead. */
   private[graft] val HealBytesPerTask: Long = 4L << 20
 
-  /** Memoized heal decisions keyed by (canonicalized logical plan, resolved
-    * shuffle width): 0 = leave the plan alone, n > 0 = repartition to n. The
-    * decision needs physical planning (`df.rdd`) and leaf statistics, both
-    * driver-side but not free — media/frame call sites construct the same
-    * DataFrame once per key, so without this map each of the six multimodal
-    * keys re-plans the identical scan (r15 advice). Canonicalized plans
-    * embed the source file paths, so distinct sf dirs get distinct entries.
-    * The key is the plan OBJECT (structural equality), not its 32-bit
-    * semanticHash, so an Int collision cannot replay another plan's
-    * decision; the width component keeps the map correct when a caller
-    * (StreamOps' token-budget path) temporarily narrows
-    * spark.sql.shuffle.partitions on the same session (r16 advice). */
-  private val healDecisions =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), Int]()
-
   /** Conditional parallelism heal for a CPU-dense pass fed by a scan
     * (probe #21 catch #3): when the source plans FEWER partitions than
     * half the shuffle width — a small-but-dense input, e.g. one 58 MB
@@ -103,16 +88,16 @@ object Dedup {
     * come from the optimized plan's LEAF statistics (file sizes), not the
     * projected row-width estimate, so a computed array column in the
     * projection can't inflate the reading. Partition count comes from the
-    * planned RDD (driver-side, no job); the whole decision is memoized per
-    * canonicalized plan. */
+    * planned RDD (driver-side, no job). Each call decides afresh: the
+    * planned count moves with the session's file-split confs, so a
+    * decision kept from an earlier call could be stale. */
   private[graft] def healScanStarvation(df: DataFrame, key: Column): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val width = scala.util.Try(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
       .getOrElse(sc.defaultParallelism) // non-numeric conf ("auto") → cores
-    val planKey = (df.queryExecution.logical.canonicalized, width)
-    val target = healDecisions.computeIfAbsent(planKey, _ => {
-      val planned = df.rdd.getNumPartitions
+    val planned = df.rdd.getNumPartitions
+    val target =
       if (planned * 2 >= width) 0
       else {
         val scanBytes = df.queryExecution.optimizedPlan.collectLeaves()
@@ -129,7 +114,6 @@ object Dedup {
         // file counts via the width gate above.
         if (byBytes >= 2 && byBytes >= planned) byBytes else 0
       }
-    })
     if (target > 0) df.repartition(target, key) else df
   }
 

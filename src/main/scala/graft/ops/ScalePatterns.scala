@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables.t
+import graft.Tables.{deleteRecursively, t}
 
 /** Shuffle-shaping patterns for skew and co-location (SURVEY.md §2.2 /
   * BASELINE north-star: "repartition/bucketing for co-located joins,
@@ -45,14 +45,7 @@ object ScalePatterns {
   private def dropManaged(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val dir = new java.io.File(wh, table)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
+    deleteRecursively(new java.io.File(wh, table))
   }
 
   /** Create the bucketed tables once per (session, sfDir) — the write IS

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
 import graft.etl.EtlOps
 
 /** The reference's pipeline, Spark-natively: config-gated stage composition.
@@ -20,7 +19,12 @@ import graft.etl.EtlOps
   * of [[StageRunner]], scheduled the same way: a stage starts as soon as
   * every stage in its `dependsOn` has succeeded, so the three branches —
   * blocks; transactions → {receipts → contracts, logs}; token_transfers →
-  * tokens — run concurrently. The staged file is the upstream's Parquet
+  * tokens — run concurrently. Each table is declared once, in
+  * `ExportPipeline.tables`: its name, upstreams, config flag, lake schema,
+  * block column and frame. [[ExportPipeline.run]] and
+  * [[ExportPipeline.templateObjects]] both take the included stages from
+  * that list, and the CSV read schema and the ApplyMapping casts of each
+  * table derive from its lake schema. The staged file is the upstream's Parquet
   * lake: a downstream stage keys from what its upstream wrote, never from
   * the upstream's raw CSV, and the fan-out key extractions become joins
   * against it. Each stage reads its raw CSV once: the DropNullFields census
@@ -184,44 +188,106 @@ private[pipeline] final class StageRunner(maxRetries: Int) {
 
 object ExportPipeline {
 
-  /** Raw-CSV-side schemas: uint256 columns arrive as strings (the reference
-    * exports CSV and casts in Glue — convert_transactions_to_parquet.py:36). */
-  private def csv(spark: SparkSession, dir: String, name: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(s"$dir/$name.csv")
+  /** One export table, declared once. `schema` is its columns as the raw
+    * CSV carries them, in order, with their lake types: a uint256 column is
+    * decimal(38,0), because wei values overflow int64
+    * (convert_blocks_to_parquet.py:38-39). The table is exported when
+    * `flag` is set and every one of its `upstreams` is exported. `body`
+    * builds the stage's frame from the typed CSV and its upstreams' lakes,
+    * by name; `blockCol` is the block number its partitions range over. */
+  private final case class Table(
+      name: String,
+      upstreams: Seq[String],
+      flag: PipelineConfig => Boolean,
+      blockCol: String,
+      schema: StructType,
+      body: (DataFrame, Map[String, DataFrame]) => DataFrame = (csv, _) => csv) {
+    private def isUint256(f: StructField) = f.dataType.isInstanceOf[DecimalType]
 
+    /** The CSV carries uint256 columns as strings, cast in Glue
+      * (convert_transactions_to_parquet.py:36). A headered CSV read with a
+      * schema applies it by position. */
+    def read(spark: SparkSession, dir: String): DataFrame = {
+      val raw = spark.read
+        .schema(StructType(schema.map(f => if (isUint256(f)) f.copy(dataType = StringType) else f)))
+        .option("header", "true").csv(s"$dir/$name.csv")
+      // ApplyMapping, on the tables that have a uint256 column
+      if (schema.exists(isUint256)) EtlOps.applyMapping(raw, schema.map(f => (f.name, f.name, f.dataType)))
+      else raw
+    }
+  }
+
+  private def columns(cols: (String, DataType)*) = StructType(cols.map { case (n, t) => StructField(n, t) })
   private val str = StringType
   private val lng = LongType
-  private def f(n: String, t: DataType) = StructField(n, t)
+  private val uint256 = DecimalType(38, 0)
 
-  val blocksCsv = StructType(Seq(
-    f("number", lng), f("hash", str), f("parent_hash", str), f("nonce", str),
-    f("miner", str), f("difficulty", str), f("total_difficulty", str),
-    f("size", lng), f("gas_limit", lng), f("gas_used", lng),
-    f("timestamp", lng), f("transaction_count", lng), f("all_null_col", str)))
+  /** The export's tables in stage order, upstreams first. This list alone
+    * states the DAG: [[run]] declares its included stages and
+    * [[templateObjects]] renders them. */
+  private val tables: Seq[Table] = Seq(
+    // stage 1: blocks + transactions (config.py:35-38)
+    Table("blocks", Nil, _.exportBlocks, "number", columns(
+      "number" -> lng, "hash" -> str, "parent_hash" -> str, "nonce" -> str, "miner" -> str,
+      "difficulty" -> uint256, "total_difficulty" -> uint256, "size" -> lng, "gas_limit" -> lng,
+      "gas_used" -> lng, "timestamp" -> lng, "transaction_count" -> lng, "all_null_col" -> str)),
+    Table("transactions", Nil, _.exportTransactions, "block_number", columns(
+      "hash" -> str, "nonce" -> lng, "block_hash" -> str, "block_number" -> lng,
+      "transaction_index" -> lng, "from_address" -> str, "to_address" -> str,
+      "value" -> uint256, "gas" -> lng, "gas_price" -> lng, "input" -> str)),
+    // stage 2: receipts, fetched only for exported tx hashes (config.py:40-41).
+    // NO broadcast hint: the tx key set has the same cardinality as the
+    // receipts fact — a forced broadcast would ship every transaction hash
+    // to every executor (OOM at chain scale); the equi-join shuffles both
+    // sides on transaction_hash, and AQE still downgrades to broadcast when
+    // a filtered run is actually small.
+    Table("receipts", Seq("transactions"), _.exportReceipts, "block_number", columns(
+      "transaction_hash" -> str, "contract_address" -> str, "gas_used" -> lng, "status" -> lng),
+      (csv, up) => csv.join(up("transactions").select(col("hash").as("transaction_hash"),
+        col("block_number")), Seq("transaction_hash"), "inner")),
+    // stage 2b: logs for the same exported tx hashes (config.py:43-44 — the
+    // reference exports receipts and logs from one extracted hash file).
+    // A plain left-semi join for the same reason as receipts: the hash set
+    // is as large as the transactions table, so broadcasting it is AQE's
+    // call, made on the lake's measured size.
+    Table("logs", Seq("transactions"), _.exportLogs, "block_number", columns(
+      "transaction_hash" -> str, "log_index" -> lng, "address" -> str, "topics" -> str,
+      "data" -> str, "block_number" -> lng),
+      (csv, up) => csv.join(up("transactions").select(col("hash").as("transaction_hash")),
+        Seq("transaction_hash"), "left_semi")),
+    // stage 3: contracts for receipt contract_addresses (config.py:46-47).
+    // The creation block number rides along from the receipt row (min() in
+    // case of duplicate receipt rows), so the partitioned write spreads
+    // contracts across real block ranges — a lit(0) placeholder would put
+    // every contract in one partition at scale. The join doubles as the
+    // reference's semi-join filter (inner join on the extracted key set);
+    // AQE picks broadcast when the aggregated address→block map is small.
+    Table("contracts", Seq("receipts"), _.exportContracts, "block_number", columns(
+      "address" -> str, "bytecode" -> str),
+      (csv, up) => csv.join(up("receipts")
+        .filter(col("contract_address").isNotNull)
+        .groupBy(col("contract_address").as("address"))
+        .agg(min(col("block_number")).as("block_number")), Seq("address"), "inner")),
+    // stage 4: token transfers (config.py:51-53)
+    Table("token_transfers", Nil, _.exportTokenTransfers, "block_number", columns(
+      "token_address" -> str, "from_address" -> str, "to_address" -> str, "value" -> uint256,
+      "transaction_hash" -> str, "log_index" -> lng, "block_number" -> lng)),
+    // stage 5: tokens for distinct transfer token_addresses (config.py:56-57).
+    // Same pattern as contracts: the token's first-transfer block becomes its
+    // partition key, replacing the single-partition lit(0) placeholder.
+    Table("tokens", Seq("token_transfers"), _.exportTokens, "block_number", columns(
+      "address" -> str, "symbol" -> str, "name" -> str, "decimals" -> lng, "total_supply" -> str),
+      (csv, up) => csv.join(up("token_transfers")
+        .groupBy(col("token_address").as("address"))
+        .agg(min(col("block_number")).as("block_number")), Seq("address"), "inner")))
 
-  /** Single source of truth for the CSV-side transactions schema. */
-  val transactionsCsv: StructType = Tables.transactionsCsvSchema
-
-  val receiptsCsv = StructType(Seq(
-    f("transaction_hash", str), f("contract_address", str),
-    f("gas_used", lng), f("status", lng)))
-
-  val logsCsv = StructType(Seq(
-    f("transaction_hash", str), f("log_index", lng), f("address", str),
-    f("topics", str), f("data", str), f("block_number", lng)))
-
-  val contractsCsv = StructType(Seq(f("address", str), f("bytecode", str)))
-
-  val tokenTransfersCsv = StructType(Seq(
-    f("token_address", str), f("from_address", str), f("to_address", str),
-    f("value", str), f("transaction_hash", str), f("log_index", lng),
-    f("block_number", lng)))
-
-  val tokensCsv = StructType(Seq(
-    f("address", str), f("symbol", str), f("name", str),
-    f("decimals", lng), f("total_supply", str)))
-
-  private def dec38 = DecimalType(38, 0)
+  /** The tables `cfg` exports, in stage order. Config-disabled stages are
+    * left out and get no status row, matching the reference template where
+    * disabled activities aren't in the DAG at all. */
+  private def included(cfg: PipelineConfig): Seq[Table] =
+    tables.foldLeft(Vector.empty[Table]) { (in, t) =>
+      if (t.flag(cfg) && t.upstreams.forall(u => in.exists(_.name == u))) in :+ t else in
+    }
 
   /** Run the configured stages: ingest raw CSVs from `rawDir`, apply the
     * Glue-job transforms (ApplyMapping casts → DropNullFields), write each
@@ -252,91 +318,8 @@ object ExportPipeline {
       EtlOps.readPartitioned(spark, path, "parquet", df.schema)
     }
 
-    // Config-disabled stages are not declared and get no status row,
-    // matching the reference template where disabled activities aren't in
-    // the DAG at all.
-    // stage 1: blocks + transactions (config.py:35-38)
-    if (cfg.exportBlocks)
-      runner.stage("blocks")(_ =>
-        finish("blocks", EtlOps.applyMapping(csv(spark, rawDir, "blocks", blocksCsv), Seq(
-          ("number", "number", lng), ("hash", "hash", str), ("parent_hash", "parent_hash", str),
-          ("nonce", "nonce", str), ("miner", "miner", str),
-          ("difficulty", "difficulty", dec38), ("total_difficulty", "total_difficulty", dec38),
-          ("size", "size", lng), ("gas_limit", "gas_limit", lng), ("gas_used", "gas_used", lng),
-          ("timestamp", "timestamp", lng), ("transaction_count", "transaction_count", lng),
-          ("all_null_col", "all_null_col", str))), "number"))
-
-    if (cfg.exportTransactions)
-      runner.stage("transactions")(_ =>
-        finish("transactions", EtlOps.applyMapping(csv(spark, rawDir, "transactions", transactionsCsv), Seq(
-          ("hash", "hash", str), ("nonce", "nonce", lng), ("block_hash", "block_hash", str),
-          ("block_number", "block_number", lng), ("transaction_index", "transaction_index", lng),
-          ("from_address", "from_address", str), ("to_address", "to_address", str),
-          ("value", "value", dec38), ("gas", "gas", lng), ("gas_price", "gas_price", lng),
-          ("input", "input", str))), "block_number"))
-
-    // stage 2: receipts, fetched only for exported tx hashes (config.py:40-41).
-    // NO broadcast hint: the tx key set has the same cardinality as the
-    // receipts fact — a forced broadcast would ship every transaction hash
-    // to every executor (OOM at chain scale); the equi-join shuffles both
-    // sides on transaction_hash, and AQE still downgrades to broadcast when
-    // a filtered run is actually small.
-    if (cfg.exportReceipts && cfg.exportTransactions)
-      runner.stage("receipts", "transactions")(up =>
-        finish("receipts", csv(spark, rawDir, "receipts", receiptsCsv)
-          .join(up("transactions").select(col("hash").as("transaction_hash"),
-            col("block_number")), Seq("transaction_hash"), "inner"), "block_number"))
-
-    // stage 2b: logs for the same exported tx hashes (config.py:43-44 — the
-    // reference exports receipts and logs from one extracted hash file).
-    // A plain left-semi join for the same reason as receipts: the hash set
-    // is as large as the transactions table, so broadcasting it is AQE's
-    // call, made on the lake's measured size.
-    if (cfg.exportLogs && cfg.exportTransactions)
-      runner.stage("logs", "transactions")(up =>
-        finish("logs", csv(spark, rawDir, "logs", logsCsv)
-          .join(up("transactions").select(col("hash").as("transaction_hash")),
-            Seq("transaction_hash"), "left_semi"), "block_number"))
-
-    // stage 3: contracts for receipt contract_addresses (config.py:46-47).
-    // The creation block number rides along from the receipt row (min() in
-    // case of duplicate receipt rows), so the partitioned write spreads
-    // contracts across real block ranges — a lit(0) placeholder would put
-    // every contract in one partition at scale. The join doubles as the
-    // reference's semi-join filter (inner join on the extracted key set);
-    // AQE picks broadcast when the aggregated address→block map is small.
-    if (cfg.exportContracts && cfg.exportReceipts && cfg.exportTransactions)
-      runner.stage("contracts", "receipts") { up =>
-        val firstSeen = up("receipts")
-          .filter(col("contract_address").isNotNull)
-          .groupBy(col("contract_address").as("address"))
-          .agg(min(col("block_number")).as("block_number"))
-        finish("contracts", csv(spark, rawDir, "contracts", contractsCsv)
-          .join(firstSeen, Seq("address"), "inner"), "block_number")
-      }
-
-    // stage 4: token transfers (config.py:51-53)
-    if (cfg.exportTokenTransfers)
-      runner.stage("token_transfers")(_ =>
-        finish("token_transfers",
-          EtlOps.applyMapping(csv(spark, rawDir, "token_transfers", tokenTransfersCsv), Seq(
-            ("token_address", "token_address", str), ("from_address", "from_address", str),
-            ("to_address", "to_address", str), ("value", "value", dec38),
-            ("transaction_hash", "transaction_hash", str), ("log_index", "log_index", lng),
-            ("block_number", "block_number", lng))), "block_number"))
-
-    // stage 5: tokens for distinct transfer token_addresses (config.py:56-57).
-    // Same pattern as contracts: the token's first-transfer block becomes its
-    // partition key, replacing the single-partition lit(0) placeholder.
-    if (cfg.exportTokens && cfg.exportTokenTransfers)
-      runner.stage("tokens", "token_transfers") { up =>
-        val firstSeen = up("token_transfers")
-          .groupBy(col("token_address").as("address"))
-          .agg(min(col("block_number")).as("block_number"))
-        finish("tokens", csv(spark, rawDir, "tokens", tokensCsv)
-          .join(firstSeen, Seq("address"), "inner"), "block_number")
-      }
-
+    for (t <- included(cfg))
+      runner.stage(t.name, t.upstreams: _*)(up => finish(t.name, t.body(t.read(spark, rawDir), up), t.blockCol))
     val stages = runner.run() // before out.toMap: the stages fill `out`
     PipelineResult(out.toMap, stages)
   }
@@ -346,34 +329,20 @@ object ExportPipeline {
     * to CloudFormation JSON of Data Pipeline activity objects — id,
     * dependsOn, maximumRetries=5, failureAndRerunMode=cascade, staged
     * output location (generate_export_pipeline_template.py:194-199,
-    * export_pipeline_template.py:49,62-199,136-137); this renders the SAME
-    * graph semantics (including the config-conditional stage inclusion
-    * rules `run` enforces: a stage exists only when its flag AND its
-    * upstreams' flags are set) as one row per activity plus the rendered
-    * JSON object. Deterministic function of [[PipelineConfig]] — no table
-    * input — so the oracle pins the exact artifact as literals, the same
-    * way the reference's template would be golden-file tested. */
-  def templateObjects(cfg: PipelineConfig): Seq[(Long, String, String, Long, String, String, String)] = {
-    val stages = Seq(
-      ("blocks", Seq.empty[String], cfg.exportBlocks),
-      ("transactions", Seq.empty[String], cfg.exportTransactions),
-      ("receipts", Seq("transactions"),
-        cfg.exportReceipts && cfg.exportTransactions),
-      ("logs", Seq("transactions"), cfg.exportLogs && cfg.exportTransactions),
-      ("contracts", Seq("receipts"),
-        cfg.exportContracts && cfg.exportReceipts && cfg.exportTransactions),
-      ("token_transfers", Seq.empty[String], cfg.exportTokenTransfers),
-      ("tokens", Seq("token_transfers"),
-        cfg.exportTokens && cfg.exportTokenTransfers))
-    stages.filter(_._3).zipWithIndex.map { case ((name, deps, _), i) =>
-      val dependsJson = deps.map(d => s""""Activity_$d"""").mkString("[", ",", "]")
-      val json = s"""{"id":"Activity_$name","type":"SparkStage",""" +
+    * export_pipeline_template.py:49,62-199,136-137); this renders the
+    * stages `run` executes for the same config, one row per activity plus
+    * the rendered JSON object. Deterministic function of [[PipelineConfig]]
+    * — no table input — so the oracle pins the exact artifact as literals,
+    * the same way the reference's template would be golden-file tested. */
+  def templateObjects(cfg: PipelineConfig): Seq[(Long, String, String, Long, String, String, String)] =
+    included(cfg).zipWithIndex.map { case (t, i) =>
+      val dependsJson = t.upstreams.map(d => s""""Activity_$d"""").mkString("[", ",", "]")
+      val json = s"""{"id":"Activity_${t.name}","type":"SparkStage",""" +
         s""""maximumRetries":${cfg.maxRetries},"failureAndRerunMode":"cascade",""" +
-        s""""dependsOn":$dependsJson,"output":"export/$name"}"""
-      (i.toLong, s"Activity_$name", deps.mkString(","),
-        cfg.maxRetries.toLong, "cascade", s"export/$name", json)
+        s""""dependsOn":$dependsJson,"output":"export/${t.name}"}"""
+      (i.toLong, s"Activity_${t.name}", t.upstreams.mkString(","),
+        cfg.maxRetries.toLong, "cascade", s"export/${t.name}", json)
     }
-  }
 
   /** `pipeline_template` — [[templateObjects]] over the default config. */
   def pipelineTemplate(spark: SparkSession, dir: String): DataFrame = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables.t
+import graft.Tables.{deleteRecursively, t}
 
 /** Streaming semantics (SURVEY.md §2.2): the reference has no streaming
   * (its schedule is `ondemand`, export_pipeline_template.py:137); blocks-as-
@@ -518,11 +518,11 @@ object StreamOps {
       deltas.collect { case (i, f) if i > baseId => f.getAbsolutePath }.sorted
     // rule 2: GC subsumed artifacts (plus any id ≥ batchId leftovers from a
     // pre-crash future that can no longer commit)
-    deltas.collect { case (i, f) if i <= baseId => f }.foreach(deleteDir)
-    bases.collect { case (i, f) if i < baseId => f }.foreach(deleteDir)
+    deltas.collect { case (i, f) if i <= baseId => f }.foreach(deleteRecursively)
+    bases.collect { case (i, f) if i < baseId => f }.foreach(deleteRecursively)
     listed.foreach(f => f.getName match {
-      case Delta(i) if i.toLong > batchId => deleteDir(f)
-      case Base(i) if i.toLong > batchId => deleteDir(f)
+      case Delta(i) if i.toLong > batchId => deleteRecursively(f)
+      case Base(i) if i.toLong > batchId => deleteRecursively(f)
       case _ => })
     val index =
       if (snapshot.isEmpty)
@@ -560,11 +560,6 @@ object StreamOps {
       }
       claims
     } finally b.unpersist(): Unit
-  }
-
-  private def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteDir)
-    f.delete(): Unit
   }
 
   /** Band-claim candidate frame (doc_id, cand) from a signature index —

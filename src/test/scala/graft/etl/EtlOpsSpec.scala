@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 class EtlOpsSpec extends SparkTestBase {
 
@@ -84,7 +84,7 @@ class EtlOpsSpec extends SparkTestBase {
     val out = EtlOps.dropNullFields(df)
     assert(out.columns.toSeq == Seq("id", "sometimes"))
     // the one-pass lake write drops the same columns, read back schema-free
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dnf_spec").toString
+    val tmp = Tables.scratchDir("dnf_spec")
     val written = EtlOps.writeDroppingNullFields(df, tmp, "parquet", col("id"), col("id"))
     assert(written.fieldNames.toSeq == out.columns.toSeq)
     assert(spark.read.parquet(tmp).columns.toSeq == out.columns.toSeq ++ Seq("start_block", "end_block"))
@@ -151,7 +151,7 @@ class EtlOpsSpec extends SparkTestBase {
   // --- A4/A10 partitioned sinks: zero-padded layout round-trip --------------
   test("writePartitioned produces zero-padded Hive dirs; readPartitioned preserves them") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink_spec").toString
+    val tmp = Tables.scratchDir("sink_spec")
     val df = Seq((5L, "x"), (1005L, "y")).toDF("num", "payload")
     EtlOps.writePartitioned(df, tmp, "parquet",
       (col("num") / 1000).cast(LongType) * 1000,
@@ -176,9 +176,9 @@ class EtlOpsSpec extends SparkTestBase {
       } finally all.close()
     }
     val df = Seq((5L, "x"), (1005L, "y")).toDF("num", "payload")
-    val plain = Files.createTempDirectory("graft_plain_spec").resolve("out").toString
+    val plain = s"${Tables.scratchDir("plain_spec")}/out"
     df.write.parquet(plain)
-    val ranged = Files.createTempDirectory("graft_modes_spec").resolve("out").toString
+    val ranged = s"${Tables.scratchDir("modes_spec")}/out"
     EtlOps.writePartitioned(df, ranged, "parquet", col("num"), col("num"))
     assert(modes(ranged) == modes(plain))
     assert(modes(ranged).keySet == Set(true, false))
@@ -196,11 +196,11 @@ class EtlOpsSpec extends SparkTestBase {
     val fs = new NioLocalFileSystem.Raw
     fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
     def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
-    val file = Files.createTempFile("graft_mode_spec", ".bin")
+    val file = Files.createFile(java.nio.file.Paths.get(Tables.scratchDir("mode_spec"), "mode.bin"))
     fs.setPermission(new Path(file.toUri), octal("640"))
     assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(file)) == "rw-r-----")
     // NIO cannot set a sticky bit: only Hadoop's own path yields mode 1755
-    val dir = Files.createTempDirectory("graft_sticky_spec")
+    val dir = java.nio.file.Paths.get(Tables.scratchDir("sticky_spec"))
     fs.setPermission(new Path(dir.toUri), octal("1755"))
     val mode = Files.getAttribute(dir, "unix:mode").asInstanceOf[Int]
     assert(Integer.toOctalString(mode & 0xfff) == "1755")

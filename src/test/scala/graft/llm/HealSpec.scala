@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 /** Pins [[Dedup.healScanStarvation]]'s byte-floored gate (r15 verdict):
   * a starved-looking scan is only repartitioned when its LEAF bytes keep
@@ -11,7 +11,7 @@ import graft.SparkTestBase
 class HealSpec extends SparkTestBase {
 
   test("heal is a no-op on a tiny single-file scan (byte floor)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_heal_tiny").toString
+    val dir = Tables.scratchDir("heal_tiny")
     spark.range(500)
       .select(col("id").as("doc_id"), md5(col("id").cast("string")).as("text"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
@@ -26,7 +26,7 @@ class HealSpec extends SparkTestBase {
   }
 
   test("heal fans a dense single-file scan out to ceil(bytes/4MB), capped at width") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_heal_dense").toString
+    val dir = Tables.scratchDir("heal_dense")
     // ~90 MB raw of incompressible hex (sha512 of distinct ids) in ONE file:
     // parquet can't squeeze it under the 8 MB needed to clear the floor.
     spark.range(150000)
@@ -64,7 +64,7 @@ class HealSpec extends SparkTestBase {
     // parallelism 1). The gate cannot see row-group layout driver-side,
     // so byBytes >= planned must still repartition — pin that the heal
     // fires when the scan PLANS exactly the byte-derived width.
-    val dir = java.nio.file.Files.createTempDirectory("graft_heal_skew").toString
+    val dir = Tables.scratchDir("heal_skew")
     spark.range(150000)
       .select(col("id").as("doc_id"),
         concat((1 to 3).map(s => sha2(concat(col("id").cast("string"), lit(s)), 512)): _*)

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, ExecutionException, FutureTask, TimeUnit}
 
 import scala.jdk.CollectionConverters._
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 /** E2E: synthetic raw CSVs → staged export pipeline → partitioned Parquet →
   * read back and assert layout, types, and fan-out semantics (SURVEY.md §5
@@ -27,8 +26,8 @@ class ExportPipelineSpec extends SparkTestBase {
   }
 
   test("full pipeline: ingest → applyMapping → staged fan-out → padded partitioned parquet") {
-    val raw = Files.createTempDirectory("graft_raw").toString
-    val out = Files.createTempDirectory("graft_out").toString
+    val raw = Tables.scratchDir("raw")
+    val out = Tables.scratchDir("out")
 
     // uint256-boundary value (>int64), null to_address (contract creation),
     // all-null column, two block-range partitions
@@ -117,11 +116,41 @@ class ExportPipelineSpec extends SparkTestBase {
         .map(_.getName).filter(_.startsWith("start_block")).sorted.toSeq
       assert(dirs == Seq("start_block=00000000", "start_block=00001000"), s"$tbl layout: $dirs")
     }
+
+    // every table as the files hold it, read with no schema: column names,
+    // order and types, the three uint256 tables' decimal(38,0) included
+    val str = StringType
+    val lng = LongType
+    val dec = DecimalType(38, 0)
+    val range = Seq("start_block" -> IntegerType, "end_block" -> IntegerType)
+    val onDisk = Map(
+      "blocks" -> Seq("number" -> lng, "hash" -> str, "parent_hash" -> str, "nonce" -> str,
+        "miner" -> str, "difficulty" -> dec, "total_difficulty" -> dec, "size" -> lng,
+        "gas_limit" -> lng, "gas_used" -> lng, "timestamp" -> lng, "transaction_count" -> lng),
+      "transactions" -> Seq("hash" -> str, "nonce" -> lng, "block_hash" -> str,
+        "block_number" -> lng, "transaction_index" -> lng, "from_address" -> str,
+        "to_address" -> str, "value" -> dec, "gas" -> lng, "gas_price" -> lng, "input" -> str),
+      "receipts" -> Seq("transaction_hash" -> str, "contract_address" -> str,
+        "gas_used" -> lng, "status" -> lng, "block_number" -> lng),
+      "logs" -> Seq("transaction_hash" -> str, "log_index" -> lng, "address" -> str,
+        "topics" -> str, "data" -> str, "block_number" -> lng),
+      "contracts" -> Seq("address" -> str, "bytecode" -> str, "block_number" -> lng),
+      "token_transfers" -> Seq("token_address" -> str, "from_address" -> str,
+        "to_address" -> str, "value" -> dec, "transaction_hash" -> str, "log_index" -> lng,
+        "block_number" -> lng),
+      "tokens" -> Seq("address" -> str, "symbol" -> str, "name" -> str, "decimals" -> lng,
+        "total_supply" -> str, "block_number" -> lng))
+    assert(res.stages.keySet == onDisk.keySet)
+    for ((tbl, cols) <- onDisk)
+      assert(spark.read.parquet(s"$out/$tbl").schema.map(f => f.name -> f.dataType) == cols ++ range,
+        s"$tbl on disk")
+    val tt = spark.read.parquet(s"$out/token_transfers").filter(col("log_index") === 0).head()
+    assert(tt.getDecimal(tt.fieldIndex("value")).toString == "1000")
   }
 
   test("pipeline tolerates empty (header-only) stage inputs") {
-    val raw = Files.createTempDirectory("graft_raw3").toString
-    val out = Files.createTempDirectory("graft_out3").toString
+    val raw = Tables.scratchDir("raw3")
+    val out = Tables.scratchDir("out3")
     writeCsv(raw, "blocks", "number,hash,parent_hash,nonce,miner,difficulty,total_difficulty,size,gas_limit,gas_used,timestamp,transaction_count,all_null_col", Seq(
       "1,0xb1,0xb0,0x01,0xm1,1000,1000,500,8000000,21000,1438269988,1,"))
     writeCsv(raw, "transactions", "hash,nonce,block_hash,block_number,transaction_index,from_address,to_address,value,gas,gas_price,input", Seq(
@@ -145,8 +174,8 @@ class ExportPipelineSpec extends SparkTestBase {
   }
 
   test("config flags prune stages (cascade: no transactions -> no receipts/contracts)") {
-    val raw = Files.createTempDirectory("graft_raw2").toString
-    val out = Files.createTempDirectory("graft_out2").toString
+    val raw = Tables.scratchDir("raw2")
+    val out = Tables.scratchDir("out2")
     writeCsv(raw, "blocks", "number,hash,parent_hash,nonce,miner,difficulty,total_difficulty,size,gas_limit,gas_used,timestamp,transaction_count,all_null_col", Seq(
       "1,0xb1,0xb0,0x01,0xm1,1000,1000,500,8000000,21000,1438269988,1,"))
     val res = ExportPipeline.run(spark,
@@ -165,7 +194,7 @@ class ExportPipelineSpec extends SparkTestBase {
       PipelineConfig(exportTokenTransfers = false))
     val raw = minimalRaw()
     configs.foreach { cfg =>
-      val out = Files.createTempDirectory("graft_tpl").toString
+      val out = Tables.scratchDir("tpl")
       val ran = ExportPipeline.run(spark, cfg, raw, out).stages.keySet
       val declared = ExportPipeline.templateObjects(cfg)
         .map(_._2.stripPrefix("Activity_")).toSet
@@ -188,8 +217,36 @@ class ExportPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("templateObjects renders the exact activity rows of each config") {
+    def activity(i: Long, name: String, deps: String*) = {
+      val dependsOn = deps.map(d => "\"Activity_" + d + "\"").mkString(",")
+      (i, s"Activity_$name", deps.mkString(","), 5L, "cascade", s"export/$name",
+        s"""{"id":"Activity_$name","type":"SparkStage","maximumRetries":5,""" +
+          s""""failureAndRerunMode":"cascade","dependsOn":[$dependsOn],"output":"export/$name"}""")
+    }
+    val expected = Seq(
+      PipelineConfig() -> Seq(activity(0, "blocks"), activity(1, "transactions"),
+        activity(2, "receipts", "transactions"), activity(3, "logs", "transactions"),
+        activity(4, "contracts", "receipts"), activity(5, "token_transfers"),
+        activity(6, "tokens", "token_transfers")),
+      PipelineConfig(exportTransactions = false, exportTokenTransfers = false) ->
+        Seq(activity(0, "blocks")),
+      PipelineConfig(exportReceipts = false) -> Seq(activity(0, "blocks"),
+        activity(1, "transactions"), activity(2, "logs", "transactions"),
+        activity(3, "token_transfers"), activity(4, "tokens", "token_transfers")),
+      PipelineConfig(exportTokenTransfers = false) -> Seq(activity(0, "blocks"),
+        activity(1, "transactions"), activity(2, "receipts", "transactions"),
+        activity(3, "logs", "transactions"), activity(4, "contracts", "receipts")))
+    for ((cfg, rows) <- expected)
+      assert(ExportPipeline.templateObjects(cfg) == rows, s"template of $cfg")
+    // one row spelled out in full, independent of the helper above
+    assert(ExportPipeline.templateObjects(PipelineConfig())(4)._7 ==
+      """{"id":"Activity_contracts","type":"SparkStage","maximumRetries":5,"failureAndRerunMode":"cascade",""" +
+        """"dependsOn":["Activity_receipts"],"output":"export/contracts"}""")
+  }
+
   private def minimalRaw(): String = {
-    val raw = Files.createTempDirectory("graft_raw_rt").toString
+    val raw = Tables.scratchDir("raw_rt")
     writeCsv(raw, "blocks", "number,hash,parent_hash,nonce,miner,difficulty,total_difficulty,size,gas_limit,gas_used,timestamp,transaction_count,all_null_col", Seq(
       "1,0xb1,0xb0,0x01,0xm1,1000,1000,500,8000000,21000,1438269988,1,"))
     writeCsv(raw, "transactions", "hash,nonce,block_hash,block_number,transaction_index,from_address,to_address,value,gas,gas_price,input", Seq(
@@ -206,7 +263,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("a transiently poisoned stage retries within budget and the run completes") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_rt1").toString
+    val out = Tables.scratchDir("out_rt1")
     val failures = new java.util.concurrent.atomic.AtomicInteger(2)
     val cfg = PipelineConfig(stageInterceptor = (name, df) => {
       if (name == "receipts" && failures.getAndDecrement() > 0)
@@ -223,7 +280,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("an exhausted stage cascade-fails its dependents without running them") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_rt2").toString
+    val out = Tables.scratchDir("out_rt2")
     val cfg = PipelineConfig(maxRetries = 2, stageInterceptor = (name, df) => {
       if (name == "transactions") throw new RuntimeException("injected permanent fault")
       df
@@ -255,7 +312,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("independent stages overlap: blocks waits on a latch token_transfers releases") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_cc").toString
+    val out = Tables.scratchDir("out_cc")
     val released = new CountDownLatch(1)
     // if the stages ran one after another, blocks would time out before
     // token_transfers started and, with no retries, fail
@@ -272,7 +329,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("an export scans each raw CSV exactly once: the census rides the write's shuffle") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_scan").toString
+    val out = Tables.scratchDir("out_scan")
     val scans = new ConcurrentHashMap[String, Integer]()
     val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -298,7 +355,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("a non-Exception Throwable in a stage reaches the caller; no stage thread outlives run()") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_fatal").toString
+    val out = Tables.scratchDir("out_fatal")
     val stageThreads = new ConcurrentLinkedQueue[Thread]()
     val fatal = new Error("injected fatal error")
     val cfg = PipelineConfig(stageInterceptor = (name, df) => {
@@ -320,7 +377,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("an interrupted caller interrupts its stages and returns only once they have ended") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_intr").toString
+    val out = Tables.scratchDir("out_intr")
     val roots = new CountDownLatch(3) // blocks, transactions, token_transfers
     val stageThreads = new ConcurrentLinkedQueue[Thread]()
     val cfg = PipelineConfig(maxRetries = 0, stageInterceptor = (_, df) => {
@@ -342,7 +399,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("every job a stage submits carries the caller's local properties") {
     val raw = minimalRaw()
-    val out = Files.createTempDirectory("graft_out_props").toString
+    val out = Tables.scratchDir("out_props")
     val key = "graft.spec.caller"
     val sc = spark.sparkContext
     val seen = new ConcurrentLinkedQueue[Option[String]]()
@@ -373,7 +430,7 @@ class ExportPipelineSpec extends SparkTestBase {
   }
 
   test("curation DAG: staged execution is indistinguishable from the composed plan") {
-    val out = Files.createTempDirectory("graft_cur1").toString
+    val out = Tables.scratchDir("cur1")
     val res = CurationPipeline.run(spark, PipelineConfig(), sf, out)
     assert(CurationPipeline.StageNames.forall(n =>
       res.stages(n).isInstanceOf[StageStatus.Succeeded]), res.stages.toString)
@@ -388,7 +445,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
   test("curation DAG: a transient fault retries; a permanent one cascades") {
     // transient: two injected faults on decontaminate, then clean
-    val out1 = Files.createTempDirectory("graft_cur2").toString
+    val out1 = Tables.scratchDir("cur2")
     val flaky = new java.util.concurrent.atomic.AtomicInteger(2)
     val res1 = CurationPipeline.run(spark, PipelineConfig(
       stageInterceptor = (name, df) => {
@@ -402,7 +459,7 @@ class ExportPipelineSpec extends SparkTestBase {
 
     // permanent: near_dup exhausts its budget, substring_cut cascades
     // without evaluating its body (no staging dir appears for it)
-    val out2 = Files.createTempDirectory("graft_cur3").toString
+    val out2 = Tables.scratchDir("cur3")
     val res2 = CurationPipeline.run(spark, PipelineConfig(maxRetries = 1,
       stageInterceptor = (name, df) => {
         if (name == "near_dup") throw new RuntimeException("injected permanent fault")

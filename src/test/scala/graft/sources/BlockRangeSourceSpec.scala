@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 /** Records every (s, e) fetch call; content delegates to the synthetic
   * default. A top-level object so executor threads hit the same instance
@@ -108,7 +108,7 @@ class BlockRangeSourceSpec extends SparkTestBase {
     // stage a node dump the way the reference stages export files: one JSON
     // object per block line, difficulty a STRING (uint256-as-string, cast
     // to decimal(38,0) engine-side like convert_blocks_to_parquet.py)
-    val dump = java.nio.file.Files.createTempFile("graft_dump", ".jsonl")
+    val dump = java.nio.file.Paths.get(Tables.scratchDir("dump"), "blocks.jsonl")
     val lines = (0L to 4999L).map { n =>
       val b = BlockRangeSource.SyntheticFetcher.fetch(n, n).next()
       s"""{"number":${b.number},"hash":"${b.hash}","miner":"${b.miner}",""" +
@@ -137,7 +137,7 @@ class BlockRangeSourceSpec extends SparkTestBase {
 
   test("micro-batch stream follows the chain head and equals the batch read") {
     import org.apache.spark.sql.streaming.Trigger
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_brs_ckpt").toString
+    val ckpt = Tables.scratchDir("brs_ckpt")
     val stream = spark.readStream.format("graft.sources.BlockRangeSource")
       .option("start", 0).option("end", 499)
       .option("batchSize", 100).option("blocksPerTrigger", 200)
@@ -162,7 +162,7 @@ class BlockRangeSourceSpec extends SparkTestBase {
 
   test("micro-batch stream restart resumes from the checkpoint, exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft_brs_restart").toString
+    val root = Tables.scratchDir("brs_restart")
     def startQ() = spark.readStream.format("graft.sources.BlockRangeSource")
       .option("start", 0).option("end", 4999)
       .option("batchSize", 250).option("blocksPerTrigger", 250)

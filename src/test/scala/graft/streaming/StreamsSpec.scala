@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 /** Drives the real readStream pipelines with MemoryStream and checks the
   * streaming results equal the batch-equivalent semantics in StreamOps. */
@@ -282,7 +282,7 @@ class StreamsSpec extends SparkTestBase {
     val sess = spark
     sess.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the file stream source needs a directory; stage the single-file table
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src")
+    val dir = java.nio.file.Paths.get(Tables.scratchDir("stream_src"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
