@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -88,7 +88,7 @@ object EtlOps {
   // aggregate (a single reduce, map-side combined) over the frame: a full
   // pass over its input, since a CSV or a join carries no column statistics.
   // `dropNullFields` runs it as its own job, then projects; the export's
-  // [[writeDroppingNullFields]] observes it on the write's own shuffle.
+  // [[stageRanges]] observes it on the write's own shuffle.
   // ---------------------------------------------------------------------------
   def dropNullFields(df: DataFrame): DataFrame = {
     val counts = df.select(nullCensus(df): _*).head()
@@ -260,9 +260,7 @@ object EtlOps {
     val bytes = fs.listStatus(p)
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inPath)
-      .repartition(n)
-      .write.mode("overwrite").parquet(outPath)
+    overwrite(spark.read.parquet(inPath).repartition(n)).parquet(outPath)
     n
   }
 
@@ -279,17 +277,16 @@ object EtlOps {
                        startCol: Column, endCol: Column): Unit =
     writeRanges(byBlockRange(withBlockRange(df, startCol, endCol)), path, format)
 
-  /** A stage's lake in one pass: [[writePartitioned]] with DropNullFields
-    * applied, at the cost of one read of `df` where `dropNullFields` then
+  /** A stage's lake in one pass, first half: `df` partitioned by block
+    * range and checkpointed, with its DropNullFields census taken, at the
+    * cost of one read of `df` where `dropNullFields` then
     * `writePartitioned` read it twice. The census is an `Observation` on the
     * padded rows entering the partitioning shuffle (it counts `df`'s
-    * columns only), whose output an eager `localCheckpoint()` materialises;
-    * the dead columns are then dropped, `beforeWrite` applied (it sees
-    * `start_block`, `end_block` as the first two columns), and the
-    * checkpoint written with no second shuffle. A retry re-runs the whole
-    * step, and a stage re-attempt that counts some rows twice cannot move a
-    * count between zero and non-zero. Returns the written data schema,
-    * without the partition columns.
+    * columns only), whose output an eager `localCheckpoint()` materialises.
+    * [[StagedRanges.write]] then drops the dead columns and writes the
+    * checkpoint with no second shuffle. A retry re-runs the whole step, and
+    * a stage re-attempt that counts some rows twice cannot move a count
+    * between zero and non-zero.
     *
     * The column order and the observe placement keep an export's generated
     * code inside Spark's compiled-code cache, which holds 100 entries
@@ -298,39 +295,56 @@ object EtlOps {
     * executor's loader. With the partition columns first, the code that
     * hashes, sorts and extracts them has the same source for every table,
     * and observing above the padding keeps the padding in the scan's
-    * codegen stage instead of a stage of its own. An export then needs 70
-    * entries instead of 104, so a repeated export recompiles nothing. */
-  def writeDroppingNullFields(df: DataFrame, path: String, format: String,
-                              startCol: Column, endCol: Column,
-                              beforeWrite: DataFrame => DataFrame = identity): StructType = {
+    * codegen stage instead of a stage of its own. An export then needs 72
+    * entries, so in most JVMs a repeated export recompiles nothing; the
+    * cache has four segments of 25 entries, and a JVM whose class loaders
+    * hash unluckily overflows one. */
+  def stageRanges(df: DataFrame, startCol: Column, endCol: Column): StagedRanges = {
     val census = Observation()
     val metrics = nullCensus(df)
-    val staged = byBlockRange(withBlockRange(df, startCol, endCol)
+    val rows = byBlockRange(withBlockRange(df, startCol, endCol)
       .observe(census, metrics.head, metrics.tail: _*)).localCheckpoint()
     val counts = census.get
-    val cleaned = beforeWrite(staged.drop(deadColumns(df, counts(_).asInstanceOf[Long]): _*))
-    writeRanges(cleaned, path, format)
-    cleaned.drop("start_block", "end_block").schema
+    StagedRanges(rows, deadColumns(df, counts(_).asInstanceOf[Long]))
+  }
+
+  /** A frame checkpointed by [[stageRanges]]: `rows` holds the padded
+    * `start_block`, `end_block` and then every column of the staged frame;
+    * `dead` names the columns that are null in every row. */
+  final case class StagedRanges(rows: DataFrame, dead: Seq[String]) {
+    /** The second half: write `rows` without the dead columns, after
+      * `beforeWrite` (which sees `start_block`, `end_block` as the first
+      * two columns). Returns the written data schema, without the
+      * partition columns. */
+    def write(path: String, format: String,
+              beforeWrite: DataFrame => DataFrame = identity): StructType = {
+      val cleaned = beforeWrite(rows.drop(dead: _*))
+      writeRanges(cleaned, path, format)
+      cleaned.drop("start_block", "end_block").schema
+    }
   }
 
   /** `df` behind its padded partition columns, which come first: see
-    * [[writeDroppingNullFields]] for why the order matters. The written
-    * files hold only `df`'s columns, in `df`'s order. */
+    * [[stageRanges]] for why the order matters. The written files hold
+    * only `df`'s columns, in `df`'s order. */
   private def withBlockRange(df: DataFrame, startCol: Column, endCol: Column): DataFrame =
     df.select(padded(startCol).as("start_block"), padded(endCol).as("end_block"), col("*"))
 
   private def byBlockRange(df: DataFrame): DataFrame =
     df.repartition(col("start_block"), col("end_block"))
 
-  /** Hadoop's local file system forks a `chmod` per created file and
-    * directory; [[NioLocalFileSystem]] sets the same modes in-process. The
-    * option reaches only this write's Hadoop conf, and Hadoop's FileSystem
-    * cache, keyed by scheme and user rather than conf, would otherwise hand
-    * back the default instance. */
-  private def writeRanges(df: DataFrame, path: String, format: String): Unit = {
-    val w = df.write.mode("overwrite").partitionBy("start_block", "end_block")
+  /** `df`'s overwriting writer. Hadoop's local file system forks a `chmod`
+    * per created file and directory; [[NioLocalFileSystem]] sets the same
+    * modes in-process. The option reaches only this write's Hadoop conf,
+    * and Hadoop's FileSystem cache, keyed by scheme and user rather than
+    * conf, would otherwise hand back the default instance. */
+  private[graft] def overwrite(df: DataFrame): DataFrameWriter[Row] =
+    df.write.mode("overwrite")
       .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
       .option("fs.file.impl.disable.cache", "true")
+
+  private def writeRanges(df: DataFrame, path: String, format: String): Unit = {
+    val w = overwrite(df).partitionBy("start_block", "end_block")
     format match {
       case "csv"     => w.option("header", "true").csv(path)
       case "parquet" => w.parquet(path)
@@ -433,12 +447,12 @@ object EtlOps {
     * order-independent, and (unlike averages) mergeable. */
   private def aggStateDir(spark: SparkSession, dir: String): String = {
     val p = graft.Tables.scratchDir("agg_state")
-    t(spark, dir, "orders")
+    overwrite(t(spark, dir, "orders")
       .filter(col("o_orderkey") % 10 =!= 0)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast(DecimalType(18, 2))).as("total"))
-      .write.mode("overwrite").parquet(s"$p/state")
+        sum(col("o_totalprice").cast(DecimalType(18, 2))).as("total")))
+      .parquet(s"$p/state")
     p
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables.t
+import graft.etl.EtlOps
 import graft.llm.{Dedup, TextOps}
 
 /** The LLM curation pipeline under the SAME operational contract as the
@@ -44,21 +45,24 @@ object CurationPipeline {
 
   /** Run the curation DAG. Only `maxRetries` and `stageInterceptor` (the
     * fault-injection seam) are read from the config — the stage set is
-    * fixed, unlike the flag-gated export DAG. The stages form a chain, so
-    * [[StageRunner]] runs them one at a time, in declaration order. */
+    * fixed, unlike the flag-gated export DAG. The stages form a chain and
+    * each publishes its staging only once written, so [[StageRunner]] runs
+    * them one at a time, in declaration order. */
   def run(spark: SparkSession, cfg: PipelineConfig, dir: String,
           outDir: String): PipelineResult = {
-    val runner = new StageRunner(cfg.maxRetries)
+    val runner = new StageRunner(spark, cfg.maxRetries)
     val out = TrieMap.empty[String, DataFrame]
 
-    def finish(name: String, df: DataFrame): DataFrame = {
+    // Writes the staging inside the stage's body and publishes it read
+    // back, so a dependent starts only after its upstream's write.
+    def finish(name: String, df: DataFrame): StageRunner.Step = {
       val staged = cfg.stageInterceptor(name, df)
-      staged.write.mode("overwrite").parquet(s"$outDir/$name")
+      EtlOps.overwrite(staged).parquet(s"$outDir/$name")
       // read back with the explicit schema: an empty survivor set writes no
       // data files and schema inference over zero files fails
       val back = spark.read.schema(staged.schema).parquet(s"$outDir/$name")
       out(name) = back
-      back
+      StageRunner.Step(back)
     }
 
     val tk = split(col("text"), " ")

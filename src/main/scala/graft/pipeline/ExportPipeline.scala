@@ -1,9 +1,14 @@
 package graft.pipeline
 
+import java.util.UUID
+import java.util.concurrent.CountDownLatch
+
 import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ListMap
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,25 +21,31 @@ import graft.etl.EtlOps
   * `export_pipeline_template.py:144-181` wires stage k's output file into
   * stage k+1 (txs→hashes→receipts, receipts→contract_address→contracts,
   * transfers→distinct token_address→tokens). Here each activity is a stage
-  * of [[StageRunner]], scheduled the same way: a stage starts as soon as
-  * every stage in its `dependsOn` has succeeded, so the three branches —
-  * blocks; transactions → {receipts → contracts, logs}; token_transfers →
-  * tokens — run concurrently. Each table is declared once, in
+  * of [[StageRunner]], scheduled the same way except that a stage starts as
+  * soon as every stage in its `dependsOn` has staged its rows, and writes
+  * once they have all succeeded. The three branches — blocks; transactions
+  * → {receipts → contracts, logs}; token_transfers → tokens — run
+  * concurrently. Each table is declared once, in
   * `ExportPipeline.tables`: its name, upstreams, config flag, lake schema,
   * block column and frame. [[ExportPipeline.run]] and
   * [[ExportPipeline.templateObjects]] both take the included stages from
   * that list, and the CSV read schema and the ApplyMapping casts of each
-  * table derive from its lake schema. The staged file is the upstream's Parquet
-  * lake: a downstream stage keys from what its upstream wrote, never from
-  * the upstream's raw CSV, and the fan-out key extractions become joins
-  * against it. Each stage reads its raw CSV once: the DropNullFields census
-  * is observed on the partitioned write's own shuffle, whose rows are
-  * checkpointed and then written ([[EtlOps.writeDroppingNullFields]]), so
-  * an export makes 7 CSV scans. The partition loop (config.py:10-14)
+  * table derive from its lake schema. A downstream stage keys from what
+  * its upstream staged, never from the upstream's raw CSV, and the fan-out
+  * key extractions become joins against it. Each stage reads its raw CSV
+  * once and checkpoints its partitioned rows, observing the DropNullFields
+  * census on that shuffle ([[EtlOps.stageRanges]]), so an export makes 7
+  * CSV scans and no lake scans. The checkpointed rows, every column kept,
+  * are what the stage's dependents start on, as soon as they exist; the
+  * stage's write of its lake runs meanwhile, and a dependent writes only
+  * once every upstream's write has succeeded. The reference's fan-out
+  * likewise keys from the file its upstream exported (config.py:40), with
+  * the Parquet conversion off that chain. The partition loop (config.py:10-14)
   * becomes the partitioned write. Every stage's frame puts its padded
   * `start_block`, `end_block` columns first, so the 7 stages share their
-  * partitioning code and a repeated export finds all of its generated code
-  * in Spark's 100-entry compiled-code cache instead of recompiling it.
+  * partitioning code and a repeated export usually finds all of its
+  * generated code in Spark's 100-entry compiled-code cache instead of
+  * recompiling it (see [[EtlOps.stageRanges]]).
   */
 final case class PipelineConfig(
     exportBlocks: Boolean = true,
@@ -51,16 +62,19 @@ final case class PipelineConfig(
     // (config.py:10-14) exactly; see [[ExportPipeline.referenceBounds]].
     partitionBounds: Option[Column => (Column, Column)] = None,
     // Per-stage retry budget, the reference's maximumRetries=5
-    // (export_pipeline_template.py:49): each stage's write is attempted
-    // 1 + maxRetries times before it is declared failed. Within one run a
-    // retry is safe because every stage sink is a full-path overwrite; across
-    // runs that overwrite erases ranges an earlier run wrote (ROADMAP item 6).
+    // (export_pipeline_template.py:49): each stage's whole step, its staged
+    // rows and then its write, is attempted 1 + maxRetries times before it
+    // is declared failed. Within one run a retry is safe because every stage
+    // sink is a full-path overwrite; across runs that overwrite erases
+    // ranges an earlier run wrote (ROADMAP item 6).
     maxRetries: Int = 5,
     // Fault-injection seam for retry/cascade tests: applied to each stage's
-    // cleaned frame just before its write. The frame's first two columns are
-    // its padded start_block, end_block partition columns; the order keeps
-    // the export's generated code within Spark's compiled-code cache (see
-    // EtlOps.writeDroppingNullFields). Production default is identity;
+    // cleaned frame just before its write, once every upstream's write has
+    // succeeded. In the export its result reaches the lake only: the
+    // stage's dependents start on the staged rows, before the write. The
+    // frame's first two columns are its padded start_block, end_block
+    // partition columns; the order keeps the export's generated code within
+    // Spark's compiled-code cache (see EtlOps.stageRanges). Production default is identity;
     // a test hook can throw on the first N invocations of a chosen stage to
     // exercise the retry loop deterministically. Independent stages run on
     // their own threads, so it can be called concurrently: a stateful hook
@@ -71,7 +85,7 @@ final case class PipelineConfig(
   * activity lifecycle under failureAndRerunMode=cascade
   * (export_pipeline_template.py:136): a stage either succeeded (possibly
   * after retries), exhausted its retry budget, or was cascade-failed
-  * because an upstream did — dependents of a failed activity never run. */
+  * because an upstream did — dependents of a failed activity never write. */
 sealed trait StageStatus
 object StageStatus {
   final case class Succeeded(attempts: Int) extends StageStatus
@@ -104,42 +118,55 @@ final case class PipelineResult(
 
 /** The retry/cascade stage executor, factored out of the Ethereum export
   * DAG so the LLM curation DAG ([[CurationPipeline]]) runs under the SAME
-  * operational contract (export_pipeline_template.py:49,136): a stage body
-  * — declaration + idempotent full-path-overwrite write — is attempted
-  * `1 + maxRetries` times; once a stage exhausts its budget every
-  * transitive dependent is CascadeFailed WITHOUT running (its body is never
-  * evaluated, so no partial output is written for a stage whose input is
-  * bad). Statuses come back in declaration order and are surfaced via
+  * operational contract (export_pipeline_template.py:49,136): a stage's
+  * step — its body, then the idempotent full-path-overwrite write the body
+  * returns — is attempted `1 + maxRetries` times; once a stage exhausts
+  * its budget every transitive dependent is CascadeFailed and never writes
+  * (no output is written for a stage whose input is bad). Statuses come
+  * back in declaration order and are surfaced via
   * [[PipelineResult.deadLetter]].
   *
   * Stages are declared with [[stage]] (upstreams first, so the graph is
   * acyclic) and executed by [[run]], which schedules them as Data Pipeline
-  * schedules activities on `dependsOn`: every stage gets its own thread,
-  * which waits for its upstreams and starts its body as soon as all of them
-  * have succeeded. Independent branches therefore overlap, at most as many
-  * at a time as the DAG is wide, and Spark's scheduler shares the cores
-  * among their jobs. A body receives its upstreams' outputs by name. A
-  * Throwable that is not an Exception is not retried: its stage's
-  * dependents do not run, and [[run]] rethrows it once every stage thread
-  * has ended. */
-private[pipeline] final class StageRunner(maxRetries: Int) {
+  * schedules activities on `dependsOn`, with the write split off: every
+  * stage gets its own thread, which starts its body as soon as each of its
+  * upstreams has published its output, and starts the write the body
+  * returns once each upstream's write has succeeded. A stage publishes the
+  * output of its first body that returns, so an upstream's write overlaps
+  * its dependents' bodies. Independent branches overlap too, at most as
+  * many stages at a time as the DAG is wide, and Spark's scheduler shares
+  * the cores among their jobs. A body receives its upstreams' outputs by
+  * name. A Throwable that is not an Exception is not retried: its stage's
+  * dependents do not write, and [[run]] rethrows it once every stage
+  * thread has ended. */
+private[pipeline] final class StageRunner(spark: SparkSession, maxRetries: Int) {
   private final class Stage(val name: String, val upstreams: Seq[Stage],
-                            val body: Map[String, DataFrame] => DataFrame) {
+                            val body: Map[String, DataFrame] => StageRunner.Step) {
     var thread: Thread = _
+    // set by the stage's own thread before `published` opens; read by
+    // dependents once it has opened
+    var output = Option.empty[DataFrame]
+    val published = new CountDownLatch(1)
     // written by the stage's own thread; read by others only after join()
     var status = Option.empty[StageStatus]
-    var output = Option.empty[DataFrame]
     var fatal = Option.empty[Throwable]
   }
   private val stages = scala.collection.mutable.ArrayBuffer[Stage]()
+  // every job the stage threads submit carries it, so an interrupted run
+  // can cancel the jobs its stages leave behind
+  private val jobTag = s"graft-stage-runner-${UUID.randomUUID()}"
+  @volatile private var stopping = false
 
-  def stage(name: String, upstreams: String*)(body: Map[String, DataFrame] => DataFrame): Unit =
+  def stage(name: String, upstreams: String*)(body: Map[String, DataFrame] => StageRunner.Step): Unit =
     stages += new Stage(name, upstreams.map(u => stages.find(_.name == u).getOrElse(
       throw new IllegalArgumentException(s"stage '$name': upstream '$u' is not declared"))), body)
 
   /** Run every declared stage and return when all have ended. If the
     * caller is interrupted meanwhile, the interrupt is passed on to every
-    * stage thread, and rethrown once they have all ended. */
+    * stage thread, no stage retries, and the interrupt is rethrown once the
+    * threads have ended and the scheduler has cancelled every job they
+    * submitted: a thread interrupted while it waits for a job leaves that
+    * job running. */
   def run(): Map[String, StageStatus] = {
     // Constructed on the calling thread, so each stage thread inherits the
     // caller's Spark local properties (job group, scheduler pool, ...),
@@ -149,8 +176,16 @@ private[pipeline] final class StageRunner(maxRetries: Int) {
     try stages.foreach(_.thread.join())
     catch {
       case e: InterruptedException =>
+        stopping = true
         stages.foreach(_.thread.interrupt())
         stages.foreach(_.thread.join())
+        // after the joins no stage thread submits another job, but a pool
+        // thread one of its queries started (a broadcast, say) still can:
+        // cancel until a round 100 ms after the last finds none
+        def cancel() = Await.result(
+          GraftBridge.cancelJobsWithTag(spark, jobTag, "pipeline run interrupted"), 1.minute)
+        cancel()
+        while ({ Thread.sleep(100); cancel() > 0 }) ()
         throw e
     }
     stages.flatMap(_.fatal).headOption.foreach(throw _)
@@ -158,32 +193,58 @@ private[pipeline] final class StageRunner(maxRetries: Int) {
   }
 
   private def execute(s: Stage): Unit = try {
+    spark.sparkContext.addJobTag(jobTag) // to this thread's copy of the caller's properties
+    s.upstreams.foreach(_.published.await())
+    val (attempts, written, lastErr) =
+      if (s.upstreams.forall(_.output.isDefined)) attempt(s) else (0, false, "")
     s.upstreams.foreach(_.thread.join())
     // an upstream without a status ended on a Throwable that is not an
     // Exception, or skipped because one of its own did: run() rethrows it
     if (s.upstreams.forall(_.status.isDefined))
-      s.upstreams.find(!_.status.get.isInstanceOf[StageStatus.Succeeded]) match {
-        case Some(bad) => s.status = Some(StageStatus.CascadeFailed(bad.name))
-        case None      => attempt(s, s.upstreams.map(u => u.name -> u.output.get).toMap)
-      }
+      s.status = Some(s.upstreams.find(!_.status.get.isInstanceOf[StageStatus.Succeeded]) match {
+        case Some(bad)       => StageStatus.CascadeFailed(bad.name)
+        case None if written => StageStatus.Succeeded(attempts)
+        case None            => StageStatus.Failed(attempts, lastErr)
+      })
   } catch {
     case t: Throwable => s.fatal = Some(t)
-  }
+  } finally s.published.countDown()
 
-  private def attempt(s: Stage, inputs: Map[String, DataFrame]): Unit = {
+  /** Attempt `s`'s step until it is written, its budget is spent, an
+    * upstream has failed, or the run stops. Returns the attempts made,
+    * whether the write succeeded and the last error. */
+  private def attempt(s: Stage): (Int, Boolean, String) = {
+    val inputs = s.upstreams.map(u => u.name -> u.output.get).toMap
+    def upstreamsWritten = {
+      s.upstreams.foreach(_.thread.join())
+      s.upstreams.forall(_.status.exists(_.isInstanceOf[StageStatus.Succeeded]))
+    }
     var attempts = 0
     var lastErr = ""
-    while (s.output.isEmpty && attempts <= maxRetries) {
+    var written = Option.empty[Boolean] // set once no further attempt is due
+    while (written.isEmpty && attempts <= maxRetries && !stopping) {
       attempts += 1
-      try s.output = Some(s.body(inputs))
-      catch {
+      try {
+        val step = s.body(inputs)
+        if (s.output.isEmpty) {
+          s.output = Some(step.output)
+          s.published.countDown()
+        }
+        written = Some(upstreamsWritten && { step.write(); true })
+      } catch {
         case e: Exception =>
           lastErr = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
       }
     }
-    s.status = Some(if (s.output.isDefined) StageStatus.Succeeded(attempts)
-      else StageStatus.Failed(attempts, lastErr))
+    (attempts, written.contains(true), lastErr)
   }
+}
+
+private[pipeline] object StageRunner {
+  /** One attempt's result: `output`, which the stage's dependents start
+    * on, and `write`, which runs once every upstream's write has
+    * succeeded. */
+  final case class Step(output: DataFrame, write: () => Unit = () => ())
 }
 
 object ExportPipeline {
@@ -292,30 +353,32 @@ object ExportPipeline {
   /** Run the configured stages: ingest raw CSVs from `rawDir`, apply the
     * Glue-job transforms (ApplyMapping casts → DropNullFields), write each
     * entity as zero-padded block-range-partitioned Parquet under `outDir`,
-    * key each downstream stage from the lake its upstream wrote, and return
-    * the final DataFrames keyed by table name. */
+    * key each downstream stage from its upstream's checkpointed rows, and
+    * return the written tables keyed by name. */
   def run(spark: SparkSession, cfg: PipelineConfig, rawDir: String, outDir: String): PipelineResult = {
     val out = TrieMap.empty[String, DataFrame]
-    val runner = new StageRunner(cfg.maxRetries)
+    val runner = new StageRunner(spark, cfg.maxRetries)
     val bucket = (c: String) => (col(c) / cfg.batchSize).cast(LongType) * cfg.batchSize
     val bounds = (c: String) => cfg.partitionBounds match {
       case Some(f) => f(col(c))
       case None    => (bucket(c), bucket(c) + (cfg.batchSize - 1))
     }
 
-    // Writes the stage's lake and returns it read back for its dependents.
-    // Both reads name their schema: an empty batch writes no files, and
-    // schema inference over zero parquet files fails. The dependents' read
-    // uses the PRE-DropNullFields schema, so a column that is null in every
-    // row of this batch reads back as null instead of vanishing — an
-    // all-null contract_address batch must not erase a fan-out join column.
-    def finish(name: String, df: DataFrame, blockCol: String): DataFrame = {
+    // Checkpoints the stage's rows and takes their census; the dependents
+    // start on those rows, which keep every column: a column that is null in
+    // every row of this batch is still there for them — an all-null
+    // contract_address batch must not erase a fan-out join column. The write
+    // drops the dead columns and reads the lake back for the result, naming
+    // its schema: an empty batch writes no files, and schema inference over
+    // zero parquet files fails.
+    def finish(name: String, df: DataFrame, blockCol: String): StageRunner.Step = {
       val (startB, endB) = bounds(blockCol)
-      val path = s"$outDir/$name"
-      val written = EtlOps.writeDroppingNullFields(df, path, "parquet", startB, endB,
-        cfg.stageInterceptor(name, _))
-      out(name) = EtlOps.readPartitioned(spark, path, "parquet", written)
-      EtlOps.readPartitioned(spark, path, "parquet", df.schema)
+      val staged = EtlOps.stageRanges(df, startB, endB)
+      StageRunner.Step(staged.rows, () => {
+        val path = s"$outDir/$name"
+        val written = staged.write(path, "parquet", cfg.stageInterceptor(name, _))
+        out(name) = EtlOps.readPartitioned(spark, path, "parquet", written)
+      })
     }
 
     for (t <- included(cfg))

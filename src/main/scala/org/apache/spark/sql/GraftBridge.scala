@@ -43,4 +43,11 @@ object GraftBridge {
                      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
                      schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Cancel every active job that carries `tag`; the future completes with
+    * their number once the scheduler has ended them all, where the public
+    * `SparkContext.cancelJobsWithTag` returns before it has. */
+  def cancelJobsWithTag(spark: SparkSession, tag: String, reason: String): scala.concurrent.Future[Int] =
+    spark.sparkContext.cancelJobsWithTagWithFuture(tag, reason)
+      .map(_.size)(scala.concurrent.ExecutionContext.parasitic)
 }

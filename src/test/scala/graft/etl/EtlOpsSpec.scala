@@ -85,7 +85,7 @@ class EtlOpsSpec extends SparkTestBase {
     assert(out.columns.toSeq == Seq("id", "sometimes"))
     // the one-pass lake write drops the same columns, read back schema-free
     val tmp = Tables.scratchDir("dnf_spec")
-    val written = EtlOps.writeDroppingNullFields(df, tmp, "parquet", col("id"), col("id"))
+    val written = EtlOps.stageRanges(df, col("id"), col("id")).write(tmp, "parquet")
     assert(written.fieldNames.toSeq == out.columns.toSeq)
     assert(spark.read.parquet(tmp).columns.toSeq == out.columns.toSeq ++ Seq("start_block", "end_block"))
     // the partition columns lead the staged frame, but each written file

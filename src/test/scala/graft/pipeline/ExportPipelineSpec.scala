@@ -4,7 +4,8 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -62,7 +63,7 @@ class ExportPipelineSpec extends SparkTestBase {
       "0xtok3,TK3,Token Three,18,3000000")) // no transfers: must not export
 
     // every stage's frame leads with its partition columns, which lets the
-    // stages share their generated code (EtlOps.writeDroppingNullFields)
+    // stages share their generated code (EtlOps.stageRanges)
     val leading = new ConcurrentHashMap[String, Seq[String]]()
     val cfg = PipelineConfig(stageInterceptor = (name, df) => {
       leading.put(name, df.columns.toSeq.take(2)); df
@@ -298,7 +299,7 @@ class ExportPipelineSpec extends SparkTestBase {
     assert(res.stages("blocks") == StageStatus.Succeeded(1))
     assert(res.stages("tokens") == StageStatus.Succeeded(1))
     assert(res.tables.keySet == Set("blocks", "token_transfers", "tokens"))
-    // cascade-failed stages never evaluated their body: no partial sink dirs
+    // cascade-failed stages never wrote: no partial sink dirs
     for (t <- Seq("transactions", "receipts", "logs", "contracts"))
       assert(!new java.io.File(s"$out/$t").exists(), s"unexpected partial output for $t")
     // the dead-letter surface routes the failures as data
@@ -327,30 +328,59 @@ class ExportPipelineSpec extends SparkTestBase {
     assert(res.stages("token_transfers") == StageStatus.Succeeded(1))
   }
 
+  /** A listener that hands `f` the root paths of every file scan in each
+    * finished query's executed plan. */
+  private def onScans(f: Seq[Path] => Unit): QueryExecutionListener =
+    new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        f(collect(qe.executedPlan) { case s: FileSourceScanExec => s.relation.location.rootPaths }.flatten)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+
   test("an export scans each raw CSV exactly once: the census rides the write's shuffle") {
     val raw = minimalRaw()
     val out = Tables.scratchDir("out_scan")
     val scans = new ConcurrentHashMap[String, Integer]()
-    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        foreach(qe.executedPlan) {
-          case s: FileSourceScanExec =>
-            s.relation.location.rootPaths.map(_.getName).filter(_.endsWith(".csv"))
-              .foreach(n => scans.merge(n, 1, (a, b) => a + b))
-          case _ =>
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
+    val lakeScans = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = onScans(_.foreach { p =>
+      if (p.getName.endsWith(".csv")) scans.merge(p.getName, 1, (a, b) => a + b)
+      if (p.toUri.getPath.startsWith(out)) lakeScans.incrementAndGet()
+    })
     GraftBridge.waitListenerBusEmpty(spark)
     spark.listenerManager.register(listener)
     try {
       ExportPipeline.run(spark, PipelineConfig(), raw, out)
       GraftBridge.waitListenerBusEmpty(spark)
     } finally spark.listenerManager.unregister(listener)
-    // downstream stages key from their upstream's lake, never its CSV
+    // downstream stages key from their upstream's checkpointed rows, never
+    // from its CSV or its lake
     assert(scans.asScala.toMap.map { case (k, v) => k -> v.intValue } ==
       Seq("blocks", "transactions", "receipts", "logs", "contracts", "token_transfers", "tokens")
         .map(t => s"$t.csv" -> 1).toMap)
+    assert(lakeScans.get == 0, s"${lakeScans.get} scans under $out")
+  }
+
+  test("a dependent starts on its upstream's rows while the upstream's write is held") {
+    val raw = minimalRaw()
+    val out = Tables.scratchDir("out_gate")
+    val receiptsScanned = new CountDownLatch(1)
+    val listener = onScans(roots => if (roots.exists(_.getName == "receipts.csv")) receiptsScanned.countDown())
+    val cfg = PipelineConfig(maxRetries = 0, stageInterceptor = (name, df) => {
+      // transactions holds its write until a query of receipts' has scanned
+      // receipts.csv; if receipts waited for that write, this would time out
+      if (name == "transactions" && !receiptsScanned.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("receipts did not start while transactions' write was held")
+      // receipts' own write still waits for transactions' to succeed
+      if (name == "receipts" && !new java.io.File(s"$out/transactions/_SUCCESS").exists())
+        throw new IllegalStateException("receipts wrote before transactions' write succeeded")
+      df
+    })
+    GraftBridge.waitListenerBusEmpty(spark)
+    spark.listenerManager.register(listener)
+    val res = try ExportPipeline.run(spark, cfg, raw, out)
+      finally spark.listenerManager.unregister(listener)
+    assert(res.stages.values.forall(_ == StageStatus.Succeeded(1)), res.stages.toString)
+    assert(res.tables("receipts").count() == 1)
   }
 
   test("a non-Exception Throwable in a stage reaches the caller; no stage thread outlives run()") {
@@ -369,9 +399,9 @@ class ExportPipelineSpec extends SparkTestBase {
     caller.start()
     val thrown = intercept[ExecutionException](call.get(3, TimeUnit.MINUTES)).getCause
     assert(thrown eq fatal) // not retried, not wrapped, not a CascadeFailed status
-    // the fatal stage's dependents never ran their bodies
+    // the fatal stage's dependents never wrote
     for (t <- Seq("receipts", "logs", "contracts"))
-      assert(!new java.io.File(s"$out/$t").exists(), s"dependent $t ran after a fatal upstream")
+      assert(!new java.io.File(s"$out/$t").exists(), s"dependent $t wrote after a fatal upstream")
     assert(stageThreads.asScala.filter(_ ne caller).forall(!_.isAlive))
   }
 
@@ -386,15 +416,37 @@ class ExportPipelineSpec extends SparkTestBase {
       new CountDownLatch(1).await(3, TimeUnit.MINUTES) // until interrupted
       df
     })
+    // the jobs the export submits, told apart by a local property of its caller
+    val key = "graft.spec.interrupted"
+    val sc = spark.sparkContext
+    val started = new ConcurrentHashMap[Int, String]() // job id -> its stages' call sites
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null))
+          started.put(e.jobId, e.stageInfos.map(_.name).mkString("; ")): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId): Unit
+    }
+    GraftBridge.waitListenerBusEmpty(spark)
+    sc.addSparkListener(listener)
     val call = new FutureTask[PipelineResult](() => ExportPipeline.run(spark, cfg, raw, out))
-    val caller = new Thread(call)
-    caller.start()
-    val allWaiting = roots.await(2, TimeUnit.MINUTES)
-    caller.interrupt()
-    assert(allWaiting, "the three root stages did not wait at the same time")
-    val thrown = intercept[ExecutionException](call.get(3, TimeUnit.MINUTES)).getCause
+    sc.setLocalProperty(key, "export-under-test")
+    val caller = try new Thread(call) finally sc.setLocalProperty(key, null)
+    val thrown = try {
+      caller.start()
+      val allWaiting = roots.await(2, TimeUnit.MINUTES)
+      caller.interrupt()
+      assert(allWaiting, "the three root stages did not wait at the same time")
+      val t = intercept[ExecutionException](call.get(3, TimeUnit.MINUTES)).getCause
+      GraftBridge.waitListenerBusEmpty(spark)
+      t
+    } finally sc.removeSparkListener(listener)
     assert(thrown.isInstanceOf[InterruptedException])
     assert(stageThreads.size == 3 && stageThreads.asScala.forall(!_.isAlive))
+    // a job a stage submitted before the interrupt must not outlive run()
+    assert(!started.isEmpty)
+    assert(started.keySet.asScala.forall(ended.contains),
+      s"still active: ${started.asScala.filter { case (id, _) => !ended.contains(id) }}")
   }
 
   test("every job a stage submits carries the caller's local properties") {
