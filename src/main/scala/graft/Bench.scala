@@ -1,6 +1,6 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -31,7 +31,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * for the slowest [[BenchReport.LineTopN]] keys, and capped diagnostic
   * lists (see [[BenchReport]], whose spec pins the worst-case line length).
   * The complete per-query record is written to `BENCH_FULL.json` in the
-  * working directory (the repo root under sbt) for offline reading.
+  * working directory (the repo root under sbt) for offline reading, with
+  * each key's pass-1 [[StageRecord]]s under `"stages"`: where its CPU,
+  * shuffle, spill and task skew went, stage by stage.
   */
 object Bench {
   private val SlowGuardSec = 60.0
@@ -49,8 +51,11 @@ object Bench {
 
   /** `BENCH_COUNTS.json` namespace of a run: map-side partitioning, and with
     * it the shuffle records written, depends on the core count. */
-  def countsNamespace(cpus: String, sfDir: String): String =
-    s"c$cpus:${java.nio.file.Paths.get(sfDir).getFileName}"
+  def countsNamespace(cpus: String, sfDir: String): String = s"c$cpus:${sfName(sfDir)}"
+
+  /** The corpus directory's own name, `sf0.01` for `/root/testdata/sf0.01/`. */
+  def sfName(sfDir: String): String =
+    Option(java.nio.file.Paths.get(sfDir).getFileName).fold(sfDir)(_.toString)
 
   /** Every observed counter that differs from its committed value in
     * namespace `ns`. A key with no committed entry there — a new key, or a
@@ -90,23 +95,64 @@ object Bench {
         s"""  "$k": [${c.rows}, ${c.shuffleRecords}, ${c.exchanges}]"""
       }.mkString("{\n", ",\n", "\n}\n").getBytes("UTF-8")): Unit
 
-  /** One measured first call. `counts` is `None` when the call failed or
-    * the listener bus did not drain, so the counters may be partial. */
-  final case class Call(wallSec: Double, cpuSec: Double, shuffleBytes: Long,
-                        failure: Option[Throwable], counts: Option[Counts])
+  /** One Spark stage's part of a call, summed over its task ends: CPU is
+    * executor CPU plus deserialize CPU, spill is memory plus disk, and the
+    * task durations are launch to finish. `name` is the first line of the
+    * stage's name, at most 90 chars. */
+  final case class StageRecord(id: Int, name: String, tasks: Int, cpuNanos: Long, runMs: Long,
+                               maxTaskMs: Long, medianTaskMs: Long, shuffleReadRecords: Long,
+                               shuffleWriteRecords: Long, shuffleWriteBytes: Long, spillBytes: Long) {
+    def json: String =
+      s"[$id,${BenchReport.quote(name)},$tasks,${f"${cpuNanos / 1e6}%.3f"},$runMs,$maxTaskMs," +
+        s"$medianTaskMs,$shuffleReadRecords,$shuffleWriteRecords,$shuffleWriteBytes,$spillBytes]"
+  }
+  object StageRecord {
+    /** The names of [[StageRecord.json]]'s array fields, in order. */
+    val Fields: Seq[String] = Seq("id", "name", "tasks", "cpu_ms", "run_ms", "task_max_ms",
+      "task_median_ms", "shuffle_read_records", "shuffle_write_records", "shuffle_write_bytes",
+      "spill_bytes")
+  }
 
-  /** Meters a session: executor CPU and shuffle writes summed from every
-    * task end, exchange nodes counted in every action's executed plan
-    * (subqueries and AQE query stages included). */
+  /** One measured first call. Its CPU and shuffle bytes are the sums over
+    * every stage it ran. `counts` is `None` when the call failed or the
+    * listener bus did not drain, so the counters may be partial; such a
+    * call records no `stages` either. */
+  final case class Call(wallSec: Double, cpuSec: Double, shuffleBytes: Long,
+                        failure: Option[Throwable], counts: Option[Counts], stages: Seq[StageRecord])
+
+  /** Meters a session: every task end summed into its stage's record,
+    * exchange nodes counted in every action's executed plan (subqueries and
+    * AQE query stages included). */
   final class Meter(spark: SparkSession) extends AutoCloseable {
-    private val cpuNanos, shuffleRecords, shuffleBytes, exchanges = new AtomicLong
+    private val exchanges = new AtomicLong
+    // the listener bus fills it, firstCall resets and reads it; both hold its lock
+    private val stages = scala.collection.mutable.HashMap[Int, Tally]()
+    private final class Tally(id: Int) {
+      var name = ""
+      var cpuNanos, runMs, readRecords, writeRecords, writeBytes, spill = 0L
+      val taskMs = scala.collection.mutable.ArrayBuffer[Long]()
+      def record: StageRecord = {
+        val ms = taskMs.sorted
+        StageRecord(id, name, ms.size, cpuNanos, runMs, ms.lastOption.getOrElse(0L),
+          if (ms.isEmpty) 0L else ms((ms.size - 1) / 2), readRecords, writeRecords, writeBytes, spill)
+      }
+    }
+    private def tally(stageId: Int): Tally = stages.getOrElseUpdate(stageId, new Tally(stageId))
     private val tasks = new SparkListener {
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = stages.synchronized {
+        tally(ss.stageInfo.stageId).name = ss.stageInfo.name.takeWhile(_ != '\n').take(90)
+      }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
-        if (m != null) {
-          cpuNanos.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime)
-          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
+        if (m != null) stages.synchronized {
+          val t = tally(te.stageId)
+          t.cpuNanos += m.executorCpuTime + m.executorDeserializeCpuTime
+          t.runMs += m.executorRunTime
+          t.taskMs += te.taskInfo.duration
+          t.readRecords += m.shuffleReadMetrics.recordsRead
+          t.writeRecords += m.shuffleWriteMetrics.recordsWritten
+          t.writeBytes += m.shuffleWriteMetrics.bytesWritten
+          t.spill += m.memoryBytesSpilled + m.diskBytesSpilled
         }
       }
     }
@@ -135,15 +181,17 @@ object Bench {
     def firstCall(fn: (SparkSession, String) => DataFrame, sfDir: String): Call = {
       spark.catalog.clearCache()
       val before = drained()
-      val (cpu0, rec0, bytes0, exch0) =
-        (cpuNanos.get, shuffleRecords.get, shuffleBytes.get, exchanges.get)
+      val exch0 = exchanges.get
+      stages.synchronized(stages.clear())
       val t0 = System.nanoTime()
       val rows = try Right(fn(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
       val wallSec = (System.nanoTime() - t0) / 1e9
       val after = drained()
-      Call(wallSec, (cpuNanos.get - cpu0) / 1e9, shuffleBytes.get - bytes0, rows.left.toOption,
-        rows.toOption.filter(_ => before && after)
-          .map(Counts(_, shuffleRecords.get - rec0, exchanges.get - exch0)))
+      val records = stages.synchronized(stages.values.map(_.record).toVector).sortBy(_.id)
+      val counts = rows.toOption.filter(_ => before && after)
+        .map(Counts(_, records.map(_.shuffleWriteRecords).sum, exchanges.get - exch0))
+      Call(wallSec, records.map(_.cpuNanos).sum / 1e9, records.map(_.shuffleWriteBytes).sum,
+        rows.left.toOption, counts, if (counts.isDefined) records else Nil)
     }
   }
 
@@ -301,6 +349,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val bytesJson = calls.toSeq.map { case (k, cs) => s""""$k":${cs.head.shuffleBytes}""" }
       .mkString("{", ",", "}")
+    // pass-1 stage records, the call whose counters were checked: one array
+    // per stage, its field names listed once
+    val stagesJson = s"""{"fields":${arr(StageRecord.Fields)},"by_key":""" +
+      calls.toSeq.map { case (k, cs) => s""""$k":${cs.head.stages.map(_.json).mkString("[", ",", "]")}""" }
+        .mkString("{", ",", "}}")
     // Subset runs (key args or excludes) must not clobber the committed
     // full-suite record.
     val benchOut = if (fullSuite) "BENCH_FULL.json" else "BENCH_SUBSET.json"
@@ -313,7 +366,8 @@ object Bench {
         s""""count_changed":${arr(countChanged)},""" +
         s""""queries":${bySlowest.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")},""" +
         s""""queries_cpu":${bySlowest.map { case (k, _) => s""""$k":${fmt(cpuByKey(k))}""" }.mkString("{", ",", "}")},""" +
-        s""""counts":$countsJson,"shuffle_bytes":$bytesJson,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
+        s""""counts":$countsJson,"shuffle_bytes":$bytesJson,"stages":$stagesJson,""" +
+        s""""sf":${BenchReport.quote(sfDir)}}""" + "\n").getBytes("UTF-8"))
     // Guardrail: a degenerate operator must never hide inside a green round.
     val slow = bySlowest.takeWhile(_._2 > SlowGuardSec)
     slow.foreach { case (k, v) =>

@@ -21,9 +21,15 @@ object BenchReport {
   val FailedCap = 4
   val ExcludedCap = 3
   val SlowCap = 2
+  /** Characters of the corpus directory's name kept in the line. */
+  val SfNameCap = 40
   /** Spec'd ceiling: the driver's capture is 2,000 chars; the line plus its
     * newline must always fit with margin. */
   val MaxLineChars = 1800
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** `s` as a JSON string literal, quotes and control chars escaped. */
+  def quote(s: String): String = json.writeValueAsString(s)
 
   private def fmt(v: Double): String = f"$v%.3f"
   private def kv(m: Seq[(String, Double)]): String =
@@ -34,8 +40,9 @@ object BenchReport {
   /** The one line the driver parses. `queriesBySlowest` is the full
     * (key → first-call wall median) seq sorted slowest-first; `cpuByKey` the
     * CPU medians; `countChanged` the keys whose counters differ from the
-    * committed record. All caps applied here so no caller can regrow the
-    * line. */
+    * committed record; `sf` the corpus directory, of which the line carries
+    * only the name, as `BENCH_COUNTS.json`'s namespace does. All caps
+    * applied here so no caller can regrow the line. */
   def finalLine(
       total: Double, nQueries: Int, reps: Int, cpuTotal: Double,
       stealPctJson: String, contended: Boolean, countChanged: Seq[String],
@@ -52,6 +59,7 @@ object BenchReport {
       s""""n_failed":${failed.size},"failed":${arr(failed.sorted.take(FailedCap))},""" +
       s""""n_excluded":${excluded.size},"excluded":${arr(excluded.sorted.take(ExcludedCap))},""" +
       s""""slow_over_60s":${arr(slowOver60s.take(SlowCap))},""" +
-      s""""queries":${kv(top)},"queries_cpu":${kv(topCpu)},"sf":"$sf"}"""
+      s""""queries":${kv(top)},"queries_cpu":${kv(topCpu)},""" +
+      s""""sf":${quote(Bench.sfName(sf).take(SfNameCap))}}"""
   }
 }

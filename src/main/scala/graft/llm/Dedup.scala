@@ -1185,21 +1185,31 @@ object Dedup {
     * exact-only form of this closure. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    // exact-dup star edges: each non-min doc points at its group min. The
-    // shuffle carries (doc_id, sha256 digest) — the content fingerprint
-    // dedup_exact persists — never the text itself (null text never equals
-    // anything, matching the oracle's SQL equality join).
+    val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
+    // eager closure; its labels come back locally checkpointed
+    val cc = connectedComponents(spark, docs.select("doc_id"),
+      exactDupEdges(docs).unionByName(nearEdges))
+    clusterTable(cc)
+  }
+
+  /** Exact-dup star edges: each non-min doc points at its group min. The
+    * shuffle carries (doc_id, sha256 digest) — the content fingerprint
+    * dedup_exact persists — never the text itself (null text never equals
+    * anything, matching the oracle's SQL equality join). */
+  private def exactDupEdges(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("dg")
-    val exactEdges = docs
+    docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"), sha2(col("text"), 256).as("dg"))
       .select(col("doc_id"), min(col("doc_id")).over(w).as("m"))
       .filter(col("doc_id") =!= col("m"))
       .select(col("doc_id").as("doc_a"), col("m").as("doc_b"))
-    val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
-    // eager closure; its labels come back locally checkpointed
-    val cc = connectedComponents(spark, docs.select("doc_id"),
-      exactEdges.unionByName(nearEdges))
+  }
+
+  /** The cluster table of components `cc` (`doc_id`, `cluster_id`): every
+    * document with its cluster id, the cluster's size, and whether it is
+    * the cluster's canonical survivor (its min doc_id), by doc_id. */
+  private[llm] def clusterTable(cc: DataFrame): DataFrame = {
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1303,11 +1313,7 @@ object Dedup {
       .distinct()
     val cc = connectedComponents(spark, docs.select("doc_id"),
       stars.unionByName(incPairs).unionByName(exactNew))
-    val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    cc.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy("doc_id")
+    clusterTable(cc)
   }
 
   /** `dedup_clusters_star` — the same cluster resolution as
@@ -1321,21 +1327,10 @@ object Dedup {
     * reject). Identical output contract and oracle as `dedup_clusters`. */
   def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("dg")
-    val exactEdges = docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), sha2(col("text"), 256).as("dg"))
-      .select(col("doc_id"), min(col("doc_id")).over(w).as("m"))
-      .filter(col("doc_id") =!= col("m"))
-      .select(col("doc_id").as("doc_a"), col("m").as("doc_b"))
     val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
     val cc = connectedComponentsLogStar(spark, docs.select("doc_id"),
-      exactEdges.unionByName(nearEdges))
-    val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    cc.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy("doc_id")
+      exactDupEdges(docs).unionByName(nearEdges))
+    clusterTable(cc)
   }
 
   /** Connected components by alternating large-star / small-star edge

@@ -413,13 +413,8 @@ object Multimodal {
     * diameter. */
   def multimodalDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val cc = Dedup.connectedComponentsLogStar(spark, docs.select("doc_id"),
-      nearDupPairs(spark, dir).select("doc_a", "doc_b"))
-    val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    cc.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy("doc_id")
+    Dedup.clusterTable(Dedup.connectedComponentsLogStar(spark, docs.select("doc_id"),
+      nearDupPairs(spark, dir).select("doc_a", "doc_b")))
   }
 
   /** `multimodal_frames` — the video-shaped path end-to-end with a REAL

@@ -487,18 +487,13 @@ object Similarity {
     cents
   }
 
-  /** Executor-side nearest-centroid argmin. Fails loudly on ragged vectors,
+  /** Executor-side nearest-centroid argmin over a primitive array — the
+    * hot trainer loop. A Seq[Double] here boxes every element access: ~600 s
+    * vs seconds at the 100× probe's k=447 (r13). Same fold and strict-<
+    * tie-break as every other cell kernel. Fails loudly on ragged vectors,
     * like the zip_with DataFrame paths (where a short vector null-poisons
     * the score): a partial distance computed over a truncated prefix would
     * silently mis-assign. */
-  private[graft] def nearestCell(v: Seq[Double], cs: Array[Array[Double]],
-                                 dim: Int): Int =
-    nearestCellArr(v.toArray, cs, dim)
-
-  /** Primitive-array argmin — the hot trainer loop. A Seq[Double] here
-    * boxes every element access: ~600 s vs seconds at the 100× probe's
-    * k=447 (r13). Same fold and strict-< tie-break as every other cell
-    * kernel. */
   private[graft] def nearestCellArr(v: Array[Double], cs: Array[Array[Double]],
                                     dim: Int): Int = {
     require(v.length == dim, s"ragged embedding: length ${v.length}, expected $dim")

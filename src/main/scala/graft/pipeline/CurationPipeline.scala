@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,7 +49,6 @@ object CurationPipeline {
   def run(spark: SparkSession, cfg: PipelineConfig, dir: String,
           outDir: String): PipelineResult = {
     val runner = new StageRunner(spark, cfg.maxRetries)
-    val out = TrieMap.empty[String, DataFrame]
 
     // Writes the staging inside the stage's body and publishes it read
     // back, so a dependent starts only after its upstream's write.
@@ -61,8 +58,7 @@ object CurationPipeline {
       // read back with the explicit schema: an empty survivor set writes no
       // data files and schema inference over zero files fails
       val back = spark.read.schema(staged.schema).parquet(s"$outDir/$name")
-      out(name) = back
-      StageRunner.Step(back)
+      StageRunner.Step(back, () => back)
     }
 
     val tk = split(col("text"), " ")
@@ -106,8 +102,7 @@ object CurationPipeline {
           coalesce(col("text_cut"), lit("")).as("text_cut")))
     }
 
-    val stages = runner.run() // before out.toMap: the stages fill `out`
-    PipelineResult(out.toMap, stages)
+    runner.run()
   }
 
   /** `llm_corpus_pipeline_staged` — the staged DAG as a query key: run the

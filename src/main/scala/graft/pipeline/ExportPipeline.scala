@@ -3,7 +3,6 @@ package graft.pipeline
 import java.util.UUID
 import java.util.concurrent.CountDownLatch
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ListMap
 import scala.concurrent.Await
 import scala.concurrent.duration._
@@ -55,10 +54,9 @@ final case class PipelineConfig(
     exportContracts: Boolean = true,
     exportTokenTransfers: Boolean = true,
     exportTokens: Boolean = true,
-    batchSize: Long = 1000L,
     // Optional non-uniform partition layout: block number → (start, end)
-    // bounds of its partition. None = uniform batchSize buckets. Used to
-    // reproduce the reference's skew-aware 131-partition plan
+    // bounds of its partition. None = uniform buckets of 1000 blocks. Used
+    // to reproduce the reference's skew-aware 131-partition plan
     // (config.py:10-14) exactly; see [[ExportPipeline.referenceBounds]].
     partitionBounds: Option[Column => (Column, Column)] = None,
     // Per-stage retry budget, the reference's maximumRetries=5
@@ -149,6 +147,7 @@ private[pipeline] final class StageRunner(spark: SparkSession, maxRetries: Int) 
     val published = new CountDownLatch(1)
     // written by the stage's own thread; read by others only after join()
     var status = Option.empty[StageStatus]
+    var table = Option.empty[DataFrame] // once its write has succeeded
     var fatal = Option.empty[Throwable]
   }
   private val stages = scala.collection.mutable.ArrayBuffer[Stage]()
@@ -161,13 +160,14 @@ private[pipeline] final class StageRunner(spark: SparkSession, maxRetries: Int) 
     stages += new Stage(name, upstreams.map(u => stages.find(_.name == u).getOrElse(
       throw new IllegalArgumentException(s"stage '$name': upstream '$u' is not declared"))), body)
 
-  /** Run every declared stage and return when all have ended. If the
+  /** Run every declared stage and return when all have ended, with each
+    * stage's status and the table of each stage whose write succeeded. If the
     * caller is interrupted meanwhile, the interrupt is passed on to every
     * stage thread, no stage retries, and the interrupt is rethrown once the
     * threads have ended and the scheduler has cancelled every job they
     * submitted: a thread interrupted while it waits for a job leaves that
     * job running. */
-  def run(): Map[String, StageStatus] = {
+  def run(): PipelineResult = {
     // Constructed on the calling thread, so each stage thread inherits the
     // caller's Spark local properties (job group, scheduler pool, ...),
     // which Spark then copies onto every job the stage submits.
@@ -189,31 +189,32 @@ private[pipeline] final class StageRunner(spark: SparkSession, maxRetries: Int) 
         throw e
     }
     stages.flatMap(_.fatal).headOption.foreach(throw _)
-    ListMap(stages.toSeq.map(s => s.name -> s.status.get): _*)
+    PipelineResult(stages.flatMap(s => s.table.map(s.name -> _)).toMap,
+      ListMap(stages.toSeq.map(s => s.name -> s.status.get): _*))
   }
 
   private def execute(s: Stage): Unit = try {
     spark.sparkContext.addJobTag(jobTag) // to this thread's copy of the caller's properties
     s.upstreams.foreach(_.published.await())
-    val (attempts, written, lastErr) =
-      if (s.upstreams.forall(_.output.isDefined)) attempt(s) else (0, false, "")
+    val (attempts, lastErr) =
+      if (s.upstreams.forall(_.output.isDefined)) attempt(s) else (0, "")
     s.upstreams.foreach(_.thread.join())
     // an upstream without a status ended on a Throwable that is not an
     // Exception, or skipped because one of its own did: run() rethrows it
     if (s.upstreams.forall(_.status.isDefined))
       s.status = Some(s.upstreams.find(!_.status.get.isInstanceOf[StageStatus.Succeeded]) match {
-        case Some(bad)       => StageStatus.CascadeFailed(bad.name)
-        case None if written => StageStatus.Succeeded(attempts)
-        case None            => StageStatus.Failed(attempts, lastErr)
+        case Some(bad)                 => StageStatus.CascadeFailed(bad.name)
+        case None if s.table.isDefined => StageStatus.Succeeded(attempts)
+        case None                      => StageStatus.Failed(attempts, lastErr)
       })
   } catch {
     case t: Throwable => s.fatal = Some(t)
   } finally s.published.countDown()
 
   /** Attempt `s`'s step until it is written, its budget is spent, an
-    * upstream has failed, or the run stops. Returns the attempts made,
-    * whether the write succeeded and the last error. */
-  private def attempt(s: Stage): (Int, Boolean, String) = {
+    * upstream has failed, or the run stops. Sets `s.table` when the write
+    * succeeds; returns the attempts made and the last error. */
+  private def attempt(s: Stage): (Int, String) = {
     val inputs = s.upstreams.map(u => u.name -> u.output.get).toMap
     def upstreamsWritten = {
       s.upstreams.foreach(_.thread.join())
@@ -221,8 +222,8 @@ private[pipeline] final class StageRunner(spark: SparkSession, maxRetries: Int) 
     }
     var attempts = 0
     var lastErr = ""
-    var written = Option.empty[Boolean] // set once no further attempt is due
-    while (written.isEmpty && attempts <= maxRetries && !stopping) {
+    var done = false // set once no further attempt is due
+    while (!done && attempts <= maxRetries && !stopping) {
       attempts += 1
       try {
         val step = s.body(inputs)
@@ -230,21 +231,22 @@ private[pipeline] final class StageRunner(spark: SparkSession, maxRetries: Int) 
           s.output = Some(step.output)
           s.published.countDown()
         }
-        written = Some(upstreamsWritten && { step.write(); true })
+        if (upstreamsWritten) s.table = Some(step.write())
+        done = true
       } catch {
         case e: Exception =>
           lastErr = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
       }
     }
-    (attempts, written.contains(true), lastErr)
+    (attempts, lastErr)
   }
 }
 
 private[pipeline] object StageRunner {
   /** One attempt's result: `output`, which the stage's dependents start
-    * on, and `write`, which runs once every upstream's write has
-    * succeeded. */
-  final case class Step(output: DataFrame, write: () => Unit = () => ())
+    * on, and `write`, which runs once every upstream's write has succeeded
+    * and returns the stage's table. */
+  final case class Step(output: DataFrame, write: () => DataFrame)
 }
 
 object ExportPipeline {
@@ -356,12 +358,11 @@ object ExportPipeline {
     * key each downstream stage from its upstream's checkpointed rows, and
     * return the written tables keyed by name. */
   def run(spark: SparkSession, cfg: PipelineConfig, rawDir: String, outDir: String): PipelineResult = {
-    val out = TrieMap.empty[String, DataFrame]
     val runner = new StageRunner(spark, cfg.maxRetries)
-    val bucket = (c: String) => (col(c) / cfg.batchSize).cast(LongType) * cfg.batchSize
+    val bucket = (c: String) => (col(c) / 1000L).cast(LongType) * 1000L
     val bounds = (c: String) => cfg.partitionBounds match {
       case Some(f) => f(col(c))
-      case None    => (bucket(c), bucket(c) + (cfg.batchSize - 1))
+      case None    => (bucket(c), bucket(c) + 999L)
     }
 
     // Checkpoints the stage's rows and takes their census; the dependents
@@ -376,15 +377,14 @@ object ExportPipeline {
       val staged = EtlOps.stageRanges(df, startB, endB)
       StageRunner.Step(staged.rows, () => {
         val path = s"$outDir/$name"
-        val written = staged.write(path, "parquet", cfg.stageInterceptor(name, _))
-        out(name) = EtlOps.readPartitioned(spark, path, "parquet", written)
+        EtlOps.readPartitioned(spark, path, "parquet",
+          staged.write(path, "parquet", cfg.stageInterceptor(name, _)))
       })
     }
 
     for (t <- included(cfg))
       runner.stage(t.name, t.upstreams: _*)(up => finish(t.name, t.body(t.read(spark, rawDir), up), t.blockCol))
-    val stages = runner.run() // before out.toMap: the stages fill `out`
-    PipelineResult(out.toMap, stages)
+    runner.run()
   }
 
   /** A13's literal output, Spark-natively: the deployable DAG artifact a

@@ -77,4 +77,41 @@ class BenchCountsSpec extends SparkTestBase {
       }
     } finally meter.close()
   }
+
+  test("a call's stage records sum to its CPU and shuffle-write counters") {
+    // an independent tally of the same task ends, as the meter kept it
+    // before it grouped them by stage
+    val cpuNanos, writeRecords = new java.util.concurrent.atomic.AtomicLong
+    val tally = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach { m =>
+          cpuNanos.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime)
+          writeRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        }
+    }
+    val meter = new Bench.Meter(spark)
+    spark.sparkContext.addSparkListener(tally)
+    try {
+      Seq("etl_gap_detect", "text_bigram_logprob", "agg_heavy_hitters").foreach { key =>
+        cpuNanos.set(0); writeRecords.set(0)
+        val call = meter.firstCall(SparkEntry.queries(key), sf) // drains the bus before it returns
+        val stages = call.stages
+        assert(call.counts.isDefined && stages.nonEmpty, key)
+        assert(stages.map(_.id).distinct == stages.map(_.id), key)
+        assert(stages.forall(s => s.name.nonEmpty && s.tasks > 0 && s.medianTaskMs <= s.maxTaskMs), s"$key: $stages")
+        assert(stages.map(_.cpuNanos).sum / 1e9 == call.cpuSec, key)
+        assert(stages.map(_.cpuNanos).sum == cpuNanos.get, key)
+        assert(stages.map(_.shuffleWriteRecords).sum == call.counts.get.shuffleRecords, key)
+        assert(stages.map(_.shuffleWriteRecords).sum == writeRecords.get, key)
+        assert(stages.map(_.shuffleWriteBytes).sum == call.shuffleBytes, key)
+      }
+      // a failed call records no stages, as its counts are unknown
+      val failed = meter.firstCall((s, _) => { s.range(10).count(); sys.error("boom") }, sf)
+      assert(failed.failure.isDefined && failed.counts.isEmpty && failed.stages.isEmpty)
+      assert(failed.cpuSec > 0)
+    } finally {
+      spark.sparkContext.removeSparkListener(tally)
+      meter.close()
+    }
+  }
 }

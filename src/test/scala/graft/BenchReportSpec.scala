@@ -12,6 +12,8 @@ class BenchReportSpec extends AnyFunSuite {
 
   // The longest declared key name bounds per-entry width in the maps.
   private val longest = SparkEntry.queries.keys.maxBy(_.length)
+  // a 500-char corpus path whose directory name is long and holds quotes
+  private val longSf = ("/deep" * 58 + "/" + "sf\"0.1_" * 30).take(500)
 
   private def worstCaseLine(nKeys: Int): String = {
     val keys = (0 until nKeys).map(i => f"${longest}_$i%03d")
@@ -22,7 +24,7 @@ class BenchReportSpec extends AnyFunSuite {
       failed = keys, excluded = keys, slowOver60s = keys,
       queriesBySlowest = slowFirst,
       cpuByKey = slowFirst.toMap,
-      sf = "/root/testdata/sf0.1")
+      sf = longSf)
   }
 
   test("a maximally-populated 206-key line stays under the driver's tail capture") {
@@ -40,7 +42,9 @@ class BenchReportSpec extends AnyFunSuite {
     assert(node.get("metric").asText() == "total")
     assert(node.get("unit").asText() == "sec")
     assert(node.get("value").isNumber)
-    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    assert(longSf.length == 500)
+    assert(node.get("sf").asText() == Bench.sfName(longSf).take(BenchReport.SfNameCap))
+    assert(node.get("sf").asText().contains("\""))
     assert(node.get("queries").size() == BenchReport.LineTopN)
     assert(node.get("queries_cpu").size() == BenchReport.LineTopN)
     // capped lists carry their true sizes alongside
@@ -65,5 +69,6 @@ class BenchReportSpec extends AnyFunSuite {
     assert(line.length <= 1400, s"healthy line is ${line.length} chars")
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(node.get("n_queries").asInt() == keys.size)
+    assert(node.get("sf").asText() == "sf0.1")
   }
 }
