@@ -1,10 +1,12 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark entry point. Runs every (or a selected subset of)
@@ -41,6 +43,9 @@ object Bench {
     * `contended`: its times then carry host load, its counters do not. */
   private val ContendedStealPct = 5.0
   private val CountsFile = "BENCH_COUNTS.json"
+  /** The call-site prefix Spark gives a stage that AQE submits from its
+    * pool thread. */
+  private val PoolThreadSite = "$anonfun$withThreadLocalCaptured$"
 
   /** A key's structural counters from one first call. */
   final case class Counts(rows: Long, shuffleRecords: Long, exchanges: Long) {
@@ -98,7 +103,9 @@ object Bench {
   /** One Spark stage's part of a call, summed over its task ends: CPU is
     * executor CPU plus deserialize CPU, spill is memory plus disk, and the
     * task durations are launch to finish. `name` is the first line of the
-    * stage's name, at most 90 chars. */
+    * stage's name, at most 90 chars; a stage AQE submitted from its pool
+    * thread, whose name is Spark's own call site, takes the description of
+    * the SQL execution it ran for instead. */
   final case class StageRecord(id: Int, name: String, tasks: Int, cpuNanos: Long, runMs: Long,
                                maxTaskMs: Long, medianTaskMs: Long, shuffleReadRecords: Long,
                                shuffleWriteRecords: Long, shuffleWriteBytes: Long, spillBytes: Long) {
@@ -116,9 +123,13 @@ object Bench {
   /** One measured first call. Its CPU and shuffle bytes are the sums over
     * every stage it ran. `counts` is `None` when the call failed or the
     * listener bus did not drain, so the counters may be partial; such a
-    * call records no `stages` either. */
+    * call records no `stages` either. `compiles` is the number of generated
+    * classes the JVM compiled during the call, whoever compiled them: it
+    * depends on what the code cache already holds, so it is recorded,
+    * never compared. */
   final case class Call(wallSec: Double, cpuSec: Double, shuffleBytes: Long,
-                        failure: Option[Throwable], counts: Option[Counts], stages: Seq[StageRecord])
+                        failure: Option[Throwable], counts: Option[Counts], stages: Seq[StageRecord],
+                        compiles: Long)
 
   /** Meters a session: every task end summed into its stage's record,
     * exchange nodes counted in every action's executed plan (subqueries and
@@ -138,9 +149,22 @@ object Bench {
       }
     }
     private def tally(stageId: Int): Tally = stages.getOrElseUpdate(stageId, new Tally(stageId))
+    // SQL execution id -> its description (the action's call site); under
+    // the stages lock and reset with them
+    private val executions = scala.collection.mutable.HashMap[Long, String]()
     private val tasks = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          stages.synchronized(executions(s.executionId) = s.description)
+        case _ =>
+      }
       override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = stages.synchronized {
-        tally(ss.stageInfo.stageId).name = ss.stageInfo.name.takeWhile(_ != '\n').take(90)
+        val site = ss.stageInfo.name
+        val execution = Option(ss.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => executions.get(id.toLong))
+        val name = execution.filter(_ => site.startsWith(PoolThreadSite)).getOrElse(site)
+        tally(ss.stageInfo.stageId).name = name.takeWhile(_ != '\n').take(90)
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
@@ -182,16 +206,18 @@ object Bench {
       spark.catalog.clearCache()
       val before = drained()
       val exch0 = exchanges.get
-      stages.synchronized(stages.clear())
+      stages.synchronized { stages.clear(); executions.clear() }
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val rows = try Right(fn(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
       val wallSec = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       val after = drained()
       val records = stages.synchronized(stages.values.map(_.record).toVector).sortBy(_.id)
       val counts = rows.toOption.filter(_ => before && after)
         .map(Counts(_, records.map(_.shuffleWriteRecords).sum, exchanges.get - exch0))
       Call(wallSec, records.map(_.cpuNanos).sum / 1e9, records.map(_.shuffleWriteBytes).sum,
-        rows.left.toOption, counts, if (counts.isDefined) records else Nil)
+        rows.left.toOption, counts, if (counts.isDefined) records else Nil, compiles)
     }
   }
 
@@ -349,6 +375,10 @@ object Bench {
     }.mkString("{", ",", "}")
     val bytesJson = calls.toSeq.map { case (k, cs) => s""""$k":${cs.head.shuffleBytes}""" }
       .mkString("{", ",", "}")
+    // every pass's compile count: pass 1 is the first touch, later passes
+    // show what the code cache kept
+    val compilesJson = calls.toSeq.map { case (k, cs) => s""""$k":${cs.map(_.compiles).mkString("[", ",", "]")}""" }
+      .mkString("{", ",", "}")
     // pass-1 stage records, the call whose counters were checked: one array
     // per stage, its field names listed once
     val stagesJson = s"""{"fields":${arr(StageRecord.Fields)},"by_key":""" +
@@ -366,7 +396,8 @@ object Bench {
         s""""count_changed":${arr(countChanged)},""" +
         s""""queries":${bySlowest.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")},""" +
         s""""queries_cpu":${bySlowest.map { case (k, _) => s""""$k":${fmt(cpuByKey(k))}""" }.mkString("{", ",", "}")},""" +
-        s""""counts":$countsJson,"shuffle_bytes":$bytesJson,"stages":$stagesJson,""" +
+        s""""counts":$countsJson,"shuffle_bytes":$bytesJson,"compiles":$compilesJson,""" +
+        s""""stages":$stagesJson,""" +
         s""""sf":${BenchReport.quote(sfDir)}}""" + "\n").getBytes("UTF-8"))
     // Guardrail: a degenerate operator must never hide inside a green round.
     val slow = bySlowest.takeWhile(_._2 > SlowGuardSec)

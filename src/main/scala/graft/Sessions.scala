@@ -30,4 +30,30 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  // parent -> (confs -> child); weak on the parent, so a dropped parent
+  // takes its children with it
+  private val children =
+    new java.util.WeakHashMap[SparkSession, java.util.HashMap[Map[String, String], SparkSession]]()
+
+  /** The child session of `parent` that carries `confs`, built on the first
+    * call for this (parent, confs) and returned on every later one. A child
+    * shares the parent's SparkContext and cache and has its own SQL conf, so
+    * a plan that needs other thresholds runs there without touching the
+    * parent's conf. Reuse matters because each session's tasks run under
+    * their own executor class loader, and Spark's compiled-code cache is
+    * keyed by loader: a fresh child per call recompiles every generated
+    * class of its plan. The child holds no data and no plan of its own,
+    * only its session state and its file-status cache. */
+  def child(parent: SparkSession, confs: (String, String)*): SparkSession = {
+    val key = confs.toMap
+    children.synchronized {
+      children.computeIfAbsent(parent, _ => new java.util.HashMap())
+        .computeIfAbsent(key, _ => {
+          val s = parent.newSession()
+          key.foreach { case (k, v) => s.conf.set(k, v) }
+          s
+        })
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.types._
 
 /** Loaders for the testdata tables (TPC-H-ish star schema plus
@@ -14,6 +15,14 @@ object Tables {
   /** Read one testdata table from an sf directory. Parquet scan is Spark's
     * vectorized columnar reader; column pruning + predicate pushdown apply.
     *
+    * A table's schema comes from its parquet footer (its one file's, or
+    * the first data file's of a directory a Spark write made), read on the
+    * driver and converted by Spark's own footer reader
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge]]):
+    * building the frame submits no Spark job, where schema inference submits
+    * one per read. The schema equals the inferred one, nullability and
+    * metadata included.
+    *
     * events.ts has shipped as both TIMESTAMP(MICROS) and TIMESTAMP(NANOS)
     * across driver testdata generations. Spark refuses nanos by default, so
     * when the footer says nanos, read them as long (legacy conf) and truncate
@@ -25,18 +34,20 @@ object Tables {
     * every session here pins spark.sql.session.timeZone=UTC, so the cast is
     * value-identical and keeps unix_micros()/window() call sites — which
     * require the LTZ type — working across testdata generations. */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
-      df.schema("ts").dataType match {
-        case LongType =>
-          df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType =>
-          df.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast(TimestampType))
-        case _ => df
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    // set before the footer is converted: the converter reads it
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = spark.read.schema(GraftParquetBridge.footerSchema(spark, path)).parquet(path)
+    if (name != "events") df
+    else df.schema("ts").dataType match {
+      case LongType =>
+        df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType =>
+        df.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast(TimestampType))
+      case _ => df
+    }
+  }
 
   val testTables: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -323,22 +323,19 @@ object Dedup {
     // levenshtein filter down to the earliest stage that has both texts, so
     // the join-2 stage — which inherits the explicit width — is where the
     // O(len²) DP runs (originally a 31 s one-task stage at 10× sf0.1).
-    // BOUNDED levenshtein: the per-pair acceptance bound is maxlen/4, so a
-    // corpus-global threshold of (global max len)/4 is conservative — any
-    // pair it rejects (-1) would fail its own row bound too — and turns
-    // the O(len²) DP into a banded O(threshold·len) pass with early exit.
-    // One scalar corpus-stats job, like tfidf's N. The -1 sentinel must be
-    // excluded EXPLICITLY: -1 <= rowBound is true.
-    val globalThr = docs.agg(max(length(col("text")))).head().getInt(0) / 4
+    // BOUNDED levenshtein: the threshold is the pair's own acceptance
+    // bound maxlen/4, which turns the O(len²) DP into a banded
+    // O(bound·len) pass with early exit. A pair over its bound reads -1,
+    // so `>= 0` is the whole acceptance test. floor on both engines:
+    // DuckDB CAST(double AS BIGINT) rounds-to-nearest while Spark's
+    // truncates, so a bare /4 cast would disagree.
+    val bound = floor(greatest(length(col("text_a")), length(col("text_b"))) / 4)
     cpuStageRepartition(candidates.join(a, "doc_a"), col("doc_b"))
       .join(b, "doc_b")
       .filter(abs(length(col("text_a")) - length(col("text_b"))) <= 64)
-      .withColumn("edit_dist",
-        levenshtein(col("text_a"), col("text_b"), globalThr).cast(LongType))
-      // floor on both engines: DuckDB CAST(double AS BIGINT) rounds-to-
-      // nearest while Spark's truncates, so a bare /4 cast would disagree
-      .filter(col("edit_dist") >= 0 && col("edit_dist") <=
-        floor(greatest(length(col("text_a")), length(col("text_b"))) / 4))
+      .withColumn("edit_dist", call_function("levenshtein",
+        col("text_a"), col("text_b"), bound.cast(IntegerType)).cast(LongType))
+      .filter(col("edit_dist") >= 0)
       .select("doc_a", "doc_b", "edit_dist")
       .orderBy("doc_a", "doc_b")
   }

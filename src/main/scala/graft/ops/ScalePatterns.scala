@@ -90,9 +90,9 @@ object ScalePatterns {
     * side size gate 0, broadcast off to model a fact⋈fact shuffle join)
     * can't leak into other queries' plans. */
   private[ops] def bloomJoinPlan(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = graft.Sessions.child(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     t(s, dir, "lineitem")
       .join(t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
         col("l_orderkey") === col("o_orderkey"))
@@ -244,11 +244,11 @@ object ScalePatterns {
     * handling applies to. Thresholds live HERE, not in global conf, so no
     * other key's plan changes. */
   private[ops] def skewJoinPlan(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2KB")
+    val s = graft.Sessions.child(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB")
     // A skewed reduce partition can only be SPLIT along map-output
     // boundaries — and the tiny test file scans as ONE map task, which
     // would make the hot partition unsplittable. The round-robin

@@ -389,13 +389,12 @@ object StreamOps {
       // width must be baked into a materialized result, not a memoized
       // plan. The input is < ~128 MB here by the gate above, so an eager
       // localCheckpoint of the admitted subset is trivially safe. The
-      // override lives on a CHILD session (shared SparkContext, private
-      // SQLConf — the bloomJoinPlan pattern), so the session-global width
+      // override lives on a CHILD session, one per width
+      // ([[graft.Sessions.child]]), so the session-global width
       // never mutates and a query planned concurrently on `spark` cannot
       // be silently planned at width 1 (r16 advice).
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", stateWidth.toString)
-      gate(s).localCheckpoint()
+      gate(graft.Sessions.child(spark, "spark.sql.shuffle.partitions" -> stateWidth.toString))
+        .localCheckpoint()
     }
   }
 

@@ -105,6 +105,11 @@ class BenchCountsSpec extends SparkTestBase {
         assert(stages.map(_.shuffleWriteRecords).sum == writeRecords.get, key)
         assert(stages.map(_.shuffleWriteBytes).sum == call.shuffleBytes, key)
       }
+      // a call that plans new code counts its compiles: the literal makes
+      // the generated source unique to this run
+      val nonce = System.nanoTime()
+      val fresh = meter.firstCall((s, _) => s.range(10).toDF().where(s"id * ${nonce}L >= 0"), sf)
+      assert(fresh.failure.isEmpty && fresh.compiles > 0, fresh.compiles)
       // a failed call records no stages, as its counts are unknown
       val failed = meter.firstCall((s, _) => { s.range(10).count(); sys.error("boom") }, sf)
       assert(failed.failure.isDefined && failed.counts.isEmpty && failed.stages.isEmpty)
@@ -113,5 +118,17 @@ class BenchCountsSpec extends SparkTestBase {
       spark.sparkContext.removeSparkListener(tally)
       meter.close()
     }
+  }
+
+  test("a stage AQE submits from its pool thread is named by its SQL execution") {
+    val meter = new Bench.Meter(spark)
+    try {
+      val call = meter.firstCall(SparkEntry.queries("agg_heavy_hitters"), sf)
+      assert(call.counts.isDefined && call.stages.nonEmpty)
+      val names = call.stages.map(_.name)
+      assert(!names.exists(_.contains("withThreadLocalCaptured")), names)
+      // the action's call site: the meter's count() in firstCall
+      assert(names.exists(_.startsWith("count at Bench.scala")), names)
+    } finally meter.close()
   }
 }

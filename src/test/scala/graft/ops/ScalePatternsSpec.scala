@@ -116,6 +116,19 @@ class ScalePatternsSpec extends SparkTestBase {
     assert(nRows == expected)
   }
 
+  test("a second join_skew_aqe call compiles no generated code") {
+    // the child session, and with it its executor class loader, is reused,
+    // so the code cache that loader keys serves the second call
+    val meter = new graft.Bench.Meter(spark)
+    try {
+      val fn = graft.SparkEntry.queries("join_skew_aqe")
+      assert(meter.firstCall(fn, sf).failure.isEmpty)
+      val second = meter.firstCall(fn, sf)
+      assert(second.failure.isEmpty)
+      assert(second.compiles == 0, s"${second.compiles} classes compiled")
+    } finally meter.close()
+  }
+
   test("bucketed co-located join plans without a shuffle exchange") {
     val join = ScalePatterns.bucketedJoinPlan(spark, sf)
     val plan = join.queryExecution.executedPlan.toString
